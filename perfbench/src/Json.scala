@@ -1,0 +1,36 @@
+package perfbench
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+/** Minimal JSON rendering for flat result objects. */
+object Json {
+  def str(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
+  def value(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] => obj(m.toSeq.map { case (k, x) => k.toString -> x }.sortBy(_._1))
+    case xs: Iterable[_] => xs.map(value).mkString("[", ", ", "]")
+    case other => str(other.toString)
+  }
+
+  def obj(fields: Seq[(String, Any)]): String =
+    fields.map { case (k, v) => s"${str(k)}: ${value(v)}" }.mkString("{", ", ", "}")
+
+  def writeFile(path: String, text: String): Unit = {
+    val p = Paths.get(path)
+    Option(p.getParent).foreach(Files.createDirectories(_))
+    Files.write(p, text.getBytes(StandardCharsets.UTF_8))
+  }
+}
