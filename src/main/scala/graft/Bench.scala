@@ -281,10 +281,7 @@ object Bench {
       sfDir = sfDir,
       meta = BenchReport.Meta(startedUtc, elapsed, budgetSec, phase, nReq, nClips,
         earlyN, reps, pairsDone = times.count(!_.early) / 2,
-        // "+indexdir" marks runs exercising CodesCache's production parquet
-        // spill path (GRAFT_INDEX_DIR) instead of localCheckpoint blocks
-        protocol = "r5-compact" +
-          (if (sys.env.contains("GRAFT_INDEX_DIR")) "+indexdir" else "")),
+        protocol = BenchReport.protocol(indexDir = sys.env.contains("GRAFT_INDEX_DIR"))),
       committedSource =
         fullRun.map(_ => sys.env.getOrElse("GRAFT_BENCH_FULL_JSON", "BENCH_FULL.json")),
       committedJson = fullRun,
@@ -445,8 +442,8 @@ object Bench {
       // exception lands mid-phase (normal path frees it in the same
       // finally; the PID-stamped sweep covers SIGKILL/OOM)
       val earlyCleanup = new Thread(() => {
-        graft.tools.StageBench.deleteRec(new java.io.File(earlyDir).getParentFile)
-        earlyLocalRoot.foreach(d => graft.tools.StageBench.deleteRec(new java.io.File(d)))
+        graft.tools.Scratch.deleteRec(new java.io.File(earlyDir).getParentFile)
+        earlyLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
       })
       Runtime.getRuntime.addShutdownHook(earlyCleanup)
       try {
@@ -519,8 +516,8 @@ object Bench {
     // normal exit deletes scratch below; the hook covers SIGTERM/exceptions
     // (SIGKILL/OOM is covered by the next run's sweep via the PID stamp)
     sys.addShutdownHook {
-      graft.tools.StageBench.deleteRec(new java.io.File(inputDir).getParentFile)
-      legLocalRoot.foreach(d => graft.tools.StageBench.deleteRec(new java.io.File(d)))
+      graft.tools.Scratch.deleteRec(new java.io.File(inputDir).getParentFile)
+      legLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
     }
 
     // in-process fallback (no taskset / child spawn failure): warm this JVM
@@ -612,9 +609,9 @@ object Bench {
       if (bestCpu(level, early = false) >= 0.97 * before) futile += 1 else futile = 0
     }
 
-    graft.tools.StageBench.deleteRec(
+    graft.tools.Scratch.deleteRec(
       new java.io.File(inputDir).getParentFile) // ~25 KB/clip of temp input
-    legLocalRoot.foreach(d => graft.tools.StageBench.deleteRec(new java.io.File(d)))
+    legLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
 
     // final (non-partial) write + print
     phase = "done"

@@ -41,26 +41,13 @@ final case class GraftConf(
     // chain path — the asymptotic regime any fixed cap reaches at scale.
     bucketCap: Int = 16,
     chainWidth: Int = 2,
-    // absolute per-group buffer bound for the pair generator: members up to
-    // this count are buffered (sorted, deterministic chain); members BEYOND
-    // it are chain-paired in a bounded-memory streaming pass (arrival
-    // order) bridged to the buffered chain — connected, never dropped,
-    // flagged `capped`. See CandidatePairs for the determinism caveat.
+    // per-bucket buffer bound of the pair generator; members beyond it
+    // stream (arrival order). See CandidatePairs for the rules and caveat.
     bucketHardStop: Int = 4 * 1000 * 1000,
     // connected components
     maxCcIterations: Int = 50,
     // checkpointing
-    checkpointDir: Option[String] = None,
-    // Shuffle diet: band/candidate stages shuffle Long SURROGATE ids
-    // (xxhash64 of clip_id) instead of the id strings; strings are restored
-    // inside the verify join (which carries them anyway), so accepted edges
-    // and the CC loop keep native string labels (Components' collision-free
-    // labeling argument is untouched). Surrogate collisions only ever ADD
-    // candidate pairs, which exact verification rejects — except a 2^-64
-    // same-pair collision (a dup pair whose two members hash equal is
-    // dropped by the a<b predicate), the same accepted probability class as
-    // the CC fingerprint early-stop. See DedupPipeline.
-    surrogateIds: Boolean = false
+    checkpointDir: Option[String] = None
 ) {
   def textNumPerm: Int = textBands * textRows
   def audioNumPerm: Int = audioBands * audioRows

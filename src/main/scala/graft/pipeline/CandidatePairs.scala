@@ -2,151 +2,141 @@ package graft.pipeline
 
 import graft.conf.GraftConf
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.functions.lit
 
 import scala.collection.mutable.ArrayBuffer
-import scala.reflect.ClassTag
 
-/** Band shuffle → candidate pairs (reference operators B1/B2 + Q4).
+/** Bucket shuffle → candidate pairs (reference operators B1/B2 + Q4), the
+  * one pair generator behind both the band pass ([[fromBands]]) and the
+  * substring pass ([[SuffixDups]]).
   *
   * The reference materializes per-table hash buckets (CSR scatter,
   * `/root/reference/hashIndex/StdHashIndex.h:31-74`) and probes them per
   * query; for all-pairs dedup the bucket directory is never materialized —
-  * the `groupByKey(band_key)` shuffle IS the hash table, and each group
-  * emits its member pairs directly (SURVEY §2.4/§7.4). Band keys are
-  * family-salted upstream, so the group key is a single primitive Long;
-  * family provenance travels as the `src` bit ([[Signatures.SrcText]] etc.)
-  * and pairs aggregate it with `bit_or`.
+  * the `groupByKey(key)` shuffle IS the hash table, and each group emits
+  * its member pairs directly (SURVEY §2.4/§7.4). Members are
+  * (key, clip_id, src, probe) rows; a clip id repeated in one bucket counts
+  * once (probing if any of its rows probes) and is never paired with
+  * itself. Output is a RAW (a, b, sources, capped) stream with a < b, not
+  * deduplicated across buckets: the caller's final groupBy(a, b) is the
+  * single dedup shuffle for all candidate streams.
   *
-  * Ids are generic over the member-id type: the pipeline shuffles Long
-  * SURROGATE ids (xxhash64 of the clip_id — see [[DedupPipeline]]'s diet
-  * note) while standalone callers (HashBooster, PairStats, specs) keep
-  * native String ids; the pair semantics (sorted-distinct members, chain
-  * order) follow the id type's ordering either way.
+  * Bucket rules:
+  *  - A bucket of ≤ `bucketCap` distinct ids pairs each probe member with
+  *    every other member (`capped = false`). Band members all probe, so a
+  *    band bucket yields all C(n,2) pairs.
+  *  - A larger bucket — the skew the 10^12-scale corpus brings (a hot key
+  *    such as an empty-transcript signature would emit O(s²) pairs) —
+  *    emits the id-order chain (each member with its next `chainWidth`
+  *    neighbours), plus its first `cappedProbes` probe members against its
+  *    first `bucketCap` members, all flagged `capped`. The chain keeps a
+  *    bucket of true dups connected (dup relations inside it are
+  *    transitive through verification) in O(s) pairs; capped buckets are
+  *    flagged, never silently dropped.
+  *  - At most `bucketHardStop` members are buffered per task. Members
+  *    beyond it stream through a ring buffer of the last `chainWidth`
+  *    members, bridged to the sorted chain's tail, and probe members among
+  *    them still fan out while the `cappedProbes` budget lasts: O(width)
+  *    memory, nothing dropped, the bucket stays connected. Caveat: those
+  *    overflow pairs depend on shuffle arrival order, so buckets above
+  *    `bucketHardStop` (4M default — never reached by real band buckets,
+  *    which `bucketCap` already chains) are connected-but-nondeterministic
+  *    rather than truncated or an OOM.
   *
-  * Skew (the 10^12-scale hazard the single-node reference never faced): a
-  * bucket of size s emits O(s²) pairs; a hot key (e.g. empty-transcript
-  * signature) would explode. Buckets over `bucketCap` fall back to
-  * chain-pairing over id-sorted members (each member paired with its next
-  * `chainWidth` neighbors): O(s) pairs that keep the bucket connected, which
-  * preserves CLUSTER correctness for true duplicate groups (dup relations
-  * within a bucket of true dups are transitive through verification) while
-  * bounding blowup. Capped buckets are flagged (`capped`), never silently
-  * dropped, and surface in stage lineage.
-  *
-  * Memory bound: a single task must not buffer a pathological bucket's ids
-  * without limit, so at most `bucketHardStop` members are buffered (sorted,
-  * deterministic chain); members beyond that are chain-paired in a
-  * STREAMING pass — each overflow member pairs with the previous
-  * `chainWidth` members in arrival order, bridged to the tail of the sorted
-  * chain, O(chainWidth) memory. Nothing is dropped and the bucket stays
-  * connected; the trade, documented: overflow pairs depend on shuffle
-  * arrival order, so output for groups above `bucketHardStop` (4M default —
-  * never reached by real band buckets, which `bucketCap` already chains) is
-  * connected-but-nondeterministic rather than silently truncated.
+  * `sources` caveat (ACCEPTED EDGES are unaffected, verification is
+  * exact): it is the OR of the buffered members' `src` bits, applied to
+  * every pair of the bucket, and family-salted Long keys can collide across
+  * families (birthday-likely at 10^12 rows) — so a pair's bitmask may name
+  * a family that never produced that specific pair. Treat it as diagnostic
+  * lineage, not exact attribution.
   */
 object CandidatePairs {
 
-  /** bands: (band_key: Long, src: Int, clip_id: String | Long) →
-    * RAW pair stream (a, b, sources: Int bitmask, capped) with a < b; NOT
-    * deduplicated across buckets — the caller's final groupBy(a, b)
-    * (DedupPipeline's candidates stage) is the single dedup shuffle for all
-    * candidate streams. The id column's type picks the specialization.
-    *
-    * Provenance caveat (documented approximation — ACCEPTED EDGES are
-    * unaffected, verification is exact): `sources` is the OR of every
-    * member row's family bit in the bucket, applied to all its pairs, and
-    * family-salted Long keys can collide across families (birthday-likely
-    * at 10^12 rows) — so a pair's `sources` bitmask may include a family
-    * that never banded that specific pair. Treat it as diagnostic lineage,
-    * not exact attribution. */
+  /** bands (band_key: Long, src: Int, clip_id: String) → raw pair stream
+    * (a, b, sources, capped); every member probes. */
   def fromBands(spark: SparkSession, bands: DataFrame, conf: GraftConf): DataFrame = {
     import spark.implicits._
-    bands.schema("clip_id").dataType match {
-      case StringType =>
-        fromBandsTyped[String](bands.select($"band_key", $"src", $"clip_id")
-          .as[(Long, Int, String)], conf)
-      case LongType =>
-        fromBandsTyped[Long](bands.select($"band_key", $"src", $"clip_id")
-          .as[(Long, Int, Long)], conf)
-      case other => throw new IllegalArgumentException(s"clip_id type: $other")
-    }
+    bucketPairs(bands.select($"band_key", $"clip_id", $"src", lit(true))
+      .as[(Long, String, Int, Boolean)], conf, cappedProbes = 0)
   }
 
-  private def fromBandsTyped[T: Ordering: ClassTag](
-      bands: Dataset[(Long, Int, T)], conf: GraftConf)(
-      implicit keyEnc: org.apache.spark.sql.Encoder[Long],
-      pairEnc: org.apache.spark.sql.Encoder[(T, T, Int, Boolean)]): DataFrame = {
-    val ord = implicitly[Ordering[T]]
-    import ord.mkOrderingOps
+  private[pipeline] def bucketPairs(members: Dataset[(Long, String, Int, Boolean)],
+      conf: GraftConf, cappedProbes: Int): DataFrame = {
+    import members.sparkSession.implicits._
     val cap = conf.bucketCap
     val width = conf.chainWidth
     val hardStop = conf.bucketHardStop
-    bands
+    def cappedPair(x: String, y: String, src: Int) =
+      if (x < y) (x, y, src, true) else (y, x, src, true)
+    members
       .groupByKey(_._1)
-      .flatMapGroups { (_: Long, rows: Iterator[(Long, Int, T)]) =>
-        val ids = new ArrayBuffer[T]()
+      .flatMapGroups { (_: Long, rows: Iterator[(Long, String, Int, Boolean)]) =>
+        val buf = new ArrayBuffer[(String, Boolean)]()
         var src = 0
-        while (rows.hasNext && ids.length < hardStop) {
+        while (rows.hasNext && buf.length < hardStop) {
           val r = rows.next()
-          ids += r._3
-          src |= r._2
+          buf += ((r._2, r._4))
+          src |= r._3
         }
-        if (ids.length < 2) Iterator.empty // hardStop ≥ 2 ⇒ group exhausted
-        else {
-          val sorted = ids.distinct.sorted
-          val head: Iterator[(T, T, Int, Boolean)] =
-            if (sorted.length < 2) Iterator.empty
-            else if (sorted.length <= cap) {
-              for {
-                i <- sorted.indices.iterator
-                j <- (i + 1) until sorted.length
-              } yield (sorted(i), sorted(j), src, false)
-            } else {
-              for {
-                i <- sorted.indices.iterator
-                d <- (1 to width).iterator
-                if i + d < sorted.length
-              } yield (sorted(i), sorted(i + d), src, true)
-            }
-          val tail: Iterator[(T, T, Int, Boolean)] =
-            if (!rows.hasNext) Iterator.empty
-            else {
-              // streaming overflow chain (see class doc): ring buffer of the
-              // last `width` members, seeded from the sorted chain's tail so
-              // overflow members stay connected to the buffered component.
-              // Overflow pairs carry the FROZEN buffered-prefix src — not a
-              // running accumulation, which would make a pair's `sources`
-              // depend on where in the arrival order it was emitted and
-              // diverge from the head pairs' view of the same bucket. The
-              // per-pair mask stays diagnostic either way (class doc);
-              // freezing just removes one gratuitous nondeterminism axis.
-              val overflowSrc = src
-              val window = new Array[T](width)
-              var filled = 0
-              var pos = 0
-              def push(x: T): Unit = {
-                window(pos) = x
-                pos = (pos + 1) % width
-                if (filled < width) filled += 1
-              }
-              sorted.takeRight(width).foreach(push)
-              rows.flatMap { r =>
-                val x = r._3
-                val out = new ArrayBuffer[(T, T, Int, Boolean)](filled)
-                var k = 0
-                while (k < filled) {
-                  val w = window(k)
-                  if (w != x)
-                    out += (if (x < w) (x, w, overflowSrc, true) else (w, x, overflowSrc, true))
-                  k += 1
-                }
-                push(x)
-                out.iterator
-              }
-            }
-          head ++ tail
+        val ids = new ArrayBuffer[String](buf.length)
+        val probe = new ArrayBuffer[Boolean](buf.length)
+        buf.sortInPlaceBy(_._1).foreach { case (id, p) =>
+          if (ids.nonEmpty && ids.last == id) probe(probe.length - 1) |= p
+          else { ids += id; probe += p }
         }
+        val n = ids.length
+        val overflowing = rows.hasNext
+        val head: Iterator[(String, String, Int, Boolean)] =
+          if (n <= cap && !overflowing)
+            for {
+              i <- Iterator.range(0, n)
+              j <- Iterator.range(i + 1, n) if probe(i) || probe(j)
+            } yield (ids(i), ids(j), src, false)
+          else {
+            val chain = for {
+              i <- Iterator.range(0, n)
+              j <- Iterator.range(i + 1, math.min(i + width, n - 1) + 1)
+            } yield (ids(i), ids(j), src, true)
+            val fan = for {
+              i <- Iterator.range(0, n).filter(probe).take(cappedProbes)
+              j <- Iterator.range(0, math.min(cap, n)) if j != i
+            } yield cappedPair(ids(i), ids(j), src)
+            chain ++ fan
+          }
+        val tail: Iterator[(String, String, Int, Boolean)] =
+          if (!overflowing) Iterator.empty
+          else {
+            // streaming overflow (class doc). Pairs carry the FROZEN
+            // buffered-prefix src, so a pair's `sources` cannot depend on
+            // where in the arrival order it was emitted.
+            var probesLeft = cappedProbes - math.min(cappedProbes, probe.count(identity))
+            val targets = ids.take(cap)
+            val window = new Array[String](width)
+            var filled = 0
+            var pos = 0
+            def push(x: String): Unit = {
+              window(pos) = x
+              pos = (pos + 1) % width
+              if (filled < width) filled += 1
+            }
+            ids.takeRight(width).foreach(push)
+            rows.flatMap { r =>
+              val x = r._2
+              val out = new ArrayBuffer[(String, String, Int, Boolean)](filled)
+              var k = 0
+              while (k < filled) {
+                if (window(k) != x) out += cappedPair(x, window(k), src)
+                k += 1
+              }
+              if (r._4 && probesLeft > 0) {
+                probesLeft -= 1
+                targets.foreach(t => if (t != x) out += cappedPair(x, t, src))
+              }
+              push(x)
+              out.iterator
+            }
+          }
+        head ++ tail
       }
       .toDF("a", "b", "sources", "capped")
   }

@@ -49,8 +49,8 @@ import org.apache.spark.storage.StorageLevel
   *    join costs more than it saves; it is restored afterwards.
   *
   * Labels are the `clip_id` strings themselves (min = lexicographic), which
-  * avoids 64-bit surrogate-id birthday collisions at 10^12 rows and keeps
-  * resume byte-identical.
+  * avoids the birthday collisions of 64-bit hashed labels at 10^12 rows
+  * and keeps resume byte-identical.
   */
 object Components {
 

@@ -51,24 +51,11 @@ object DedupPipeline {
       Signatures.compute(spark, clips, conf).toDF()
     })
 
-    // Shuffle diet (conf.surrogateIds): the band explode and both candidate
-    // generators — the pipeline's widest shuffles, whose rows are otherwise
-    // mostly id-string bytes — carry xxhash64(clip_id) Longs instead; the
-    // verify join restores the strings for free (its signature side ships
-    // them anyway), so accepted edges and the CC loop keep native string
-    // labels and Components' collision-freedom argument is untouched. A
-    // surrogate collision only ever ADDS candidate pairs (extra join
-    // matches), which exact verification rejects; the one losing case — a
-    // genuine dup pair whose two members hash EQUAL, dropped by a<b — is
-    // 2^-64 per pair, the probability class already accepted for the CC
-    // fingerprint early-stop (GraftConf.surrogateIds doc).
-    val idCol = if (conf.surrogateIds) xxhash64($"clip_id") else $"clip_id"
-
     val bands = stage("bands") {
       // keys are family-salted in the kernel, so one explode covers all
       // band families (text/audio/simhash); src carries provenance bits
       signatures
-        .select(idCol.as("clip_id"), explode(arrays_zip($"band_keys", $"band_srcs")).as("z"))
+        .select($"clip_id", explode(arrays_zip($"band_keys", $"band_srcs")).as("z"))
         .select($"z.band_keys".as("band_key"), $"z.band_srcs".as("src"), $"clip_id")
     }
 
@@ -78,7 +65,7 @@ object DedupPipeline {
       // signature stage
       CandidatePairs.fromBands(spark, bands, conf)
         .union(SuffixDups.candidatesFromTokenHashes(
-          spark, signatures.select(idCol.as("clip_id"), $"toks_h"), conf))
+          spark, signatures.select($"clip_id", $"toks_h"), conf))
         .groupBy($"a", $"b")
         .agg(expr("bit_or(sources)").as("sources"), max($"capped").as("capped"))
     }

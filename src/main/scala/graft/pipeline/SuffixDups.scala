@@ -2,11 +2,7 @@ package graft.pipeline
 
 import graft.conf.GraftConf
 import graft.kernel.Hashing
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
-
-import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Exact-substring duplicate pass: finds pairs (a, b) where a's full token
   * sequence appears verbatim inside b's — duplicates MinHash misses because
@@ -15,15 +11,17 @@ import scala.reflect.ClassTag
   * Seed-and-extend design (the scalable reading of SURVEY §7.5): every
   * document emits a hash for each of its W-token windows (O(total tokens)
   * rows — the suffix-array analogue of indexing every suffix, truncated to
-  * W-token prefixes); the FIRST window doubles as the document's probe seed
-  * (`is_seed`), so one pass over the corpus produces both sides of the
-  * seed↔window equi-join. Candidates then get exact containment
-  * verification in [[VerifyPairs]] (operator-Q7 style). Window rows are
-  * distinct per (hash, doc) so a repeated phrase costs one row; hot-phrase
-  * buckets fall back to the same chain-pair capping as the band shuffle,
-  * with the same `bucketHardStop` memory bound: at most hardStop members
-  * are buffered per group, the rest stream through an O(chainWidth) ring
-  * buffer (connected, flagged `capped`, never dropped — and never an OOM).
+  * W-token prefixes), distinct per (hash, doc) so a repeated phrase costs
+  * one row. The FIRST window doubles as the document's probe seed, so one
+  * pass over the corpus produces both sides of the seed↔window join: the
+  * windows are buckets of [[CandidatePairs.bucketPairs]] with the seeds as
+  * probe members. A hot-phrase bucket over `bucketCap` keeps the chain and
+  * fans out at most [[SeedProbeLimit]] seeds against its first `bucketCap`
+  * id-sorted members — docs sharing one boilerplate window are mostly NOT
+  * mutual dups, so chain edges alone would lose a container far away in id
+  * order; a container beyond the first `bucketCap` members of a capped
+  * bucket is still missed (documented recall limit, flagged `capped`).
+  * Candidates get exact containment verification in [[VerifyPairs]].
   *
   * Documents shorter than W tokens are out of scope of this pass (exact
   * equality and MinHash cover them); documented limitation.
@@ -57,35 +55,13 @@ object SuffixDups {
 
   /** Same candidate stream, fed with precomputed ordered token hashes
     * (clip_id, toks_h) — identical windows/pairs because the window hash
-    * folds exactly these per-token hashes. Generic over the id type like
-    * [[CandidatePairs.fromBands]]: the pipeline passes Long surrogate ids,
-    * standalone callers native Strings. */
+    * folds exactly these per-token hashes. */
   def candidatesFromTokenHashes(spark: SparkSession, tokens: DataFrame,
       conf: GraftConf): DataFrame = {
     import spark.implicits._
-    tokens.schema("clip_id").dataType match {
-      case StringType =>
-        candidatesTyped[String](spark,
-          tokens.select($"clip_id", $"toks_h").as[(String, Array[Long])], conf)
-      case LongType =>
-        candidatesTyped[Long](spark,
-          tokens.select($"clip_id", $"toks_h").as[(Long, Array[Long])], conf)
-      case other => throw new IllegalArgumentException(s"clip_id type: $other")
-    }
-  }
-
-  private def candidatesTyped[T: Ordering: ClassTag](spark: SparkSession,
-      tokens: Dataset[(T, Array[Long])], conf: GraftConf)(
-      implicit keyEnc: org.apache.spark.sql.Encoder[Long],
-      tagEnc: org.apache.spark.sql.Encoder[(Long, T, Boolean)],
-      pairEnc: org.apache.spark.sql.Encoder[(T, T, Boolean)]): DataFrame = {
-    val ord = implicitly[Ordering[T]]
-    import ord.mkOrderingOps
     val w = conf.substringWindow
     val seed = conf.seed
-
-    // one pass: every W-token window (distinct per doc), first window flagged
-    val tagged = tokens
+    val windows = tokens.select($"clip_id", $"toks_h").as[(String, Array[Long])]
       .flatMap { case (id, toksH) =>
         if (toksH == null || toksH.length < w) Iterator.empty
         else {
@@ -100,120 +76,11 @@ object SuffixDups {
             if (prev == null || (!prev && isSeed)) seen.put(h, isSeed)
             i += 1
           }
-          val out = Vector.newBuilder[(Long, T, Boolean)]
-          seen.forEach((h, s) => out += ((h.longValue, id, s.booleanValue)))
+          val out = Vector.newBuilder[(Long, String, Int, Boolean)]
+          seen.forEach((h, s) => out += ((h.longValue, id, Signatures.SrcSubstring, s.booleanValue)))
           out.result().iterator
         }
       }
-
-    // Hot-phrase skew: a window hash shared by s documents would fan out
-    // O(s·seeds) join rows. Same policy as CandidatePairs: small groups emit
-    // seed×member pairs exactly; oversized groups keep chain pairs over
-    // id-sorted members for true-dup-run connectivity AND still probe the
-    // seed-flagged members (docs sharing one boilerplate window are mostly
-    // NOT mutual dups, so chain edges alone fail verification and a real
-    // container > chainWidth away in id order would be silently lost).
-    // Bounds, documented recall limit: at most SeedProbeLimit seeds fan
-    // out, each against the first `cap` id-sorted members — a container
-    // beyond that in a >cap group is still missed, flagged via `capped`.
-    //
-    // Memory bound (same contract as CandidatePairs, which fixed exactly
-    // this hole first): a task buffers at most `bucketHardStop` group
-    // members (sorted, deterministic). Members BEYOND the buffer — a
-    // boilerplate window shared by millions of docs at 10^12 rows —
-    // are chain-paired in a STREAMING pass over a ring buffer of the last
-    // `chainWidth` members, bridged to the sorted chain's tail: O(width)
-    // memory, nothing dropped, the group stays connected. Overflow seeds
-    // still probe the buffered id-sorted prefix while the global
-    // SeedProbeLimit budget lasts. Trade, documented: overflow pairs
-    // depend on shuffle arrival order, so groups above `bucketHardStop`
-    // are connected-but-nondeterministic rather than OOM or silent drop.
-    val cap = conf.bucketCap
-    val width = conf.chainWidth
-    val hardStop = conf.bucketHardStop
-    val pairs = tagged
-      .groupByKey(_._1)
-      .flatMapGroups { (_: Long, rows: Iterator[(Long, T, Boolean)]) =>
-        val buf = new scala.collection.mutable.ArrayBuffer[(T, Boolean)]()
-        while (rows.hasNext && buf.length < hardStop) {
-          val r = rows.next()
-          buf += ((r._2, r._3))
-        }
-        val members = buf.toArray.distinct.sortBy(_._1)
-        val overflowing = rows.hasNext
-        if (members.length < 2 && !overflowing) Iterator.empty
-        else {
-          var seedBudget = SeedProbeLimit
-          val head: Iterator[(T, T, Boolean)] =
-            if (members.length < 2) Iterator.empty
-            else if (members.length <= cap && !overflowing) {
-              for {
-                (a, isSeed) <- members.iterator if isSeed
-                (b, _) <- members.iterator if a != b
-              } yield (if (a < b) (a, b, false) else (b, a, false))
-            } else {
-              val chain = for {
-                i <- members.indices.iterator
-                d <- (1 to width).iterator
-                if i + d < members.length
-              } yield (members(i)._1, members(i + d)._1, true)
-              val probes = for {
-                (a, _) <- members.iterator.filter(_._2).take(SeedProbeLimit)
-                (b, _) <- members.iterator.take(cap)
-                if a != b
-              } yield {
-                (if (a < b) (a, b, true) else (b, a, true))
-              }
-              // consume the seed budget for the head's probing seeds so the
-              // overflow pass honors the same global per-group bound
-              seedBudget -= math.min(SeedProbeLimit, members.count(_._2))
-              chain ++ probes
-            }
-          val tail: Iterator[(T, T, Boolean)] =
-            if (!overflowing) Iterator.empty
-            else {
-              val probeTargets = members.iterator.take(cap).map(_._1).toArray
-              val window = new Array[T](width)
-              var filled = 0
-              var pos = 0
-              def push(x: T): Unit = {
-                window(pos) = x
-                pos = (pos + 1) % width
-                if (filled < width) filled += 1
-              }
-              members.takeRight(width).foreach(m => push(m._1))
-              rows.flatMap { r =>
-                val x = r._2
-                val isSeed = r._3
-                val out = new scala.collection.mutable.ArrayBuffer[(T, T, Boolean)](filled)
-                var k = 0
-                while (k < filled) {
-                  val wv = window(k)
-                  if (wv != x)
-                    out += (if (x < wv) (x, wv, true) else (wv, x, true))
-                  k += 1
-                }
-                if (isSeed && seedBudget > 0) {
-                  seedBudget -= 1
-                  var p = 0
-                  while (p < probeTargets.length) {
-                    val b = probeTargets(p)
-                    if (b != x) out += (if (x < b) (x, b, true) else (b, x, true))
-                    p += 1
-                  }
-                }
-                push(x)
-                out.iterator
-              }
-            }
-          head ++ tail
-        }
-      }
-
-    // raw pair stream: the caller's final groupBy(a, b) dedups across all
-    // candidate streams in one shuffle
-    pairs.toDF("a", "b", "capped")
-      .withColumn("sources", lit(Signatures.SrcSubstring))
-      .select(col("a"), col("b"), col("sources"), col("capped"))
+    CandidatePairs.bucketPairs(windows, conf, cappedProbes = SeedProbeLimit)
   }
 }

@@ -56,37 +56,13 @@ object VerifyPairs {
     // previous Dataset.map decoded 4 Array[Long]s per PAIR to JVM arrays
     // and re-encoded the result, the highest-volume copy in the pipeline).
     import graft.functions.ArraySetExprs.{containsSubseq, jaccardSorted}
-    // Surrogate-id pairs (Long a/b — the shuffle diet, DedupPipeline):
-    // the same signature join that ships the shingle arrays also restores
-    // the id strings, so everything downstream of this phase is in string
-    // ids. Restoration re-canonicalizes the pair with least/greatest —
-    // surrogate order and lexicographic order can disagree; the metric
-    // columns are direction-symmetric (jaccard; substring checks both
-    // directions), so only (a, b) needs the swap.
-    val sidMode = pairs.schema("a").dataType ==
-      org.apache.spark.sql.types.LongType
-    val textPhase = {
-      if (!sidMode) {
-        val textSide = signatures.select($"clip_id", $"text_sh", $"toks_h")
-        pairs
-          .join(textSide.select($"clip_id".as("a"), $"text_sh".as("tsh_a"), $"toks_h".as("th_a")), Seq("a"))
-          .join(textSide.select($"clip_id".as("b"), $"text_sh".as("tsh_b"), $"toks_h".as("th_b")), Seq("b"))
-          .select($"a", $"b",
-            jaccardSorted($"tsh_a", $"tsh_b").as("text_jaccard"),
-            (containsSubseq($"th_a", $"th_b") || containsSubseq($"th_b", $"th_a")).as("substring"))
-      } else {
-        val textSide = signatures.select(xxhash64($"clip_id").as("sid"),
-          $"clip_id", $"text_sh", $"toks_h")
-        pairs
-          .join(textSide.select($"sid".as("a"), $"clip_id".as("ida"),
-            $"text_sh".as("tsh_a"), $"toks_h".as("th_a")), Seq("a"))
-          .join(textSide.select($"sid".as("b"), $"clip_id".as("idb"),
-            $"text_sh".as("tsh_b"), $"toks_h".as("th_b")), Seq("b"))
-          .select(least($"ida", $"idb").as("a"), greatest($"ida", $"idb").as("b"),
-            jaccardSorted($"tsh_a", $"tsh_b").as("text_jaccard"),
-            (containsSubseq($"th_a", $"th_b") || containsSubseq($"th_b", $"th_a")).as("substring"))
-      }
-    }
+    val textSide = signatures.select($"clip_id", $"text_sh", $"toks_h")
+    val textPhase = pairs
+      .join(textSide.select($"clip_id".as("a"), $"text_sh".as("tsh_a"), $"toks_h".as("th_a")), Seq("a"))
+      .join(textSide.select($"clip_id".as("b"), $"text_sh".as("tsh_b"), $"toks_h".as("th_b")), Seq("b"))
+      .select($"a", $"b",
+        jaccardSorted($"tsh_a", $"tsh_b").as("text_jaccard"),
+        (containsSubseq($"th_a", $"th_b") || containsSubseq($"th_b", $"th_a")).as("substring"))
       .withColumn("text_accepted",
         $"text_jaccard" >= c.textJaccardThreshold || $"substring")
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -66,8 +66,7 @@ object BenchLeg {
   def pipelineSecs(spark: SparkSession, inputDir: String): Double = {
     val clips = spark.read.parquet(inputDir)
     val t0 = System.nanoTime()
-    val res = DedupPipeline.run(spark, clips, GraftConf(
-      surrogateIds = sys.env.get("GRAFT_SURROGATE_IDS").contains("1")))
+    val res = DedupPipeline.run(spark, clips, GraftConf())
     res.clusters.count()
     val t = (System.nanoTime() - t0) / 1e9
     res.cleanup()

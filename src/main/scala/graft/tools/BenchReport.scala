@@ -41,6 +41,12 @@ object BenchReport {
       phase: String, clipsRequested: Int, clipsUsed: Int, earlyPairClips: Int,
       repsRequested: Int, pairsDone: Int, protocol: String)
 
+  /** The `meta.protocol` tag. "+indexdir" marks runs exercising
+    * CodesCache's production parquet spill path (GRAFT_INDEX_DIR) instead
+    * of localCheckpoint blocks. */
+  def protocol(indexDir: Boolean): String =
+    "r5-compact" + (if (indexDir) "+indexdir" else "")
+
   final case class State(
       queries: Seq[(String, Double)],
       errors: Seq[(String, String)],

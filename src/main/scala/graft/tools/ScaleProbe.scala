@@ -87,6 +87,6 @@ object ScaleProbe {
       println(f"[probe] cores=$cores%2d wall=$wall%7.2fs cpu=$cpu%8.2fs gc=$gc%6.2fs clips/sec=${n / wall}%8.1f")
       s.stop()
     }
-    StageBench.deleteRec(base.toFile)
+    Scratch.deleteRec(base.toFile)
   }
 }

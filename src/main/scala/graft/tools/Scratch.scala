@@ -42,9 +42,16 @@ object Scratch {
       .filter(d => d.isDirectory && prefixes.exists(d.getName.startsWith) && !ownerAlive(d))
     stale.foreach { d =>
       System.err.println(s"[scratch] sweeping stale $d (owner dead)")
-      StageBench.deleteRec(d)
+      deleteRec(d)
     }
     stale.length
+  }
+
+  /** Delete `f` and, if it is a directory, everything under it. */
+  def deleteRec(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
+    f.delete()
+    ()
   }
 
   /** Sweep the roots a bench run can scatter scratch into. */

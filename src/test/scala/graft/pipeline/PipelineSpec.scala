@@ -237,23 +237,54 @@ class PipelineSpec extends AnyFunSuite {
     assert(r3.stages.forall(!_.resumed))
   }
 
-  test("surrogate-id shuffle diet reproduces identical edges and clusters") {
-    // Long xxhash64 surrogates ride the band/candidate shuffles; strings
-    // are restored in the verify join — accepted edge set and clusters
-    // must be IDENTICAL to the string-id path (collisions could only add
-    // verify-rejected candidates, and none exist at this scale)
-    val base = DedupPipeline.run(spark, clipsDf, conf)
-    val diet = DedupPipeline.run(spark, clipsDf, conf.copy(surrogateIds = true))
-    def edgeSet(r: DedupPipeline.Result): Set[(String, String)] =
-      r.edges.filter(col("accepted")).select("a", "b")
-        .as[(String, String)].collect().toSet
-    def clusterMap(r: DedupPipeline.Result): Map[String, String] =
-      r.clusters.as[(String, String)].collect().toMap
-    val (be, de) = (edgeSet(base), edgeSet(diet))
-    assert(de === be)
-    // restored pairs stay canonically ordered on the STRING ids
-    de.foreach { case (a, b) => assert(a < b, s"($a,$b)") }
-    assert(clusterMap(diet) === clusterMap(base))
-    base.cleanup(); diet.cleanup()
+  // Exact output of the shared bucket-pair generator (CandidatePairs class
+  // doc), pinned row for row on the raw stream of each caller.
+  private def bandRows(c: GraftConf, members: Seq[(String, Int)]) =
+    CandidatePairs.fromBands(spark, members.map { case (id, src) => (5L, src, id) }
+      .toDF("band_key", "src", "clip_id"), c)
+      .as[(String, String, Int, Boolean)].collect().sorted.toSeq
+
+  test("band bucket of exactly bucketCap members: all C(n,2) pairs, exact, sources OR-ed") {
+    val c = conf.copy(bucketCap = 4, chainWidth = 2)
+    val rows = bandRows(c, Seq("m3" -> 2, "m0" -> 1, "m2" -> 1, "m1" -> 2))
+    val ids = Seq("m0", "m1", "m2", "m3")
+    val all = for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j), 3, false)
+    assert(rows === all)
+  }
+
+  test("band bucket of bucketCap + 1 members: exactly the id-order chain, capped, no probe fan") {
+    val c = conf.copy(bucketCap = 4, chainWidth = 2)
+    val rows = bandRows(c, Seq("m4", "m1", "m3", "m0", "m2").map(_ -> 1))
+    val chain = Seq(("m0", "m1"), ("m0", "m2"), ("m1", "m2"), ("m1", "m3"),
+      ("m2", "m3"), ("m2", "m4"), ("m3", "m4")).map { case (a, b) => (a, b, 1, true) }
+    assert(rows === chain)
+  }
+
+  test("substring group within bucketCap: each seed×member pair exactly once") {
+    // s1/s2's whole text is the shared window, so it is their seed; m1/m2
+    // carry it after a prefix, so it is a plain member of theirs
+    val common = (1 to conf.substringWindow).map(i => s"c$i").mkString(" ")
+    val clips = Seq("s1" -> common, "s2" -> common, "m1" -> s"x1 $common",
+      "m2" -> s"y1 y2 $common").toDF("clip_id", "transcript")
+    val rows = SuffixDups.candidates(spark, clips, conf)
+      .as[(String, String, Int, Boolean)].collect().sorted.toSeq
+    val expected = Seq(("m1", "s1"), ("m1", "s2"), ("m2", "s1"), ("m2", "s2"), ("s1", "s2"))
+      .map { case (a, b) => (a, b, Signatures.SrcSubstring, false) }
+    assert(rows === expected)
+  }
+
+  test("a clip id repeated inside one bucket is never paired with itself") {
+    val small = bandRows(conf, Seq("x" -> 1, "y" -> 1, "x" -> 2))
+    assert(small === Seq(("x", "y", 3, false)))
+    val c = conf.copy(bucketCap = 2, chainWidth = 2)
+    val capped = bandRows(c, Seq("x", "y", "x", "z", "y", "w").map(_ -> 1))
+    assert(capped.map(r => (r._1, r._2)) ===
+      Seq(("w", "x"), ("w", "y"), ("x", "y"), ("x", "z"), ("y", "z")))
+    val common = (1 to conf.substringWindow).map(i => s"c$i").mkString(" ")
+    val clips = Seq("d1" -> common, "d1" -> s"$common tail", "d2" -> s"x $common")
+      .toDF("clip_id", "transcript")
+    val sub = SuffixDups.candidates(spark, clips, c).select("a", "b")
+      .as[(String, String)].collect().toSeq
+    assert(sub === Seq(("d1", "d2")))
   }
 }

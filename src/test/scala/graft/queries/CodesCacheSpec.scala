@@ -48,7 +48,7 @@ class CodesCacheSpec extends AnyFunSuite {
         s"spill view must read parquet, plan was:\n$plan")
     } finally {
       System.clearProperty("graft.index.dir")
-      graft.tools.StageBench.deleteRec(new java.io.File(root))
+      graft.tools.Scratch.deleteRec(new java.io.File(root))
     }
   }
 

@@ -72,6 +72,13 @@ class BenchReportSpec extends AnyFunSuite {
     assert(sm.get("n_clips").asInt() == 800000)
   }
 
+  test("a run without GRAFT_INDEX_DIR renders protocol r5-compact") {
+    val st = maxState()
+    val plain = st.copy(meta = st.meta.copy(protocol = BenchReport.protocol(indexDir = false)))
+    assert(parse(BenchReport.renderCompact(plain)).get("meta").get("protocol").asText() == "r5-compact")
+    assert(BenchReport.protocol(indexDir = true) == "r5-compact+indexdir")
+  }
+
   test("compact line fits with the error map populated") {
     val errs = (1 to 13).map(i => s"q_some_failing_query_$i" ->
       ("org.apache.spark.SparkException: Job aborted due to stage failure: " + "x" * 140))

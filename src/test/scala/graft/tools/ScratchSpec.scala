@@ -38,7 +38,7 @@ class ScratchSpec extends AnyFunSuite {
       assert(!stage.exists())
       assert(foreign.isDirectory)
       assert(manual.isDirectory)
-    } finally StageBench.deleteRec(root)
+    } finally Scratch.deleteRec(root)
   }
 
   test("claim writes this process's pid") {
@@ -48,7 +48,7 @@ class ScratchSpec extends AnyFunSuite {
       Scratch.claim(d)
       val pid = Files.readString(new File(d, "owner.pid").toPath).trim.toLong
       assert(pid === ProcessHandle.current().pid())
-    } finally StageBench.deleteRec(root)
+    } finally Scratch.deleteRec(root)
   }
 
   test("a garbage pid file counts as stale") {
@@ -58,6 +58,6 @@ class ScratchSpec extends AnyFunSuite {
       Files.writeString(new File(d, "owner.pid").toPath, "not-a-pid")
       assert(Scratch.sweepStale(root) === 1)
       assert(!d.exists())
-    } finally StageBench.deleteRec(root)
+    } finally Scratch.deleteRec(root)
   }
 }
