@@ -44,7 +44,7 @@ final case class GraftConf(
     // per-bucket buffer bound of the pair generator; members beyond it
     // stream (arrival order). See CandidatePairs for the rules and caveat.
     bucketHardStop: Int = 4 * 1000 * 1000,
-    // connected components
+    // connected components: loop-round bound; reaching it throws
     maxCcIterations: Int = 50,
     // checkpointing
     checkpointDir: Option[String] = None
@@ -55,5 +55,6 @@ final case class GraftConf(
   require(bucketHardStop > bucketCap && bucketHardStop >= 2,
     "bucketHardStop must exceed bucketCap")
   require(chainWidth >= 1, "chainWidth must be positive")
+  require(maxCcIterations >= 1, "maxCcIterations must be >= 1: confirming a CC fixpoint takes one round")
   def simhashBandBits: Int = simhashBits / simhashBands
 }

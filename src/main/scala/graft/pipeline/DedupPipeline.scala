@@ -88,6 +88,11 @@ object DedupPipeline {
       Components.connectedComponents(spark, vertices, edges, conf.maxCcIterations,
         conf.checkpointDir)
     }
+    // the clusters stage is parquet now: CC's round checkpoints are garbage
+    conf.checkpointDir.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(Components.rddCheckpointDir(d))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
 
     val cleanup: () => Unit = () => {
       releaseVerify()
