@@ -32,26 +32,27 @@ import org.apache.spark.storage.StorageLevel
   *    2^-64 per round, the single-collision case being one of them) would
   *    terminate one round early; accepted and documented.
   *  - The symmetrized edges are CONTRACTED before the loop by
-  *    `ContractionPasses` = 2 per-partition union-find passes (after *BTS:
+  *    `ContractionPasses` = 3 per-partition union-find passes (after *BTS:
   *    Load-Balanced Distributed Union-Find*, ICDE 2024): hash-repartition
   *    on `src`, run [[localRoots]] over each partition's edges, emit
   *    `(v, root)` for every local non-root `v` with root = the min
   *    `clip_id` of `v`'s local component, symmetrize. Each output edge joins
   *    two vertices connected in the input and every input edge's endpoints
   *    share a root, so components and their min labels are unchanged. The
-  *    two shuffles are stages of the job that materializes the edge cache:
-  *    no extra jobs. The skew-capped generator's id-order chains (width 2,
+  *    shuffles are stages of the job that materializes the edge cache: no
+  *    extra jobs. The skew-capped generator's id-order chains (width 2,
   *    200-member ad and music-only clusters) need 7 loop rounds after
-  *    round 0 uncontracted, 5 after one hash pass, 2 after two; range
-  *    partitioning (3 rounds after one pass, 1 after three) is no faster
-  *    than two hash passes and costs a sampling job. The rows each pass
+  *    round 0 uncontracted, 5 after one hash pass, 2 after two and 1 after
+  *    three — one round is the minimum, it confirms the fixpoint, so a
+  *    fourth pass cannot save a round. Range partitioning (3 rounds after
+  *    one pass) costs a sampling job. The rows each pass
   *    emits follow row arrival order (vertex slots are assigned on first
   *    sight) and their set depends on the hash partitioning; the fixpoint,
   *    the per-component min, depends on neither. Union-find memory per
   *    task is the partition's distinct vertices (≤ 2 × its rows); a pass
-  *    emits at most one forest edge per input row, symmetrized, so pass 2
-  *    sees at most twice the loop's ≈50k rows per partition. In practice
-  *    the list shrinks: 19,550 → 14,218 rows on `dedup_skew_ckpt` seed 7.
+  *    emits at most one forest edge per input row, symmetrized, so it at
+  *    most doubles its input. In practice the list shrinks: 19,550 →
+  *    14,218 rows on `dedup_skew_ckpt` seed 7 after two passes.
   *  - One pointer-jump join per round (label ← label∘label) turns the
   *    chain-shaped components produced by the skew-capped pair generator
   *    into O(log d) rounds. The jump is applied LAZILY on top of the
@@ -62,6 +63,10 @@ import org.apache.spark.storage.StorageLevel
   *    persisted once, so the per-round message join reshuffles only the
   *    (much smaller) label side; the edge side is a cache scan every
   *    round.
+  *  - The exit joins the converged min-aggregation itself to the vertices,
+  *    not its jump: at the fixpoint every label is its component's min,
+  *    whose own label is itself, so the jump is the identity — and its lazy
+  *    self-join would cost a broadcast job and stages of its own.
   *  - Lineage truncation per round: reliable `checkpoint()` under
   *    `checkpointDir` (an executor loss mid-loop recovers from files —
   *    `localCheckpoint` blocks would die with the executor), else lazy
@@ -78,7 +83,7 @@ import org.apache.spark.storage.StorageLevel
 object Components {
 
   /** Union-find contraction passes before the label loop (class doc). */
-  val ContractionPasses = 2
+  val ContractionPasses = 3
 
   /** Where reliable-mode round checkpoints go under a pipeline's
     * `checkpointDir`; `DedupPipeline.run` deletes it once the clusters
@@ -228,6 +233,7 @@ object Components {
       rotateBlocks(before)
       var labels = jump(minned0)
 
+      var minned = minned0 // the latest round's min-aggregation
       val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
       var converged = false
       var iter = 0
@@ -250,6 +256,7 @@ object Components {
         val nfp = fingerprint(nextMin)
         rotateBlocks(before)
         labels = jump(nextMin)
+        minned = nextMin
         converged = nfp == fp
         fp = nfp
         iter += 1
@@ -266,8 +273,9 @@ object Components {
       // corpus-sized singleton join
       spark.conf.set("spark.sql.shuffle.partitions", shuffleWas)
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+      // minned, not jump(minned): identity at the fixpoint (class doc)
       val out = vertices.select($"clip_id")
-        .join(labels, Seq("clip_id"), "left")
+        .join(minned, Seq("clip_id"), "left")
         .select($"clip_id", coalesce($"label", $"clip_id").as("cluster_id"))
       und.unpersist(false)
       out

@@ -23,6 +23,12 @@ import org.apache.spark.storage.StorageLevel
   *     corpus most true pairs are text-accepted, so the heavy payload ships
   *     for a small residue.
   *
+  * The output is the union of two disjoint halves of the persisted text
+  * phase: the text-accepted pairs (`audio_jaccard` 0.0) and the residue,
+  * which carries its text columns through the two audio joins. No row
+  * joins back to the text phase on `(a, b)` — that join re-shuffled every
+  * pair, and its stages cost three Spark jobs per run.
+  *
   * The accept rule is unchanged (text ≥ θ_text OR audio ≥ θ_audio OR
   * substring — audio can only ADD accepts, so skipping it for already-
   * accepted pairs cannot change the edge set); `audio_jaccard` is reported
@@ -67,19 +73,20 @@ object VerifyPairs {
         $"text_jaccard" >= c.textJaccardThreshold || $"substring")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+    // disjoint halves, unioned (class doc)
     val audioSide = signatures.select($"clip_id", $"audio_sh")
-    val audioPhase = textPhase.filter(!$"text_accepted")
-      .select($"a", $"b")
+    val residue = textPhase.filter(!$"text_accepted")
       .join(audioSide.select($"clip_id".as("a"), $"audio_sh".as("ash_a")), Seq("a"))
       .join(audioSide.select($"clip_id".as("b"), $"audio_sh".as("ash_b")), Seq("b"))
-      .select($"a", $"b",
+      .select($"a", $"b", $"text_jaccard", $"substring", $"text_accepted",
         // decode-failed / silent clips have EMPTY shingle sets: report 0.0
         // (two empty sets are not "identical audio"), same rule as before
         when(size($"ash_a") === 0 || size($"ash_b") === 0, lit(0.0))
           .otherwise(jaccardSorted($"ash_a", $"ash_b")).as("audio_jaccard"))
+    val textAccepted = textPhase.filter($"text_accepted")
+      .select($"a", $"b", $"text_jaccard", $"substring", $"text_accepted", lit(0.0).as("audio_jaccard"))
 
-    val edges = textPhase
-      .join(audioPhase, Seq("a", "b"), "left")
+    val edges = textAccepted.union(residue)
       .select($"a", $"b", $"text_jaccard",
         coalesce($"audio_jaccard", lit(0.0)).as("audio_jaccard"),
         $"substring",

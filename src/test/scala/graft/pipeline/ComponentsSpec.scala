@@ -116,6 +116,18 @@ class ComponentsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](GraftConf(maxCcIterations = 0))
   }
 
+  test("three contraction passes leave one loop round on the capped generator's chain shape") {
+    // id-order chain of width 2 over 200 random ids (the ad and music-only
+    // clusters of the skew-capped generator): round 0 already reaches the
+    // per-component min, so one loop round confirms the fixpoint. Two
+    // passes need two rounds here (Components class doc).
+    for (seed <- 1 to 5) {
+      val ids = randomIds(new Random(seed), 200, mutable.HashSet.empty[String]).sorted
+      val g = Graph(ids, for (i <- ids.indices; k <- 1 to 2 if i + k < ids.size) yield (ids(i), ids(i + k)))
+      assert(cc(g, None, maxIterations = 1) === referenceLabels(g), s"seed $seed")
+    }
+  }
+
   test("round checkpoints follow each run's checkpointDir and are deleted after the run") {
     val df = ClipTableGen.table(spark, 120, 42L).toDF()
     val (d0, d1, d2) = (tempDir("graft-cc-run0"), tempDir("graft-cc-run1"), tempDir("graft-cc-run2"))
