@@ -41,9 +41,6 @@ final case class GraftConf(
     // chain path — the asymptotic regime any fixed cap reaches at scale.
     bucketCap: Int = 16,
     chainWidth: Int = 2,
-    // per-bucket buffer bound of the pair generator; members beyond it
-    // stream (arrival order). See CandidatePairs for the rules and caveat.
-    bucketHardStop: Int = 4 * 1000 * 1000,
     // connected components: loop-round bound; reaching it throws
     maxCcIterations: Int = 50,
     // checkpointing
@@ -52,8 +49,6 @@ final case class GraftConf(
   def textNumPerm: Int = textBands * textRows
   def audioNumPerm: Int = audioBands * audioRows
   require(simhashBits % simhashBands == 0, "simhash bands must divide bits")
-  require(bucketHardStop > bucketCap && bucketHardStop >= 2,
-    "bucketHardStop must exceed bucketCap")
   require(chainWidth >= 1, "chainWidth must be positive")
   require(maxCcIterations >= 1, "maxCcIterations must be >= 1: confirming a CC fixpoint takes one round")
   def simhashBandBits: Int = simhashBits / simhashBands

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * Both mirror kernels in [[graft.kernel.Shingles]] / the previous
   * `VerifyPairs` implementations bit-for-bit (specs assert equality):
   *  - [[JaccardSorted]]: exact Jaccard of two SORTED distinct-Long arrays
-  *    (both-empty → 1.0, one-empty → 0.0);
+  *    (either side empty → 0.0, as `Shingles.jaccardSorted`);
   *  - [[ContainsSubseq]]: whether `inner` occurs CONTIGUOUSLY in `outer`
   *    (empty inner never matches — a clip with no transcript is not
   *    "contained" in everything).
@@ -86,7 +86,6 @@ case class JaccardSorted(left: Expression, right: Expression)
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
     val m = y.numElements()
-    if (n == 0 && m == 0) return 1.0
     if (n == 0 || m == 0) return 0.0
     var i = 0; var j = 0; var inter = 0
     while (i < n && j < m) {
@@ -110,9 +109,7 @@ case class JaccardSorted(left: Expression, right: Expression)
       s"""
         |final int $n = $a.numElements();
         |final int $m = $b.numElements();
-        |if ($n == 0 && $m == 0) {
-        |  ${ev.value} = 1.0;
-        |} else if ($n == 0 || $m == 0) {
+        |if ($n == 0 || $m == 0) {
         |  ${ev.value} = 0.0;
         |} else {
         |  int $i = 0; int $j = 0; int $inter = 0;

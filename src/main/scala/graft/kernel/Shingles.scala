@@ -93,7 +93,8 @@ object Shingles {
     * reference operator Q7: exact re-check of hash candidates,
     * `/root/reference/hashIndex/HashCollection.h:263`). */
   def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
+    // either side empty scores 0.0: an empty transcript or a silent clip
+    // duplicates nothing
     if (a.isEmpty || b.isEmpty) return 0.0
     var i = 0; var j = 0; var inter = 0
     while (i < a.length && j < b.length) {

@@ -96,7 +96,7 @@ object RefOracle {
       lazy val aj = Shingles.jaccardSorted(audioSh(i), audioSh(j))
       lazy val sub = isTokenSubstring(texts(i), texts(j)) || isTokenSubstring(texts(j), texts(i))
       tj >= c.textJaccardThreshold ||
-        (audioSh(i).nonEmpty && audioSh(j).nonEmpty && aj >= c.audioJaccardThreshold) ||
+        aj >= c.audioJaccardThreshold ||
         sub
     }.toSet
 

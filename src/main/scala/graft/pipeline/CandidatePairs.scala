@@ -12,43 +12,45 @@ import scala.collection.mutable.ArrayBuffer
   *
   * The reference materializes per-table hash buckets (CSR scatter,
   * `/root/reference/hashIndex/StdHashIndex.h:31-74`) and probes them per
-  * query; for all-pairs dedup the bucket directory is never materialized —
-  * the `groupByKey(key)` shuffle IS the hash table, and each group emits
-  * its member pairs directly (SURVEY §2.4/§7.4). Members are
-  * (key, clip_id, src, probe) rows; a clip id repeated in one bucket counts
-  * once (probing if any of its rows probes) and is never paired with
-  * itself. Output is a RAW (a, b, sources, capped) stream with a < b, not
-  * deduplicated across buckets: the caller's final groupBy(a, b) is the
-  * single dedup shuffle for all candidate streams.
+  * query, scanning each bucket in order and truncating the scan at a
+  * retrieval budget (`StdHashIndex.h:159-183`). For all-pairs dedup the
+  * bucket directory is never materialized: a hash exchange on the key plus
+  * a sort on (key, clip_id) IS the hash table, and one pass over each
+  * sorted partition streams bucket after bucket, in id order, emitting the
+  * member pairs directly (SURVEY §2.4/§7.4). Members are
+  * (key, clip_id, src, probe) rows; adjacent rows of one clip id merge
+  * (their `src` bits and `probe` flags OR), so a repeated id counts once and
+  * is never paired with itself. Output is a RAW (a, b, sources, capped)
+  * stream with a < b (Scala `String` order), not deduplicated across
+  * buckets: the caller's final groupBy(a, b) is the single dedup shuffle
+  * for all candidate streams.
   *
   * Bucket rules:
   *  - A bucket of ≤ `bucketCap` distinct ids pairs each probe member with
-  *    every other member (`capped = false`). Band members all probe, so a
-  *    band bucket yields all C(n,2) pairs.
-  *  - A larger bucket — the skew the 10^12-scale corpus brings (a hot key
-  *    such as an empty-transcript signature would emit O(s²) pairs) —
-  *    emits the id-order chain (each member with its next `chainWidth`
-  *    neighbours), plus its first `cappedProbes` probe members against its
-  *    first `bucketCap` members, all flagged `capped`. The chain keeps a
-  *    bucket of true dups connected (dup relations inside it are
-  *    transitive through verification) in O(s) pairs; capped buckets are
-  *    flagged, never silently dropped.
-  *  - At most `bucketHardStop` members are buffered per task. Members
-  *    beyond it stream through a ring buffer of the last `chainWidth`
-  *    members, bridged to the sorted chain's tail, and probe members among
-  *    them still fan out while the `cappedProbes` budget lasts: O(width)
-  *    memory, nothing dropped, the bucket stays connected. Caveat: those
-  *    overflow pairs depend on shuffle arrival order, so buckets above
-  *    `bucketHardStop` (4M default — never reached by real band buckets,
-  *    which `bucketCap` already chains) are connected-but-nondeterministic
-  *    rather than truncated or an OOM.
+  *    every other member (`capped = false`), and `sources` is the OR of
+  *    the bucket's `src` bits. Band members all probe, so a band bucket
+  *    yields all C(n,2) pairs.
+  *  - A larger bucket — the skew the 10^12-scale corpus brings (an ad
+  *    aired 200 times puts 200 clips on each of its band keys, which would
+  *    emit O(s²) pairs) — emits the id-order chain (each member with its
+  *    previous `chainWidth` members), plus its first `cappedProbes` probe
+  *    members against its first `bucketCap` members, all flagged `capped`,
+  *    with `sources` the OR of its first `bucketCap + 1` members, fixed
+  *    before its first pair streams out. The chain keeps a bucket of true dups
+  *    connected (dup relations inside it are transitive through
+  *    verification) in O(s) pairs; capped buckets are flagged, never
+  *    silently dropped.
+  *
+  * A task holds at most `bucketCap + 1` members plus a ring of the last
+  * `chainWidth` ids, whatever the bucket size, and the output is a pure
+  * function of the member multiset. Id order is Spark's binary UTF-8
+  * order, which equals `String` order on ASCII ids.
   *
   * `sources` caveat (ACCEPTED EDGES are unaffected, verification is
-  * exact): it is the OR of the buffered members' `src` bits, applied to
-  * every pair of the bucket, and family-salted Long keys can collide across
-  * families (birthday-likely at 10^12 rows) — so a pair's bitmask may name
-  * a family that never produced that specific pair. Treat it as diagnostic
-  * lineage, not exact attribution.
+  * exact): it is applied to every pair of the bucket, and family-salted
+  * Long keys can collide across families (birthday-likely at 10^12 rows) —
+  * so a pair's bitmask may name a family that never produced that specific
+  * pair. Treat it as diagnostic lineage, not exact attribution.
   */
 object CandidatePairs {
 
@@ -65,79 +67,94 @@ object CandidatePairs {
     import members.sparkSession.implicits._
     val cap = conf.bucketCap
     val width = conf.chainWidth
-    val hardStop = conf.bucketHardStop
-    def cappedPair(x: String, y: String, src: Int) =
-      if (x < y) (x, y, src, true) else (y, x, src, true)
-    members
-      .groupByKey(_._1)
-      .flatMapGroups { (_: Long, rows: Iterator[(Long, String, Int, Boolean)]) =>
-        val buf = new ArrayBuffer[(String, Boolean)]()
-        var src = 0
-        while (rows.hasNext && buf.length < hardStop) {
-          val r = rows.next()
-          buf += ((r._2, r._4))
-          src |= r._3
-        }
-        val ids = new ArrayBuffer[String](buf.length)
-        val probe = new ArrayBuffer[Boolean](buf.length)
-        buf.sortInPlaceBy(_._1).foreach { case (id, p) =>
-          if (ids.nonEmpty && ids.last == id) probe(probe.length - 1) |= p
-          else { ids += id; probe += p }
-        }
-        val n = ids.length
-        val overflowing = rows.hasNext
-        val head: Iterator[(String, String, Int, Boolean)] =
-          if (n <= cap && !overflowing)
-            for {
-              i <- Iterator.range(0, n)
-              j <- Iterator.range(i + 1, n) if probe(i) || probe(j)
-            } yield (ids(i), ids(j), src, false)
-          else {
-            val chain = for {
-              i <- Iterator.range(0, n)
-              j <- Iterator.range(i + 1, math.min(i + width, n - 1) + 1)
-            } yield (ids(i), ids(j), src, true)
-            val fan = for {
-              i <- Iterator.range(0, n).filter(probe).take(cappedProbes)
-              j <- Iterator.range(0, math.min(cap, n)) if j != i
-            } yield cappedPair(ids(i), ids(j), src)
-            chain ++ fan
-          }
-        val tail: Iterator[(String, String, Int, Boolean)] =
-          if (!overflowing) Iterator.empty
-          else {
-            // streaming overflow (class doc). Pairs carry the FROZEN
-            // buffered-prefix src, so a pair's `sources` cannot depend on
-            // where in the arrival order it was emitted.
-            var probesLeft = cappedProbes - math.min(cappedProbes, probe.count(identity))
-            val targets = ids.take(cap)
-            val window = new Array[String](width)
-            var filled = 0
-            var pos = 0
-            def push(x: String): Unit = {
-              window(pos) = x
-              pos = (pos + 1) % width
-              if (filled < width) filled += 1
-            }
-            ids.takeRight(width).foreach(push)
-            rows.flatMap { r =>
-              val x = r._2
-              val out = new ArrayBuffer[(String, String, Int, Boolean)](filled)
-              var k = 0
-              while (k < filled) {
-                if (window(k) != x) out += cappedPair(x, window(k), src)
-                k += 1
-              }
-              if (r._4 && probesLeft > 0) {
-                probesLeft -= 1
-                targets.foreach(t => if (t != x) out += cappedPair(x, t, src))
-              }
-              push(x)
-              out.iterator
-            }
-          }
-        head ++ tail
-      }
+    members.toDF("key", "id", "src", "probe")
+      .repartition($"key")
+      .sortWithinPartitions($"key", $"id")
+      .as[(Long, String, Int, Boolean)]
+      .mapPartitions(rows => new BucketStream(rows, cap, width, cappedProbes).pairs)
       .toDF("a", "b", "sources", "capped")
+  }
+
+  /** The bucket rules (class doc) over one (key, id)-sorted partition. Each
+    * step fills `out` from one bucket of ≤ `cap` ids, from the first
+    * `cap + 1` ids of a larger one, or from one further id of it. */
+  private final class BucketStream(rows: Iterator[(Long, String, Int, Boolean)],
+      cap: Int, width: Int, cappedProbes: Int) {
+    private val in = rows.buffered
+    private val out = new ArrayBuffer[(String, String, Int, Boolean)]()
+    private var key = 0L
+    // the id readMember merged last
+    private var id: String = _
+    private var idSrc = 0
+    private var idProbe = false
+    // the bucket's first cap + 1 ids, and the state of its capped pass
+    private val head = new Array[String](cap + 1)
+    private val headProbe = new Array[Boolean](cap + 1)
+    private var src = 0
+    private var streaming = false
+    private var probesLeft = 0
+    private val ring = new Array[String](width)
+    private var ringAt = 0
+    private var filled = 0
+
+    def pairs: Iterator[(String, String, Int, Boolean)] =
+      Iterator.continually(step()).takeWhile(identity).flatMap(_ => out)
+
+    /** Merges the adjacent rows of the next id of bucket `key`; false at
+      * the bucket's end. */
+    private def readMember(): Boolean = in.hasNext && in.head._1 == key && {
+      val r = in.next()
+      id = r._2; idSrc = r._3; idProbe = r._4
+      while (in.hasNext && in.head._1 == key && in.head._2 == id) {
+        val d = in.next()
+        idSrc |= d._3; idProbe |= d._4
+      }
+      true
+    }
+
+    private def pair(x: String, y: String, capped: Boolean): Unit =
+      out += (if (x < y) (x, y, src, capped) else (y, x, src, capped))
+
+    /** One member of a capped bucket's pass; `self` is its index in `head`,
+      * -1 past it. */
+    private def cappedMember(x: String, probe: Boolean, self: Int): Unit = {
+      var k = 0
+      while (k < filled) { pair(ring(k), x, capped = true); k += 1 }
+      if (probe && probesLeft > 0) {
+        probesLeft -= 1
+        var j = 0
+        while (j < cap) { if (j != self) pair(head(j), x, capped = true); j += 1 }
+      }
+      ring(ringAt) = x
+      ringAt = (ringAt + 1) % width
+      if (filled < width) filled += 1
+    }
+
+    private def step(): Boolean = {
+      out.clear()
+      if (streaming) {
+        if (readMember()) cappedMember(id, idProbe, -1) else streaming = false
+        true
+      } else in.hasNext && {
+        key = in.head._1
+        src = 0
+        var n = 0
+        while (n <= cap && readMember()) {
+          head(n) = id; headProbe(n) = idProbe; src |= idSrc
+          n += 1
+        }
+        if (n <= cap) {
+          for (i <- 0 until n; j <- i + 1 until n if headProbe(i) || headProbe(j))
+            pair(head(i), head(j), capped = false)
+        } else {
+          probesLeft = cappedProbes
+          ringAt = 0
+          filled = 0
+          for (i <- 0 until n) cappedMember(head(i), headProbe(i), i)
+          streaming = true
+        }
+        true
+      }
+    }
   }
 }

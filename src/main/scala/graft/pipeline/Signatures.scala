@@ -67,8 +67,12 @@ object Signatures {
           var ti = 0
           while (ti < toks.length) { toksH(ti) = Hashing.hashString(toks(ti), c.seed); ti += 1 }
           val textSh = Shingles.tokenShinglesFromHashes(toks, toksH, c.textShingleK, c.seed)
-          val textSig = textMh.signature(textSh)
-          val textBands = MinHash.bandKeys(textSig, c.textBands, c.textRows, c.seed ^ 0x7e47L)
+          // an empty shingle set gets no band keys (text, audio or SimHash):
+          // every empty set would share them, and empty sets never verify
+          val textBands =
+            if (textSh.nonEmpty)
+              MinHash.bandKeys(textMh.signature(textSh), c.textBands, c.textRows, c.seed ^ 0x7e47L)
+            else Array.empty[Long]
 
           var audioSh: Array[Long] = Array.empty
           var decodeOk = false
@@ -89,7 +93,9 @@ object Signatures {
             else Array.empty[Long]
 
           val sim = SimHash.signature(textSh, c.simhashBits, SimHash.mixBits(c.seed ^ 0x51e4L))
-          val simBandVals = BitPack.bands(sim, c.simhashBands, c.simhashBandBits)
+          val simBandVals =
+            if (textSh.nonEmpty) BitPack.bands(sim, c.simhashBands, c.simhashBandBits)
+            else Array.empty[Long]
           val simBands = new Array[Long](simBandVals.length)
           var si = 0
           while (si < simBandVals.length) {

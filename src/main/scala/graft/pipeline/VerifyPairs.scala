@@ -79,10 +79,7 @@ object VerifyPairs {
       .join(audioSide.select($"clip_id".as("a"), $"audio_sh".as("ash_a")), Seq("a"))
       .join(audioSide.select($"clip_id".as("b"), $"audio_sh".as("ash_b")), Seq("b"))
       .select($"a", $"b", $"text_jaccard", $"substring", $"text_accepted",
-        // decode-failed / silent clips have EMPTY shingle sets: report 0.0
-        // (two empty sets are not "identical audio"), same rule as before
-        when(size($"ash_a") === 0 || size($"ash_b") === 0, lit(0.0))
-          .otherwise(jaccardSorted($"ash_a", $"ash_b")).as("audio_jaccard"))
+        jaccardSorted($"ash_a", $"ash_b").as("audio_jaccard"))
     val textAccepted = textPhase.filter($"text_accepted")
       .select($"a", $"b", $"text_jaccard", $"substring", $"text_accepted", lit(0.0).as("audio_jaccard"))
 

@@ -33,7 +33,10 @@ final case class Clip(
   * Variants per master (count seeded 0–6, FIXTURES.md §1):
   *   exact    — byte-identical audio + transcript
   *   audionear— same signal, −40 dB noise + ≤1% gain change (SNR ≥ 30 dB)
-  *   textnear — 1–2 token substitutions (shingle Jaccard stays ≥ ~0.7)
+  *   textnear — 1 token substitution below 30 tokens, 2 from 30 on. Two
+  *              substitutions apart change 6 of the L − 2 3-shingles, so
+  *              Jaccard (L − 8)/(L + 4) falls below 0.7 for 30–35 tokens:
+  *              not every textnear variant is a text dup of its master
   *   textsub  — transcript is a verbatim token window of the master's
   *   hardneg  — ~50% token overlap; must NOT cluster
   */

@@ -58,14 +58,14 @@ class ArraySetExprsSpec extends AnyFunSuite {
     }
   }
 
-  test("jaccardSorted edge semantics: both-empty 1.0, one-empty 0.0, null → null") {
+  test("jaccardSorted: either side empty scores 0.0, null gives null") {
     import spark.implicits._
     val df = Seq(
       (Array.empty[Long], Array.empty[Long]),
       (Array.empty[Long], Array(1L)),
       (Array(1L), Array.empty[Long])
     ).toDF("a", "b").select(jaccardSorted($"a", $"b").as("j"))
-    assert(df.collect().map(_.getDouble(0)).toSeq === Seq(1.0, 0.0, 0.0))
+    assert(df.collect().map(_.getDouble(0)).toSeq === Seq(0.0, 0.0, 0.0))
     val withNull = Seq((Some(Array(1L)), Option.empty[Array[Long]]))
       .toDF("a", "b").select(jaccardSorted($"a", $"b").as("j"))
     assert(withNull.collect().head.isNullAt(0))

@@ -118,7 +118,7 @@ class KernelSpec extends AnyFunSuite {
     assert(a.length === 2)
     val b = Shingles.tokenShingles(Array("a", "b", "c"), 3, 1L) // {abc}
     assert(math.abs(Shingles.jaccardSorted(a, b) - 0.5) < 1e-12)
-    assert(Shingles.jaccardSorted(Array.empty, Array.empty) === 1.0)
+    assert(Shingles.jaccardSorted(Array.empty, Array.empty) === 0.0)
     assert(Shingles.jaccardSorted(a, Array.empty) === 0.0)
   }
 

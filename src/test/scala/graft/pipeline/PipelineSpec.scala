@@ -127,12 +127,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(capped >= 119, "chain must keep the bucket connected")
   }
 
-  test("bucket overflow beyond bucketHardStop is chain-bridged, never silently dropped") {
-    // group of 40 on one band key with a tiny configured hardStop of 8:
-    // members beyond the 8th take the streaming overflow path and must all
-    // (a) appear in pairs, (b) stay connected to the buffered chain,
+  test("empty transcripts: distinct audio gives singletons, identical audio one cluster") {
+    // an empty transcript has no text or SimHash band keys and scores text
+    // Jaccard 0.0, so only the audio can link such clips
+    val masters = (0L until 12L).map(g => ClipTableGen.group(conf.seed, g).head)
+    def clusters(clips: Seq[graft.synth.Clip]): Map[String, String] =
+      DedupPipeline.run(spark, clips.toDF(), conf).clusters.as[(String, String)].collect().toMap
+    val ids = masters.indices.map(i => f"e$i%02d")
+    val distinct = clusters(masters.zip(ids).map { case (m, id) => m.copy(clip_id = id, transcript = "") })
+    assert(distinct === ids.map(id => id -> id).toMap, "distinct audio must stay singletons")
+    val same = clusters(ids.map(id => masters.head.copy(clip_id = id, transcript = "")))
+    assert(same === ids.map(_ -> "e00").toMap, "identical audio must form one cluster")
+  }
+
+  test("band bucket of 40 over bucketCap 4 is chain-bridged, never dropped") {
+    // group of 40 on one band key with bucketCap 4: the 35 members past the
+    // first bucketCap + 1 stream through the chain ring and must all
+    // (a) appear in pairs, (b) stay connected to the head's chain,
     // (c) stay in the linear pair regime, (d) be flagged capped.
-    val c = conf.copy(bucketCap = 4, chainWidth = 2, bucketHardStop = 8)
+    val c = conf.copy(bucketCap = 4, chainWidth = 2)
     val n = 40
     val ids = (0 until n).map(i => f"m$i%03d")
     val bands = ids.map(id => (99L, 1, id)).toDF("band_key", "src", "clip_id")
@@ -152,20 +165,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(pairs.size <= n * 2 * c.chainWidth, s"pair count ${pairs.size} not linear")
   }
 
-  test("suffix-pass window group beyond bucketHardStop streams bounded, connected, flagged") {
-    // one boilerplate W-token window shared by 40 docs with a tiny
-    // configured hardStop of 8: the generator must buffer at most 8
-    // members and stream the other 32 through the ring-buffer chain —
-    // (a) every member appears in pairs, (b) the group stays one
-    // component, (c) the pair count stays in the linear regime,
-    // (d) every pair is flagged capped. (Before this path existed, the
-    // generator buffered the WHOLE group per task — the 10^12-row OOM.)
+  test("suffix group of 40 over bucketCap 4 stays bounded, connected, capped") {
+    // one boilerplate W-token window shared by 40 docs with bucketCap 4:
+    // the generator buffers bucketCap + 1 members and streams the other 35
+    // through the chain ring — (a) every member appears in pairs, (b) the
+    // group stays one component, (c) the pair count stays in the linear
+    // regime, (d) every pair is flagged capped.
     val w = conf.substringWindow
     val common = (1 to w).map(i => s"b$i").mkString(" ")
     val n = 40
     val ids = (0 until n).map(i => f"s$i%03d")
     val clips = ids.map(id => (id, common)).toDF("clip_id", "transcript")
-    val c = conf.copy(bucketCap = 4, chainWidth = 2, bucketHardStop = 8)
+    val c = conf.copy(bucketCap = 4, chainWidth = 2)
     val rows = SuffixDups.candidates(spark, clips, c)
       .select("a", "b", "capped").as[(String, String, Boolean)].collect()
     assert(rows.forall(_._3), "every pair of an overflowed window group must be flagged capped")
