@@ -2,6 +2,7 @@ package graft
 
 import graft.synth.ClipTableGen
 import graft.tools.{BenchLeg, BenchReport}
+import graft.tools.BenchReport.Leg
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main.
@@ -35,36 +36,27 @@ import org.apache.spark.sql.SparkSession
   *  1. headline driver queries at `local[SPARK_GRAFT_CPUS]` on
   *     `SPARK_GRAFT_SF_DIR` (per-query seconds in "queries"; a failing
   *     query records an entry in "errors" instead of being swallowed);
-  *  1.5 an EARLY scaling pair at the smallest honest input (150k clips):
-  *     one pinned (N, 4N) pair lands a measured scaling_efficiency on the
-  *     record ~5 min from JVM start — inside even round 3's ~6-7 min kill
-  *     window — labeled `"early":true` + its own n_clips, superseded in
-  *     dedup_scaling by the first full-size pair (raw_runs keeps every
-  *     leg, each tagged with its input size);
   *  2. the end-to-end dedup pipeline (synth input_hint table → clusters) at
   *     two parallelism levels on IDENTICAL input — the sandbox evidence for
   *     the north rule's N vs 4N executor-cluster scaling criterion. Each
   *     leg is a child JVM PINNED to exactly N physical cores (taskset), so
-  *     "N cores" means N cores — see [[graft.tools.BenchLeg]]. Reports
-  *     clips/sec at both plus efficiency = (T_N / T_4N) / 4; target ≥ 0.8
-  *     (BASELINE.md §2).
+  *     "N cores" means N cores — see [[graft.tools.BenchLeg]].
+  *     `GRAFT_BENCH_REPS` interleaved (N, 4N) pairs, budget-gated, best-of
+  *     per level. Reports clips/sec at both plus efficiency =
+  *     (T_N / T_4N) / 4; target ≥ 0.8 (BASELINE.md §2);
+  *  3. the CPU-parity retry: single legs of the contested level (below).
   *
-  * Measurement hygiene on this SHARED host (BASELINE.md §3):
-  * GRAFT_BENCH_REPS interleaved (N, 4N) leg pairs with best-of per level,
-  * and a bounded wait for ambient load < 3 + a quiet memory-fabric probe
-  * before every timed leg (GRAFT_BENCH_LOADWAIT seconds max, 0 disables) —
-  * legs measured into an external load burst are pure noise, and the raw
-  * interleaved legs are published in the JSON for spread transparency.
-  * Because co-tenant storms are invisible to loadavg and can start
-  * mid-leg, the parent additionally cross-checks the two levels' best-leg
-  * process CPU (identical work ⇒ CPU parity up to the ~1.1 quiet fabric
-  * inflation) and, when they disagree > 1.25×, re-runs SINGLE legs of the
-  * contested level (up to 2×GRAFT_BENCH_EXTRA_PAIRS of them) — recording
-  * the host's weather as the job's scaling is the one failure mode
-  * best-of alone cannot always absorb, and a single-leg retry is cheap
-  * enough to fit the budget a storm has already eaten into. Every budget
-  * decision (resized n, skipped reps) is recorded in the JSON's "meta"
-  * object, so a partial artifact is self-describing.
+  * Measurement hygiene on this SHARED host (BASELINE.md §3) is best-of plus
+  * the parity retry. Co-tenant storms are invisible to loadavg and to a
+  * pre-leg memory-bandwidth probe (both read normal during a measured 1.9×
+  * CPU storm), and they can start mid-leg. The one signal that sees them is
+  * the legs' own process CPU: both levels run identical work, so their best
+  * legs' CPU must agree, and a storm only ever inflates it. When the
+  * 4N / N best-leg CPU ratio leaves [[ParityLow]]..[[ParityHigh]], the
+  * parent re-runs SINGLE legs of the contested level (up to
+  * 2×GRAFT_BENCH_EXTRA_PAIRS of them). Every budget decision (resized n,
+  * skipped reps) is recorded in the JSON's "meta" object, so a partial
+  * artifact is self-describing.
   */
 object Bench {
 
@@ -121,51 +113,60 @@ object Bench {
     dir
   }
 
-  private def readLoad(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => 0.0 }
+  // Conservative per-clip planning constants (quiet r3 measurements +25 %
+  // margin; used only to SIZE work to the budget, never reported). The
+  // per-leg rates are for the default N = 2 and 4N = 8 levels.
+  private val secPerClip2c = 4.6e-4   // measured 4.0e-4 at 800k, pinned, tmpfs
+  private val secPerClip8c = 1.4e-4   // measured 1.1e-4
+  private[graft] val secPerClipSynth = 2.5e-4 // 32-core synth+write to tmpfs
+  private val pairOverheadSec = 110.0  // 2 child-JVM starts + warmups
 
-  /** One-thread memory-streaming micro-probe (~0.5 s quiet): XOR-folds a
-    * 64 MiB array a few times and reports the wall seconds. The shared
-    * host's co-tenant pressure lands on the memory fabric, where neither
-    * loadavg nor steal time sees it (measured: identical pinned 800k legs
-    * spanned 134–248 s across windows with loadavg < 3 and ~0 steal the
-    * whole time) — but a bandwidth-bound probe slows down with it. */
-  private val probeArr = new Array[Long](8 * 1024 * 1024)
-  private def memProbeSec(): Double = {
-    val t0 = System.nanoTime()
-    var pass = 0
-    var acc = 0L
-    while (pass < 4) {
-      var i = 0
-      while (i < probeArr.length) { acc ^= probeArr(i) + i; i += 1 }
-      pass += 1
+  /** Planned seconds for the input synth plus one (N, 4N) pair at `n`
+    * clips — sizes the scaling input to the budget before any leg ran. */
+  private[graft] def scalingCost(n: Int): Double =
+    n * (secPerClipSynth + secPerClip2c + secPerClip8c) + pairOverheadSec
+
+  private def plannedLegSec(cores: Int, baseN: Int, n: Int): Double =
+    n * (if (cores == baseN) secPerClip2c else secPerClip8c)
+
+  /** Budget a further (N, 4N) pair needs: each level's slowest measured
+    * leg (the planning rate until one lands), the child-JVM overhead,
+    * +10 % and 30 s of margin. */
+  private[graft] def pairGate(legs: Seq[Leg], baseN: Int, n: Int): Double = {
+    val legSecs = Seq(baseN, 4 * baseN).map { c =>
+      val v = legs.filter(_.cores == c).map(_.sec)
+      if (v.nonEmpty) v.max else plannedLegSec(c, baseN, n)
     }
-    if (acc == 42L) System.err.print("") // keep the fold observable
-    (System.nanoTime() - t0) / 1e9
+    (legSecs.sum + pairOverheadSec) * 1.1 + 30
   }
 
-  /** Bounded wait for a quiet window before a timed leg: ambient load low
-    * AND the memory-fabric probe within 20% of the best this run has seen.
-    * Falls through after maxWaitSec — legs can still land in noise; the
-    * interleaved best-of across reps is the backstop. */
-  private var probeBest = Double.MaxValue
-  /** Returns the last probe reading (recorded per leg in the JSON so a
-    * stormy leg is visible next to its wall time). */
-  private def waitQuiet(maxWaitSec: Int): Double = {
-    if (probeBest == Double.MaxValue) memProbeSec() // discard the JIT-cold first call
-    if (maxWaitSec <= 0) return memProbeSec()
-    val t0 = System.nanoTime()
-    var p = memProbeSec()
-    probeBest = math.min(probeBest, p)
-    while ((readLoad() > 3.0 || p > 1.2 * probeBest) &&
-        (System.nanoTime() - t0) / 1e9 < maxWaitSec) {
-      Thread.sleep(10000)
-      p = memProbeSec()
-      probeBest = math.min(probeBest, p)
-    }
-    p
+  /** Budget one parity-retry leg at `cores` needs: the level's fastest
+    * measured leg +20 %, plus 60 s for JVM start and warmup. */
+  private[graft] def legGate(legs: Seq[Leg], cores: Int, baseN: Int, n: Int): Double = {
+    val v = legs.filter(_.cores == cores).map(_.sec)
+    (if (v.nonEmpty) v.min else plannedLegSec(cores, baseN, n)) * 1.2 + 60
+  }
+
+  /** The CPU-parity band (4N / N best-leg process CPU) inside which the
+    * two levels count as uncontaminated. Recorded parity → efficiency
+    * (BENCH_FULL.json, BASELINE.md §3): 1.000 → 0.979, 1.058 → 0.921,
+    * 1.122 → 0.854, 1.141 → 0.839, while every run at ≥ 1.212 recorded
+    * ≤ 0.809 and 1.17 reached 0.819 only after a retry; 2c-side storms
+    * recorded 0.878 and 0.546. */
+  private[graft] val ParityLow = 0.9
+  private[graft] val ParityHigh = 1.15
+
+  /** The level whose best leg is CPU-inflated, when the two levels' best
+    * legs disagree beyond [[ParityLow]]..[[ParityHigh]]. The levels run
+    * identical work and a storm only ever INFLATES a leg's CPU, so the
+    * higher-CPU level is the contaminated one. None when they agree, when
+    * a level has no CPU reading yet, or when any leg ran un-pinned. */
+  private[graft] def contestedLevel(legs: Seq[Leg], baseN: Int): Option[Int] = {
+    val parity = BenchReport.bestCpu(legs, 4 * baseN) / BenchReport.bestCpu(legs, baseN)
+    if (!legs.forall(_.pinned) || parity.isNaN) None
+    else if (parity > ParityHigh) Some(4 * baseN)
+    else if (parity < ParityLow) Some(baseN)
+    else None
   }
 
   /** The committed full-protocol run, embedded verbatim in every emitted
@@ -216,7 +217,6 @@ object Bench {
     // carries the 800k full-protocol record).
     val nReq = sys.env.getOrElse("GRAFT_BENCH_CLIPS", "500000").toInt
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "3").toInt
-    val loadWait = sys.env.getOrElse("GRAFT_BENCH_LOADWAIT", "120").toInt
     // Self-budget (seconds from JVM start). The driver's external timeout
     // is not knowable from here (round 2's full run recorded rc=0 at a
     // 2147 s sbt total; round 3's ~40 min protocol recorded rc=124 and NO
@@ -226,13 +226,6 @@ object Bench {
     // budget before starting work it could not finish.
     val budgetSec = sys.env.getOrElse("GRAFT_BENCH_BUDGET_SEC", "1800").toDouble
     def remaining: Double = budgetSec - elapsed
-
-    // conservative per-clip planning constants (quiet r3 measurements +25%
-    // margin; used only to SIZE work to the budget, never reported):
-    val secPerClip2c = 4.6e-4  // measured 4.0e-4 at 800k, pinned, tmpfs
-    val secPerClip8c = 1.4e-4  // measured 1.1e-4
-    val secPerClipSynth = 2.5e-4 // 32-core synth+write to tmpfs
-    val pairOverheadSec = 110.0  // 2 child-JVM starts + warmups + probes
 
     // ---- milestone delivery ---------------------------------------------
     val outPath = sys.env.getOrElse("GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
@@ -251,20 +244,15 @@ object Bench {
 
     val qErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val qTimes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // completed scaling legs — each carries its own input size AND an
-    // explicit early flag (the EARLY pair runs smaller and under a weaker
-    // protocol than the main pairs; a quotient must never mix phases, even
-    // if budget resizing makes the two input sizes coincide)
-    val times = scala.collection.mutable.ArrayBuffer.empty[BenchReport.Leg]
+    // completed scaling legs, each tagged with its input size
+    val times = scala.collection.mutable.ArrayBuffer.empty[Leg]
     var nClips = nReq
-    var earlyN = 0 // early-pair input size, 0 = none ran
     var scalingSkipped: Option[String] = None
+    var pairsDone = 0
     var extraPairs = 0
     var heapPerCoreGb = 3
     var scratchKind = "disk"
     var phase = "startup"
-
-    def bestCpu(c: Int, early: Boolean): Double = BenchReport.bestCpu(times.toSeq, c, early)
 
     /** Snapshot the mutable run state for the renderers. */
     def state(partial: Boolean): BenchReport.State = BenchReport.State(
@@ -273,14 +261,13 @@ object Bench {
       legs = times.toSeq,
       baseN = baseN,
       mainClips = nClips,
-      earlyClips = earlyN,
       scalingSkipped = scalingSkipped,
       extraPairs = extraPairs,
       heapPerCoreGb = heapPerCoreGb,
       scratchKind = scratchKind,
       sfDir = sfDir,
       meta = BenchReport.Meta(startedUtc, elapsed, budgetSec, phase, nReq, nClips,
-        earlyN, reps, pairsDone = times.count(!_.early) / 2,
+        reps, pairsDone,
         protocol = BenchReport.protocol(indexDir = sys.env.contains("GRAFT_INDEX_DIR"))),
       committedSource =
         fullRun.map(_ => sys.env.getOrElse("GRAFT_BENCH_FULL_JSON", "BENCH_FULL.json")),
@@ -328,166 +315,14 @@ object Bench {
       }
     }
 
-    // ---- scaling-leg machinery (shared by the early and main pairs) -----
-    def scalingCost(n: Int): Double =
-      n * secPerClipSynth + n * (secPerClip2c + secPerClip8c) + pairOverheadSec
-    // below this the per-job floor dominates the quotient (env override is
-    // a smoke-test knob, not a measurement protocol)
-    val minClips = sys.env.getOrElse("GRAFT_BENCH_MIN_CLIPS", "150000").toInt
-
-    // Each leg runs as a CHILD JVM pinned with `taskset -c 0..N-1` to
-    // exactly N physical cores. A floating `local[N]` JVM is NOT an N-core
-    // cluster: shuffle/IO/GC threads borrow idle host cores beside the N
-    // task slots (measured process utilization 2.38 at local[2] on a quiet
-    // host), overstating small-leg throughput and understating the scaling
-    // quotient — the quieter the host, the worse the recorded number.
-    // Pinning bounds the whole process, and the JVM sizes its thread pools
-    // from the affinity mask, so this is the faithful emulation of the
-    // north rule's two CLUSTER SIZES. Both legs run the identical physical
-    // plan (same shuffle-partition count — the plan belongs to the job,
-    // not the cluster size). Each child warms itself on a row-limited
-    // untimed prefix (JIT + codegen); `reps` interleaved (N, 4N) pairs,
-    // best-of per level: interleaving decorrelates an ambient-load burst
-    // from one level, and min is the least-contested estimate.
-    val shufflePartitions = 2 * 4 * baseN
-
-    // per-NODE memory is fixed on a real cluster; aggregate memory scales
-    // with cluster size. Giving both legs the parent's full heap would hand
-    // the small "cluster" 4x the per-core memory of the big one — so each
-    // child's heap is heapPerCoreGb * cores (and the JVM sizes GC from the
-    // affinity mask, so GC parallelism scales with the leg too).
-    heapPerCoreGb = sys.env.getOrElse("GRAFT_BENCH_HEAP_PER_CORE_GB", "3").toInt
-    def pinnedLeg(cores: Int, dir: String, localRoot: Option[String],
-        warmRows: Int): Option[(Double, Double)] = {
-      import scala.jdk.CollectionConverters._
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val cp = System.getProperty("java.class.path")
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp") ||
-          a.startsWith("-Xmx") || a.startsWith("-Xms"))
-      val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ jvmArgs ++
-        Seq(s"-Xmx${heapPerCoreGb * cores}g", "-cp", cp, "graft.tools.BenchLeg",
-          cores.toString, dir, shufflePartitions.toString, warmRows.toString)
-      try {
-        val pb = new ProcessBuilder(cmd: _*)
-        localRoot.foreach(d => pb.environment().put("GRAFT_LEG_LOCAL_DIR", d))
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        val rc = p.waitFor()
-        val parsed = "GRAFT_LEG_SECONDS=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
-        val cpu = "GRAFT_LEG_CPUSEC=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
-        if (rc != 0 || parsed.isEmpty)
-          System.err.println(s"[bench] pinned leg cores=$cores rc=$rc parsed=$parsed")
-        if (rc == 0) parsed.map(t => (t, cpu.getOrElse(Double.NaN))) else None
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] pinned leg spawn failed: $e")
-        None
-      }
-    }
-
-    /** One timed leg on `dir` (n clips): quiet-window wait, pinned child
-      * JVM, optional un-pinned in-process fallback, milestone emit.
-      * `isEarly` tags the leg's phase explicitly — quotients and parity are
-      * keyed on the flag, never on the input size (which budget resizing
-      * can make coincide across phases). */
-    def once(cores: Int, dir: String, localRoot: Option[String], n: Int,
-        maxWait: Int, fallback: Option[() => Unit], warmCap: Int = Int.MaxValue,
-        isEarly: Boolean = false): Unit = {
-      val probe = waitQuiet(maxWait)
-      val warmRows = math.min(math.min(warmCap,
-        sys.env.getOrElse("GRAFT_BENCH_WARMUP_ROWS", "100000").toInt), n / 2)
-      val leg = pinnedLeg(cores, dir, localRoot, warmRows).map { case (t, u) => (t, u, true) }
-        .orElse(fallback.map { warm =>
-          System.err.println(s"[bench] cores=$cores falling back in-process (un-pinned)")
-          warm()
-          val s = BenchLeg.session(cores, shufflePartitions)
-          val t0 = BenchLeg.pipelineSecs(s, dir)
-          s.stop()
-          (t0, Double.NaN, false)
-        })
-      leg match {
-        case Some((t, cpu, pinned)) =>
-          times += BenchReport.Leg(cores, t, probe, cpu, pinned, n, isEarly)
-          emit(partial = true) // milestone: every completed leg updates the artifact
-        case None =>
-          System.err.println(s"[bench] cores=$cores n=$n: leg skipped (no pinned run, no fallback)")
-      }
-    }
-
-    // ---- phase 1.5: EARLY scaling pair -----------------------------------
-    // The driver's external kill window is unknowable from here (round 3's
-    // fired ~6-7 min in — before a full-size pair could possibly land). So
-    // before the main synth, run ONE pinned (N, 4N) pair on the smallest
-    // honest input: a measured scaling efficiency is on the record ~5 min
-    // from JVM start, labeled with its own n_clips + "early":true, and the
-    // main-size pairs supersede it in dedup_scaling the moment both levels
-    // land (raw_runs keeps the early legs, each tagged n_clips). Skipped
-    // when the requested run is itself small (the first main pair IS the
-    // early pair then) or the budget cannot fit the extra pair.
-    phase = "early-pair"
-    if (nReq > 2 * minClips && remaining > scalingCost(minClips) + 60) {
-      earlyN = minClips
-      graft.tools.Scratch.sweepDefaultRoots()
-      val shmE = shmRoot(earlyN)
-      val earlyDir = materializeClips(spark1, earlyN, shmE)
-      val earlyLocalRoot = shmE.map { root =>
-        val d = java.nio.file.Files.createTempDirectory(root.toPath, "graft-bench-local")
-        graft.tools.Scratch.claim(d.toFile)
-        d.toString
-      }
-      scratchKind = if (earlyLocalRoot.isDefined) "tmpfs" else "disk"
-      // tmpfs scratch is host RAM: free it even when a SIGTERM or an
-      // exception lands mid-phase (normal path frees it in the same
-      // finally; the PID-stamped sweep covers SIGKILL/OOM)
-      val earlyCleanup = new Thread(() => {
-        graft.tools.Scratch.deleteRec(new java.io.File(earlyDir).getParentFile)
-        earlyLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
-      })
-      Runtime.getRuntime.addShutdownHook(earlyCleanup)
-      try {
-        // short quiet-wait cap: the early pair's whole point is landing
-        // before an unknown kill; the main pairs re-measure under the full
-        // hygiene protocol and replace it
-        val earlyWait = math.min(loadWait, 45)
-        // 30k-row warmup cap: enough input to JIT the hot loops, not the 100k
-        // default (2/3 of the early input untimed would push the early
-        // quotient past the very kill window it exists to beat)
-        Seq(baseN, 4 * baseN).foreach(c =>
-          once(c, earlyDir, earlyLocalRoot, earlyN, earlyWait, fallback = None,
-            warmCap = 30000, isEarly = true))
-        // Cheap single-leg retries when the early pair's own CPU parity says
-        // a storm hit one level (identical work ⇒ CPU parity ≈ the ~1.1
-        // quiet fabric inflation; a storm only ever INFLATES a leg's CPU).
-        // The full hygiene protocol runs only at the main size — but if the
-        // driver's kill lands before the first main pair, the early quotient
-        // IS the recorded one, so don't leave it storm-shaped when ~60 s
-        // fixes it. Gated so the main phase still fits the budget.
-        def earlyParity: Double = bestCpu(4 * baseN, early = true) / bestCpu(baseN, early = true)
-        var earlyRetries = 0
-        while (earlyRetries < 2 && !earlyParity.isNaN &&
-            (earlyParity > 1.25 || earlyParity < 0.8) &&
-            remaining > scalingCost(minClips) + 160) {
-          val level = if (earlyParity > 1.25) 4 * baseN else baseN
-          System.err.println(f"[bench] early-pair CPU parity $earlyParity%.2f — one retry at cores=$level")
-          earlyRetries += 1
-          once(level, earlyDir, earlyLocalRoot, earlyN, earlyWait, fallback = None,
-            warmCap = 30000, isEarly = true)
-        }
-      } finally {
-        // free the early scratch immediately — the main input needs the room
-        earlyCleanup.run()
-        try Runtime.getRuntime.removeShutdownHook(earlyCleanup)
-        catch { case _: IllegalStateException => } // already shutting down
-      }
-    }
-
     // ---- phase 2: same job, same input, two parallelism levels ----------
     // Size the scaling phase to the remaining budget: prefer the requested
     // n, shrink if the budget cannot fit synth + one pair at it (the
-    // per-clip planning constants above are deliberately conservative).
+    // per-clip planning constants are deliberately conservative). Below
+    // minClips the per-job floor dominates the quotient (the env override
+    // is a smoke-test knob, not a measurement protocol).
     phase = "scaling-synth"
+    val minClips = sys.env.getOrElse("GRAFT_BENCH_MIN_CLIPS", "150000").toInt
     if (remaining < scalingCost(minClips) + 60) {
       scalingSkipped = Some(f"budget: ${remaining}%.0f s left < ${scalingCost(minClips) + 60}%.0f s for the smallest honest pair; see committed_full_run")
       System.err.println(s"[bench] ${scalingSkipped.get}")
@@ -520,93 +355,117 @@ object Bench {
       legLocalRoot.foreach(d => graft.tools.Scratch.deleteRec(new java.io.File(d)))
     }
 
+    // Each leg runs as a CHILD JVM pinned with `taskset -c 0..N-1` to
+    // exactly N physical cores. A floating `local[N]` JVM is NOT an N-core
+    // cluster: shuffle/IO/GC threads borrow idle host cores beside the N
+    // task slots (measured process utilization 2.38 at local[2] on a quiet
+    // host), overstating small-leg throughput and understating the scaling
+    // quotient — the quieter the host, the worse the recorded number.
+    // Pinning bounds the whole process, and the JVM sizes its thread pools
+    // from the affinity mask, so this is the faithful emulation of the
+    // north rule's two CLUSTER SIZES. Both legs run the identical physical
+    // plan (same shuffle-partition count — the plan belongs to the job,
+    // not the cluster size). Each child warms itself on a row-limited
+    // untimed prefix (JIT + codegen); `reps` interleaved (N, 4N) pairs,
+    // best-of per level: interleaving decorrelates an ambient-load burst
+    // from one level, and min is the least-contested estimate.
+    val shufflePartitions = 2 * 4 * baseN
+    val warmRows = math.min(sys.env.getOrElse("GRAFT_BENCH_WARMUP_ROWS", "100000").toInt, nClips / 2)
+
+    // per-NODE memory is fixed on a real cluster; aggregate memory scales
+    // with cluster size. Giving both legs the parent's full heap would hand
+    // the small "cluster" 4x the per-core memory of the big one — so each
+    // child's heap is heapPerCoreGb * cores (and the JVM sizes GC from the
+    // affinity mask, so GC parallelism scales with the leg too).
+    heapPerCoreGb = sys.env.getOrElse("GRAFT_BENCH_HEAP_PER_CORE_GB", "3").toInt
+    def pinnedLeg(cores: Int): Option[(Double, Double)] = {
+      import scala.jdk.CollectionConverters._
+      val javaBin = System.getProperty("java.home") + "/bin/java"
+      val cp = System.getProperty("java.class.path")
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq
+        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp") ||
+          a.startsWith("-Xmx") || a.startsWith("-Xms"))
+      val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ jvmArgs ++
+        Seq(s"-Xmx${heapPerCoreGb * cores}g", "-cp", cp, "graft.tools.BenchLeg",
+          cores.toString, inputDir, shufflePartitions.toString, warmRows.toString)
+      try {
+        val pb = new ProcessBuilder(cmd: _*)
+        legLocalRoot.foreach(d => pb.environment().put("GRAFT_LEG_LOCAL_DIR", d))
+        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+        val p = pb.start()
+        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+        val rc = p.waitFor()
+        val parsed = "GRAFT_LEG_SECONDS=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
+        val cpu = "GRAFT_LEG_CPUSEC=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
+        if (rc != 0 || parsed.isEmpty)
+          System.err.println(s"[bench] pinned leg cores=$cores rc=$rc parsed=$parsed")
+        if (rc == 0) parsed.map(t => (t, cpu.getOrElse(Double.NaN))) else None
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] pinned leg spawn failed: $e")
+        None
+      }
+    }
+
     // in-process fallback (no taskset / child spawn failure): warm this JVM
-    // once full-size, then run legs un-pinned as in earlier rounds. Only
-    // the MAIN pairs get the fallback — an early-pair spawn failure just
-    // skips the early leg (the same failure would hit the main legs too,
-    // and their fallback records it machine-visibly via pinned=false).
+    // once full-size, then run legs un-pinned as in earlier rounds; the
+    // JSON records it machine-visibly via pinned=false
     lazy val inProcessWarmed: Unit = {
       val warm = BenchLeg.session(4 * baseN, shufflePartitions)
       BenchLeg.pipelineSecs(warm, inputDir)
       warm.stop()
     }
-    def runPair(): Unit = Seq(baseN, 4 * baseN).foreach(c =>
-      once(c, inputDir, legLocalRoot, nClips, loadWait, fallback = Some(() => inProcessWarmed)))
 
-    // measured cost of one MAIN-size pair, for budget gating of later pairs
-    // (seeded from the early pair's measured per-clip rate when it exists,
-    // else from the planning constants, until the first main pair lands)
-    def measuredPairCost: Double = {
-      val byLevel = Seq(baseN, 4 * baseN).map { c =>
-        val v = times.filter(l => l.cores == c && !l.early).map(_.sec)
-        if (v.nonEmpty) v.max
-        else {
-          val e = times.filter(l => l.cores == c && l.early).map(_.sec)
-          if (earlyN > 0 && e.nonEmpty) e.min / earlyN * nClips * 1.25
-          else nClips * (if (c == baseN) secPerClip2c else secPerClip8c)
-        }
+    /** One timed leg: pinned child JVM, else the un-pinned in-process
+      * fallback, then a milestone emit. */
+    def once(cores: Int): Unit = {
+      val (t, cpu, pinned) = pinnedLeg(cores).map { case (t, u) => (t, u, true) }.getOrElse {
+        System.err.println(s"[bench] cores=$cores falling back in-process (un-pinned)")
+        inProcessWarmed
+        val s = BenchLeg.session(cores, shufflePartitions)
+        val t0 = BenchLeg.pipelineSecs(s, inputDir)
+        s.stop()
+        (t0, Double.NaN, false)
       }
-      byLevel.sum + pairOverheadSec
+      times += Leg(cores, t, cpu, pinned, nClips)
+      emit(partial = true) // milestone: every completed leg updates the artifact
     }
 
     phase = "scaling-pairs"
-    // a pair's true cost includes up to 2 bounded quiet-window waits
-    def pairGate: Double = measuredPairCost * 1.1 + 2.0 * loadWait + 30
-    var pairsDone = 0
-    while (pairsDone < reps && (pairsDone == 0 || remaining > pairGate)) {
-      runPair()
+    while (pairsDone < reps && (pairsDone == 0 || remaining > pairGate(times.toSeq, baseN, nClips))) {
+      Seq(baseN, 4 * baseN).foreach(once)
       pairsDone += 1
-      if (pairsDone < reps && remaining <= pairGate)
+      if (pairsDone < reps && remaining <= pairGate(times.toSeq, baseN, nClips))
         System.err.println(f"[bench] budget ${remaining}%.0f s: stopping after $pairsDone of $reps pairs")
     }
 
-    // Cross-level storm check: the two levels run IDENTICAL work, so their
-    // best legs' process CPU must agree up to the measured quiet memory-
-    // fabric inflation (8c/2c ≈ 1.1) — co-tenant pressure only ever
-    // INFLATES a leg's CPU. If the best legs disagree beyond 1.25×, the
-    // higher-CPU level's reps all landed in storms (observed: 2 of 3 8-core
-    // legs at cpu 1056/871 core-s vs a quiet 663 in one run); retry rather
-    // than record the host's weather as the job's scaling. The retry is a
-    // SINGLE leg of the contested level, not a full pair: the parity signal
-    // is CPU-based (work-invariant), so the level whose best-leg CPU is
-    // inflated is identified unambiguously, re-running it can only improve
-    // its own min (the other level's best stands untouched — no upward
-    // bias), and a single leg costs ~1/4 of a pair, which is what lets the
-    // retry still fit the budget that remains after the planned pairs (a
-    // full-pair retry was exactly the step the default budget could never
-    // afford once a storm had already slowed the planned legs). Every leg,
-    // extra or not, is published in raw_runs.
+    // ---- phase 3: cross-level CPU-parity retry ---------------------------
+    // The retry is a SINGLE leg of the contested level, not a full pair:
+    // the parity signal is CPU-based (work-invariant), so the inflated level
+    // is identified unambiguously, re-running it can only improve its own
+    // min (the other level's best stands untouched — no upward bias), and a
+    // single leg costs ~1/4 of a pair, which is what lets the retry still
+    // fit the budget a storm has already eaten into. Every leg, extra or
+    // not, is published in raw_runs.
     phase = "parity-retry"
-    // parity is judged on the MAIN-size legs only (identical work); the
-    // early pair is superseded by then and never retried
     val maxExtraLegs = 2 * sys.env.getOrElse("GRAFT_BENCH_EXTRA_PAIRS", "2").toInt
-    def parityRatio: Double = bestCpu(4 * baseN, early = false) / bestCpu(baseN, early = false)
-    def cpuAgree: Boolean = {
-      val r = parityRatio
-      r.isNaN || (r < 1.25 && r > 0.8)
-    }
-    def contestedLevel: Int = if (parityRatio > 1.25) 4 * baseN else baseN
-    def legGate(cores: Int): Double = {
-      val v = times.filter(l => l.cores == cores && !l.early).map(_.sec)
-      val est = if (v.isEmpty) nClips * (if (cores == baseN) secPerClip2c else secPerClip8c)
-        else v.min
-      est * 1.2 + loadWait + 60 // JVM start + warmup + one bounded wait
-    }
     var extraLegs = 0
     var futile = 0 // consecutive retries that did not improve the level's best CPU
-    while (times.forall(_.pinned) && !cpuAgree && extraLegs < maxExtraLegs && futile < 2 &&
-        remaining > legGate(contestedLevel)) {
+    var contested = contestedLevel(times.toSeq, baseN)
+    while (contested.isDefined && extraLegs < maxExtraLegs && futile < 2 &&
+        remaining > legGate(times.toSeq, contested.get, baseN, nClips)) {
+      val level = contested.get
+      val before = BenchReport.bestCpu(times.toSeq, level)
       System.err.println(f"[bench] best-leg CPU disagrees across levels " +
-        f"(${bestCpu(baseN, early = false)}%.0f vs ${bestCpu(4 * baseN, early = false)}%.0f core-s) — " +
-        f"extra leg at the contested level (${contestedLevel} cores)")
+        f"(${BenchReport.bestCpu(times.toSeq, baseN)}%.0f vs ${BenchReport.bestCpu(times.toSeq, 4 * baseN)}%.0f core-s) — " +
+        f"extra leg at the contested level ($level cores)")
       extraLegs += 1
       extraPairs = (extraLegs + 1) / 2 // JSON continuity: retry effort in pair units
-      val level = contestedLevel
-      val before = bestCpu(level, early = false)
-      once(level, inputDir, legLocalRoot, nClips, loadWait, fallback = Some(() => inProcessWarmed))
+      once(level)
       // two non-improving retries in a row ⇒ the disagreement is structural
       // (tiny-n job floor) or the storm is sustained — stop spending budget
-      if (bestCpu(level, early = false) >= 0.97 * before) futile += 1 else futile = 0
+      if (BenchReport.bestCpu(times.toSeq, level) >= 0.97 * before) futile += 1 else futile = 0
+      contested = contestedLevel(times.toSeq, baseN)
     }
 
     graft.tools.Scratch.deleteRec(

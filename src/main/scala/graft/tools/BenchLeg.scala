@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Protocol per leg: untimed warmup on a row-limited prefix (JIT +
   * whole-stage-codegen compilation of the same generated classes the timed
-  * run uses — a cold first run burns ~3x CPU, measured via ScaleProbe),
+  * run uses — a cold first run burns ~3x the CPU of a warm one),
   * then ONE timed full run. The parent interleaves (N, 4N) legs and takes
   * best-of, so per-leg JVM cold-start stays out of the timed window.
   *

@@ -19,12 +19,6 @@ package graft.tools
   *    embedded verbatim, errors capped. If a pathological state still
   *    overflows, progressively heavier trims are applied until it fits —
   *    the budget is a hard guarantee, not a hope.
-  *
-  * Legs carry an explicit `early` flag (not just their input size): if the
-  * budget resizer ever shrinks the main input down to the early-pair size,
-  * the early legs (30k warmup cap, 45 s quiet-wait, weaker retry protocol)
-  * must still be machine-distinguishable from main legs and must not merge
-  * into the main quotient / cpu_parity / pairs_done.
   */
 object BenchReport {
 
@@ -33,19 +27,18 @@ object BenchReport {
   val MaxCompactChars = 1900
 
   /** One completed scaling leg. `cpuSec` is NaN for un-pinned fallback legs
-    * (no child JVM to account); `early` marks the phase that produced it. */
-  final case class Leg(cores: Int, sec: Double, probeSec: Double, cpuSec: Double,
-      pinned: Boolean, nClips: Int, early: Boolean)
+    * (no child JVM to account). */
+  final case class Leg(cores: Int, sec: Double, cpuSec: Double, pinned: Boolean, nClips: Int)
 
   final case class Meta(startedUtc: String, wallTotalSec: Double, budgetSec: Double,
-      phase: String, clipsRequested: Int, clipsUsed: Int, earlyPairClips: Int,
+      phase: String, clipsRequested: Int, clipsUsed: Int,
       repsRequested: Int, pairsDone: Int, protocol: String)
 
   /** The `meta.protocol` tag. "+indexdir" marks runs exercising
     * CodesCache's production parquet spill path (GRAFT_INDEX_DIR) instead
     * of localCheckpoint blocks. */
   def protocol(indexDir: Boolean): String =
-    "r5-compact" + (if (indexDir) "+indexdir" else "")
+    "r6-compact" + (if (indexDir) "+indexdir" else "")
 
   final case class State(
       queries: Seq[(String, Double)],
@@ -53,7 +46,6 @@ object BenchReport {
       legs: Seq[Leg],
       baseN: Int,
       mainClips: Int,
-      earlyClips: Int,
       scalingSkipped: Option[String],
       extraPairs: Int,
       heapPerCoreGb: Int,
@@ -72,69 +64,54 @@ object BenchReport {
       case c => c.toString
     } + "\""
 
-  /** Best (minimum) leg CPU at a level, within one phase's legs. */
-  def bestCpu(legs: Seq[Leg], cores: Int, early: Boolean): Double = {
-    val v = legs.filter(l => l.cores == cores && l.early == early && !l.cpuSec.isNaN).map(_.cpuSec)
+  /** Best (minimum) leg CPU at a level; NaN when no leg there has one. */
+  def bestCpu(legs: Seq[Leg], cores: Int): Double = {
+    val v = legs.filter(l => l.cores == cores && !l.cpuSec.isNaN).map(_.cpuSec)
     if (v.isEmpty) Double.NaN else v.min
   }
 
-  /** Best (tN, t4N) wall pair within one phase's legs, if both levels ran. */
-  def pairAt(legs: Seq[Leg], baseN: Int, early: Boolean): Option[(Double, Double)] = {
-    val tN = legs.collect { case l if l.cores == baseN && l.early == early => l.sec }
-    val t4N = legs.collect { case l if l.cores == 4 * baseN && l.early == early => l.sec }
+  /** Best (tN, t4N) wall pair, if both levels ran. */
+  def pairAt(legs: Seq[Leg], baseN: Int): Option[(Double, Double)] = {
+    val tN = legs.collect { case l if l.cores == baseN => l.sec }
+    val t4N = legs.collect { case l if l.cores == 4 * baseN => l.sec }
     if (tN.nonEmpty && t4N.nonEmpty) Some((tN.min, t4N.min)) else None
   }
 
-  /** The reported quotient comes from ONE phase: the main pair when both
-    * levels landed there, else the early pair. Returns (nClips, pair, early). */
-  private def selectPair(s: State): (Int, Option[(Double, Double)], Boolean) =
-    pairAt(s.legs, s.baseN, early = false) match {
-      case Some(p) => (s.mainClips, Some(p), false)
-      case None => pairAt(s.legs, s.baseN, early = true).filter(_ => s.earlyClips > 0) match {
-        case Some(p) => (s.earlyClips, Some(p), true)
-        case None => (s.mainClips, None, false)
-      }
-    }
-
   private def legJson(l: Leg): String = {
     val cpuField = if (l.cpuSec.isNaN) "" else f""","cpu_sec":${l.cpuSec}%.3f"""
-    val earlyField = if (l.early) ""","early":true""" else ""
-    f"""{"cores":${l.cores},"n_clips":${l.nClips},"sec":${l.sec}%.3f,"probe_sec":${l.probeSec}%.3f$cpuField$earlyField,"pinned":${l.pinned}}"""
+    f"""{"cores":${l.cores},"n_clips":${l.nClips},"sec":${l.sec}%.3f$cpuField,"pinned":${l.pinned}}"""
   }
 
   /** Shared scaling-quotient fields. `rawField` carries the renderer-specific
     * leg detail (full: every leg; compact: per-level best + count). */
   private def scalingJson(s: State, rawField: String): String = {
-    val (scaleN, legSecs, isEarly) = selectPair(s)
-    legSecs.map { case (tN, t4N) =>
-      val cpsN = scaleN / tN
-      val cps4N = scaleN / t4N
+    pairAt(s.legs, s.baseN).map { case (tN, t4N) =>
+      val cpsN = s.mainClips / tN
+      val cps4N = s.mainClips / t4N
       val eff = (tN / t4N) / 4.0
-      val cpuParity = bestCpu(s.legs, 4 * s.baseN, isEarly) / bestCpu(s.legs, s.baseN, isEarly)
+      val cpuParity = bestCpu(s.legs, 4 * s.baseN) / bestCpu(s.legs, s.baseN)
       val pinnedAll = s.legs.forall(_.pinned)
-      val earlyField = if (isEarly) ""","early":true""" else ""
       val partialField = if (s.partial) ""","partial":true""" else ""
-      f""","dedup_scaling":{"n_clips":$scaleN,"base_cores":${s.baseN},"clips_per_sec_N":$cpsN%.1f,"clips_per_sec_4N":$cps4N%.1f,"scaling_efficiency":$eff%.3f,"pinned":$pinnedAll,"scratch":"${s.scratchKind}","heap_per_core_gb":${s.heapPerCoreGb},"extra_pairs":${s.extraPairs},"cpu_parity":${if (cpuParity.isNaN) "null" else f"$cpuParity%.3f"}$earlyField$partialField$rawField}"""
+      f""","dedup_scaling":{"n_clips":${s.mainClips},"base_cores":${s.baseN},"clips_per_sec_N":$cpsN%.1f,"clips_per_sec_4N":$cps4N%.1f,"scaling_efficiency":$eff%.3f,"pinned":$pinnedAll,"scratch":"${s.scratchKind}","heap_per_core_gb":${s.heapPerCoreGb},"extra_pairs":${s.extraPairs},"cpu_parity":${if (cpuParity.isNaN) "null" else f"$cpuParity%.3f"}$partialField$rawField}"""
     }.getOrElse {
       if (s.legs.nonEmpty)
-        s""","dedup_scaling":{"n_clips":$scaleN,"base_cores":${s.baseN},"partial":true$rawField}"""
+        s""","dedup_scaling":{"n_clips":${s.mainClips},"base_cores":${s.baseN},"partial":true$rawField}"""
       else s.scalingSkipped.map(r => s""","dedup_scaling":{"skipped":${jstr(r)}}""").getOrElse("")
     }
   }
 
   private def queriesJson(s: State): String = {
-    val legSecs = selectPair(s)._2
-    val qs = s.queries ++ legSecs.toSeq.flatMap { case (tN, t4N) => Seq(
+    val qs = s.queries ++ pairAt(s.legs, s.baseN).toSeq.flatMap { case (tN, t4N) => Seq(
       s"dedup_pipeline_local${s.baseN}" -> tN,
       s"dedup_pipeline_local${4 * s.baseN}" -> t4N) }
     qs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
   }
 
   private def totalValue(s: State): Double =
-    s.queries.map(_._2).sum + selectPair(s)._2.map(p => p._1 + p._2).getOrElse(0.0)
+    s.queries.map(_._2).sum + pairAt(s.legs, s.baseN).map(p => p._1 + p._2).getOrElse(0.0)
 
   private def metaJson(m: Meta): String =
-    f""""meta":{"started_utc":${jstr(m.startedUtc)},"wall_total_sec":${m.wallTotalSec}%.1f,"budget_sec":${m.budgetSec}%.0f,"phase":${jstr(m.phase)},"clips_requested":${m.clipsRequested},"clips_used":${m.clipsUsed},"early_pair_clips":${m.earlyPairClips},"reps_requested":${m.repsRequested},"pairs_done":${m.pairsDone},"protocol":${jstr(m.protocol)}}"""
+    f""""meta":{"started_utc":${jstr(m.startedUtc)},"wall_total_sec":${m.wallTotalSec}%.1f,"budget_sec":${m.budgetSec}%.0f,"phase":${jstr(m.phase)},"clips_requested":${m.clipsRequested},"clips_used":${m.clipsUsed},"reps_requested":${m.repsRequested},"pairs_done":${m.pairsDone},"protocol":${jstr(m.protocol)}}"""
 
   /** The FILE artifact: every raw leg + the committed run embedded verbatim. */
   def renderFull(s: State): String = {
@@ -168,9 +145,8 @@ object BenchReport {
     val bestLegs =
       if (trim >= 1) ""
       else {
-        val (_, _, isEarly) = selectPair(s)
         val picks = Seq(s.baseN, 4 * s.baseN).flatMap { c =>
-          val v = s.legs.filter(l => l.cores == c && l.early == isEarly)
+          val v = s.legs.filter(_.cores == c)
           if (v.isEmpty) None else Some(v.minBy(_.sec))
         }
         if (picks.isEmpty) "" else s""","best_legs":${picks.map(legJson).mkString("[", ",", "]")}"""

@@ -17,22 +17,18 @@ class BenchReportSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
   private def parse(s: String): JsonNode = mapper.readTree(s)
 
-  /** A leg per (cores, phase, rep) — more legs than any real run keeps
-    * (3 early incl. one retry + 3 main pairs + 4 parity-retry extras). */
+  /** A leg per (cores, rep) — as many legs as any real run keeps
+    * (3 pairs + 4 parity-retry extras). */
   private def legs(baseN: Int): Seq[BenchReport.Leg] = {
-    val early = Seq(
-      BenchReport.Leg(baseN, 113.475, 0.046, 211.18, pinned = true, 150000, early = true),
-      BenchReport.Leg(4 * baseN, 76.553, 0.039, 514.13, pinned = true, 150000, early = true),
-      BenchReport.Leg(4 * baseN, 39.066, 0.062, 249.76, pinned = true, 150000, early = true))
     val main = (0 until 3).flatMap(i => Seq(
-      BenchReport.Leg(baseN, 361.036 + i, 0.039, 693.29 + i, pinned = true, 800000, early = false),
-      BenchReport.Leg(4 * baseN, 92.21 + i, 0.037, 693.02 + i, pinned = true, 800000, early = false)))
+      BenchReport.Leg(baseN, 361.036 + i, 693.29 + i, pinned = true, 800000),
+      BenchReport.Leg(4 * baseN, 92.21 + i, 693.02 + i, pinned = true, 800000)))
     val extras = (0 until 4).map(i =>
-      BenchReport.Leg(4 * baseN, 100.095 + i, 0.036, 745.64 + i, pinned = true, 800000, early = false))
-    early ++ main ++ extras
+      BenchReport.Leg(4 * baseN, 100.095 + i, 745.64 + i, pinned = true, 800000))
+    main ++ extras
   }
 
-  /** Maximum realistic protocol shape: all 13 headline queries, 10+ raw
+  /** Maximum realistic protocol shape: all 13 headline queries, 10 raw
     * legs, full meta, the committed run embedded, retry fields populated. */
   private def maxState(errors: Seq[(String, String)] = Nil): BenchReport.State = {
     val queries = Seq(
@@ -45,13 +41,13 @@ class BenchReportSpec extends AnyFunSuite {
       java.nio.file.Paths.get("BENCH_FULL.json")), "UTF-8").trim
     BenchReport.State(
       queries = queries, errors = errors, legs = legs(2), baseN = 2,
-      mainClips = 800000, earlyClips = 150000, scalingSkipped = None,
+      mainClips = 800000, scalingSkipped = None,
       extraPairs = 2, heapPerCoreGb = 3, scratchKind = "tmpfs",
       sfDir = "/root/testdata/sf0.1",
       meta = BenchReport.Meta("2026-08-18T10:29:08.009476893Z", 3153.2, 5400.0,
         // longest protocol string Bench can emit (the GRAFT_INDEX_DIR
         // marker) so the budget is pinned at the true maximum shape
-        "parity-retry", 800000, 800000, 150000, 3, 3, "r5-compact+indexdir"),
+        "parity-retry", 800000, 800000, 3, 3, "r6-compact+indexdir"),
       committedSource = Some("BENCH_FULL.json"), committedJson = Some(committed),
       partial = true)
   }
@@ -62,7 +58,7 @@ class BenchReportSpec extends AnyFunSuite {
       s"compact line ${line.length} chars > ${BenchReport.MaxCompactChars}")
     val node = parse(line)
     assert(node.get("dedup_scaling").get("scaling_efficiency").asDouble() > 0.9)
-    assert(node.get("meta").get("protocol").asText() == "r5-compact+indexdir")
+    assert(node.get("meta").get("protocol").asText() == "r6-compact+indexdir")
     // full detail is referenced, not embedded
     assert(node.get("committed_full_run") == null)
     assert(node.get("committed_full_run_source").asText() == "BENCH_FULL.json")
@@ -72,11 +68,11 @@ class BenchReportSpec extends AnyFunSuite {
     assert(sm.get("n_clips").asInt() == 800000)
   }
 
-  test("a run without GRAFT_INDEX_DIR renders protocol r5-compact") {
+  test("a run without GRAFT_INDEX_DIR renders protocol r6-compact") {
     val st = maxState()
     val plain = st.copy(meta = st.meta.copy(protocol = BenchReport.protocol(indexDir = false)))
-    assert(parse(BenchReport.renderCompact(plain)).get("meta").get("protocol").asText() == "r5-compact")
-    assert(BenchReport.protocol(indexDir = true) == "r5-compact+indexdir")
+    assert(parse(BenchReport.renderCompact(plain)).get("meta").get("protocol").asText() == "r6-compact")
+    assert(BenchReport.protocol(indexDir = true) == "r6-compact+indexdir")
   }
 
   test("compact line fits with the error map populated") {
@@ -102,32 +98,6 @@ class BenchReportSpec extends AnyFunSuite {
     assert(node.get("dedup_scaling").get("raw_runs").size() == st.legs.size)
     assert(node.get("committed_full_run").get("dedup_scaling")
       .get("scaling_efficiency").asDouble() == 0.979)
-    // early legs are tagged in raw_runs
-    val raw = node.get("dedup_scaling").get("raw_runs")
-    assert((0 until raw.size()).count(i => raw.get(i).has("early")) == 3)
-  }
-
-  test("quotient and parity key on the early flag, not the input size") {
-    // budget resizing can shrink the main input to the early size: the
-    // early legs (weaker protocol) must STILL not merge into the main
-    // quotient (ADVICE r4 #1)
-    val mixed = Seq(
-      // early pair at 150k: fast-looking (would inflate efficiency to 1.0)
-      BenchReport.Leg(2, 100.0, 0.04, 200.0, pinned = true, 150000, early = true),
-      BenchReport.Leg(8, 25.0, 0.04, 200.0, pinned = true, 150000, early = true),
-      // main pair at the SAME size: the honest quotient (0.5)
-      BenchReport.Leg(2, 100.0, 0.04, 400.0, pinned = true, 150000, early = false),
-      BenchReport.Leg(8, 50.0, 0.04, 400.0, pinned = true, 150000, early = false))
-    val st = maxState().copy(legs = mixed, mainClips = 150000, earlyClips = 150000)
-    val full = parse(BenchReport.renderFull(st)).get("dedup_scaling")
-    assert(full.get("scaling_efficiency").asDouble() == 0.5)
-    assert(full.get("cpu_parity").asDouble() == 1.0) // 400/400, not 200/400
-    assert(!full.has("early"))
-    // and with NO main legs, the early quotient is used and labeled
-    val onlyEarly = parse(BenchReport.renderFull(st.copy(legs = mixed.take(2))))
-      .get("dedup_scaling")
-    assert(onlyEarly.get("early").asBoolean())
-    assert(onlyEarly.get("scaling_efficiency").asDouble() == 1.0)
   }
 
   test("committedSummary extracts the three headline fields") {
