@@ -22,7 +22,6 @@ final case class GraftConf(
     // SimHash
     simhashBits: Int = 60,
     simhashBands: Int = 4,
-    simhashMaxHamming: Int = 8,
     // verification thresholds (exact Jaccard on shingle sets, operator Q7)
     textJaccardThreshold: Double = 0.7,
     audioJaccardThreshold: Double = 0.6,

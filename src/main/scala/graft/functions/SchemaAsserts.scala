@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
   * `KnownNotNull`: a zero-cost pass-through whose only effect is tightening
   * the STATIC type back to `containsNull=false`. It is an ASSERTION, valid
   * only where the producer provably wrote non-null elements — here, our own
-  * checkpoint writer, whose sidecar schema records exactly which columns
-  * were tight at write time. Cost: none (identity eval; codegen aliases the
-  * child's generated variable), unlike `array_compact`, which would scan
+  * writers: a checkpoint stage's manifest records the schema it wrote, and
+  * the index spill (queries/CodesCache) takes it from the query it wrote.
+  * Cost: none (identity eval; codegen aliases the child's generated
+  * variable), unlike `array_compact`, which would scan
   * every element per row and silently DROP a null if corruption ever
   * produced one.
   */

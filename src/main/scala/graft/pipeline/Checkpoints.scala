@@ -1,30 +1,36 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+
+import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Checkpointed stage boundaries + per-file lineage.
   *
   * The reference's persistence surface is an unimplemented stub
   * (`saveTable`, `/root/reference/hashIndex/StdHashIndex.h:189-192` and
   * equivalents) — this engine adds the real thing, which the north rule
-  * requires: every pipeline stage writes Parquet plus a `_MANIFEST.json`
-  * (stage name, input signature, row count, wall ms, per-output-file row
-  * lineage). On rerun, a stage whose manifest exists and whose input
-  * signature matches is read back instead of recomputed, so a killed job
-  * resumes from the last completed stage with byte-identical results
-  * (everything downstream is a pure function of seeds + inputs).
+  * requires: every pipeline stage writes Parquet plus one metadata file,
+  * `_MANIFEST_<stage>.json`, holding the stage name, input signature, row
+  * count, wall ms, per-output-file row lineage (`partitions`) and the
+  * written `schema`. It is written once, after the parquet write, by tmp
+  * file plus atomic move. On rerun, a stage whose parsed manifest carries
+  * the caller's input signature and the part files' current lineage is
+  * read back instead of recomputed, so a killed job resumes from the last
+  * completed stage with byte-identical results (everything downstream is a
+  * pure function of seeds + inputs).
   *
   * A boundary costs one Spark job, its write; a resumed stage costs none:
-  *  - The read-back takes the sidecar schema (`_SCHEMA_<stage>.json`), so
-  *    no schema-inference job runs; dirs written before the sidecar
-  *    existed keep inference.
+  *  - The read-back takes the manifest's schema, so no schema-inference job
+  *    runs.
   *  - Per-file rows come from the parquet footers of the stage's part
   *    files, read on the driver (metadata only, no job). Zero-row files
   *    are left out, so the lineage equals `input_file_name()` counts of the
@@ -32,6 +38,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - A resume checks that lineage against the manifest: a missing, extra
   *    resized or unreadable part file recomputes the stage, and a resumed
   *    [[StageInfo]] reports the files and rows it read.
+  *  - A manifest that does not parse, or lacks a field (every dir written
+  *    before the schema moved into the manifest), is stale: its stage
+  *    recomputes once.
   *
   * With no checkpoint dir configured the runner is a pass-through (tests
   * that don't exercise resumability pay nothing).
@@ -45,6 +54,8 @@ object Checkpoints {
       wallMs: Long,
       resumed: Boolean,
       files: Seq[(String, Long)])
+
+  private implicit val formats: Formats = DefaultFormats
 
   /** Run (or resume) one named stage. */
   def stage(
@@ -61,47 +72,52 @@ object Checkpoints {
         val dir = s"$root/$name"
         val manifestPath = Paths.get(s"$root/_MANIFEST_$name.json")
         // Spark's file sources widen every array element to nullable on
-        // read (even an explicit read-schema is asNullable'd), so a naive
-        // read-back would CHANGE the stage's schema — and downstream native
-        // kernels (graft.functions.ArraySetExprs) reject nullable-element
-        // arrays at analysis time rather than misread them. A sidecar
-        // schema file records what was written; the read-back re-tightens
-        // those columns with a zero-cost static assertion
-        // (graft.functions.SchemaAsserts): a resumed stage is byte-identical
-        // INCLUDING schema.
-        val schemaPath = Paths.get(s"$root/_SCHEMA_$name.json")
-        def readBack(): DataFrame =
-          if (!Files.exists(schemaPath)) spark.read.parquet(dir) // pre-r5 dir: inferred, widened
-          else {
-            val written = DataType.fromJson(
-              new String(Files.readAllBytes(schemaPath), StandardCharsets.UTF_8)).asInstanceOf[StructType]
-            graft.functions.SchemaAsserts.tightenArrays(spark.read.schema(written).parquet(dir), written)
-          }
-        if (Files.exists(manifestPath)) {
-          val m = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-          // an unreadable footer counts as a changed part file
-          lazy val files = scala.util.Try(partFiles(spark, dir)).toOption.flatten
-          if (m.contains(s""""input_sig": "${jsonEsc(inputSig)}"""") &&
-              files.exists(f => m.contains(s""""partitions": ${lineageJson(f)}}"""))) {
-            val f = files.get
-            return (readBack(), StageInfo(name, inputSig, f.map(_._2).sum, 0L, resumed = true, f))
-          }
-          Files.delete(manifestPath) // stale: input or part files changed → recompute
+        // read, and the native kernels (graft.functions.ArraySetExprs)
+        // reject nullable-element arrays: the read-back re-tightens what the
+        // manifest's schema records as tight (graft.functions.SchemaAsserts,
+        // a zero-cost static assertion), so a resumed stage keeps its schema.
+        def readBack(written: StructType): DataFrame =
+          graft.functions.SchemaAsserts.tightenArrays(spark.read.schema(written).parquet(dir), written)
+        // an absent manifest, or an unreadable footer, counts as a change
+        val resumed = for {
+          (sig, lineage, written) <- readManifest(manifestPath) if sig == inputSig
+          files <- Try(partFiles(spark, dir)).toOption.flatten if files == lineage
+        } yield (readBack(written), StageInfo(name, inputSig, files.map(_._2).sum, 0L, resumed = true, files))
+        resumed.getOrElse {
+          Files.deleteIfExists(manifestPath) // stale: input or part files changed → recompute
+          val t0 = System.nanoTime()
+          val out = compute
+          out.write.mode("overwrite").parquet(dir)
+          val files = partFiles(spark, dir).getOrElse(Nil)
+          val info = StageInfo(name, inputSig, files.map(_._2).sum, (System.nanoTime() - t0) / 1000000,
+            resumed = false, files)
+          val manifest = JObject(
+            "stage" -> JString(name),
+            "input_sig" -> JString(inputSig),
+            "rows" -> JLong(info.rows),
+            "wall_ms" -> JLong(info.wallMs),
+            "partitions" -> JArray(files.map { case (f, n) =>
+              JObject("file" -> JString(f), "rows" -> JLong(n)) }.toList),
+            "schema" -> parse(out.schema.json))
+          val tmp = Paths.get(s"$manifestPath.tmp")
+          Files.write(tmp, compact(render(manifest)).getBytes(StandardCharsets.UTF_8))
+          Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
+            StandardCopyOption.REPLACE_EXISTING)
+          (readBack(out.schema), info)
         }
-        val t0 = System.nanoTime()
-        val out = compute
-        out.write.mode("overwrite").parquet(dir)
-        val tmp = Paths.get(schemaPath.toString + ".tmp")
-        Files.write(tmp, out.schema.json.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, schemaPath, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-        val files = partFiles(spark, dir).getOrElse(Nil)
-        val wallMs = (System.nanoTime() - t0) / 1000000
-        val info = StageInfo(name, inputSig, files.map(_._2).sum, wallMs, resumed = false, files)
-        writeManifest(manifestPath.toString, info)
-        (readBack(), info)
     }
   }
+
+  /** (input signature, lineage, written schema) of a stage manifest; None
+    * when it does not parse or lacks one of them. */
+  private def readManifest(path: JPath): Option[(String, Seq[(String, Long)], StructType)] = Try {
+    val m = parse(new String(Files.readAllBytes(path), StandardCharsets.UTF_8))
+    val JArray(parts) = m \ "partitions"
+    val schema = DataType.fromJson(compact(render((m \ "schema").extract[JObject])))
+    ((m \ "input_sig").extract[String],
+      parts.map(p => ((p \ "file").extract[String], (p \ "rows").extract[Long])),
+      schema.asInstanceOf[StructType])
+  }.toOption
 
   /** (file name, rows) of each non-empty parquet part file of `dir`, from
     * the footers, sorted by name; None when `dir` does not exist. */
@@ -121,26 +137,5 @@ object Checkpoints {
       }
       .filter(_._2 > 0)
       .sortBy(_._1))
-  }
-
-  private def jsonEsc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def lineageJson(files: Seq[(String, Long)]): String =
-    files.map { case (f, n) => s"""{"file": "${jsonEsc(f)}", "rows": $n}""" }.mkString("[", ", ", "]")
-
-  def writeManifest(path: String, info: StageInfo): Unit = {
-    val json =
-      s"""{"stage": "${jsonEsc(info.name)}", "input_sig": "${jsonEsc(info.inputSig)}", """ +
-        s""""rows": ${info.rows}, "wall_ms": ${info.wallMs}, "partitions": ${lineageJson(info.files)}}"""
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 }

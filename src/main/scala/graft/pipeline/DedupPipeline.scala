@@ -30,12 +30,16 @@ object DedupPipeline {
         * — repeated runs in one session otherwise accumulate blocks. */
       cleanup: () => Unit = () => ())
 
+  /** `inputSig` names the input; every stage's checkpoint key is it plus
+    * the whole config (bar `checkpointDir`), so a run under any other
+    * config recomputes instead of resuming the old config's stages. */
   def run(spark: SparkSession, clips: DataFrame, conf: GraftConf,
       inputSig: String = "default"): Result = {
     import spark.implicits._
     val stages = Seq.newBuilder[Checkpoints.StageInfo]
+    val key = s"$inputSig ${conf.copy(checkpointDir = None)}"
     def stage(name: String)(compute: => DataFrame): DataFrame = {
-      val (df, info) = Checkpoints.stage(spark, conf.checkpointDir, name, inputSig)(compute)
+      val (df, info) = Checkpoints.stage(spark, conf.checkpointDir, name, key)(compute)
       stages += info
       df
     }
@@ -99,16 +103,5 @@ object DedupPipeline {
       Seq(signatures, verified).foreach(df => df.unpersist(false))
     }
     Result(clusters, verified, stages.result(), cleanup)
-  }
-
-  /** Dup pairs implied by a clustering: all unordered co-cluster pairs.
-    * (Test/metric utility — mirrors the reference's pairwise scoring,
-    * `/root/reference/hashBitOptimizers/HashError.h:29-83`.) */
-  def coClusterPairs(clusters: DataFrame): DataFrame = {
-    val spark = clusters.sparkSession
-    import spark.implicits._
-    val l = clusters.select($"clip_id".as("a"), $"cluster_id")
-    val r = clusters.select($"clip_id".as("b"), $"cluster_id")
-    l.join(r, "cluster_id").filter($"a" < $"b").select($"a", $"b")
   }
 }

@@ -32,30 +32,10 @@ object SuffixDups {
     * hot-phrase group (bounds the extra rows at SeedProbeLimit·bucketCap). */
   val SeedProbeLimit = 64
 
-  /** clips (clip_id, transcript) → candidate substring edges
-    * (a, b, sources = SrcSubstring, capped), a's text potentially inside
-    * b's, a != b. Verification happens in VerifyPairs. (Standalone form —
-    * tokenizes and hashes transcripts itself; the pipeline uses
-    * [[candidatesFromTokenHashes]] over the signature stage's cached
-    * `toks_h` to avoid a second corpus scan + re-tokenization.) */
-  def candidates(spark: SparkSession, clips: DataFrame, conf: GraftConf): DataFrame = {
-    import spark.implicits._
-    val seed = conf.seed
-    candidatesFromTokenHashes(spark,
-      clips.select($"clip_id", $"transcript").as[(String, String)]
-        .map { case (id, text) =>
-          val toks = graft.kernel.Shingles.tokens(Option(text).getOrElse(""))
-          val toksH = new Array[Long](toks.length)
-          var i = 0
-          while (i < toks.length) { toksH(i) = Hashing.hashString(toks(i), seed); i += 1 }
-          (id, toksH)
-        }.toDF("clip_id", "toks_h"),
-      conf)
-  }
-
-  /** Same candidate stream, fed with precomputed ordered token hashes
-    * (clip_id, toks_h) — identical windows/pairs because the window hash
-    * folds exactly these per-token hashes. */
+  /** Candidate substring edges (a, b, sources = SrcSubstring, capped), a's
+    * text potentially inside b's, a != b, from ordered token hashes
+    * (clip_id, toks_h) — the signature stage's `toks_h`, so the corpus is
+    * tokenized once. Verification happens in VerifyPairs. */
   def candidatesFromTokenHashes(spark: SparkSession, tokens: DataFrame,
       conf: GraftConf): DataFrame = {
     import spark.implicits._

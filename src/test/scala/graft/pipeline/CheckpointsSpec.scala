@@ -11,14 +11,17 @@ import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Checkpoints`: what a stage boundary costs in Spark jobs, the footer
   * lineage against a scan of the read-back, the read-back schema, and
-  * resume validation against the recorded lineage. */
+  * resume validation against the parsed manifest. */
 class CheckpointsSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
+  implicit val formats: Formats = DefaultFormats
 
   def withRoot[T](body: String => T): T = {
     val dir = Files.createTempDirectory("graft-ckpt-spec").toFile
@@ -42,6 +45,11 @@ class CheckpointsSpec extends AnyFunSuite {
   def stage(root: String, name: String = "s")(compute: => DataFrame) =
     Checkpoints.stage(spark, Some(root), name, "sig")(compute)
 
+  def manifestPath(root: String, name: String) = Paths.get(s"$root/_MANIFEST_$name.json")
+
+  def manifest(root: String, name: String): JValue =
+    parse(new String(Files.readAllBytes(manifestPath(root, name)), "UTF-8"))
+
   def partPaths(dir: String): Seq[File] =
     new File(dir).listFiles.toSeq.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
 
@@ -64,8 +72,11 @@ class CheckpointsSpec extends AnyFunSuite {
       val (df, info) = stage(root, "skewed")(skewed)
       assert(info.files === scannedLineage(df))
       assert(info.rows === 2000 && info.files.map(_._2).sum === 2000)
-      val manifest = new String(Files.readAllBytes(Paths.get(s"$root/_MANIFEST_skewed.json")), "UTF-8")
-      info.files.foreach { case (f, n) => assert(manifest.contains(s"""{"file": "$f", "rows": $n}""")) }
+      val m = manifest(root, "skewed")
+      assert((m \ "stage").extract[String] === "skewed" && (m \ "input_sig").extract[String] === "sig")
+      assert((m \ "rows").extract[Long] === 2000)
+      assert((m \ "partitions").extract[List[JObject]]
+        .map(p => ((p \ "file").extract[String], (p \ "rows").extract[Long])) === info.files)
 
       val (empty, emptyInfo) = stage(root, "empty")(narrow(100).filter($"id" < 0))
       assert(scannedLineage(empty) === Nil)
@@ -75,21 +86,44 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
-  test("read-back schema equals the inferred-then-tightened schema, and a dir without a sidecar still reads") {
+  test("read-back schema is the manifest's written schema, tightened; a manifest without one recomputes") {
     withRoot { root =>
       val sigs = Signatures.compute(spark, ClipTableGen.table(spark, 40, 3L), GraftConf()).toDF()
       for ((name, compute) <- Seq("narrow" -> narrow(50), "signatures" -> sigs)) {
         val (df, _) = stage(root, name)(compute)
-        val written = DataType.fromJson(new String(
-          Files.readAllBytes(Paths.get(s"$root/_SCHEMA_$name.json")), "UTF-8")).asInstanceOf[StructType]
+        val written = DataType.fromJson(compact(render(manifest(root, name) \ "schema"))).asInstanceOf[StructType]
+        assert(written === compute.schema, name)
         val inferred = graft.functions.SchemaAsserts.tightenArrays(spark.read.parquet(s"$root/$name"), written)
         assert(df.schema === inferred.schema, name)
-        assert(df.schema.map(f => (f.name, f.dataType)) === compute.schema.map(f => (f.name, f.dataType)), name)
+        val (resumed, info) = stage(root, name)(sys.error("recomputed"))
+        assert(info.resumed && resumed.schema === df.schema, name)
+        // containsNull included: ArrayType equality compares it
+        assert(df.schema.map(f => (f.name, f.dataType)) === written.map(f => (f.name, f.dataType)), name)
       }
-      // a stage written before sidecar schemas existed: inference, widened
-      Files.delete(Paths.get(s"$root/_SCHEMA_narrow.json"))
-      val (old, info) = stage(root, "narrow")(sys.error("recomputed"))
-      assert(info.resumed && old.count() === 50)
+      // the manifest format from before the schema moved into it
+      val files = (manifest(root, "narrow") \ "partitions").extract[List[JObject]]
+        .map(p => s"""{"file": "${(p \ "file").extract[String]}", "rows": ${(p \ "rows").extract[Long]}}""")
+      Files.write(manifestPath(root, "narrow"), ("""{"stage": "narrow", "input_sig": "sig", "rows": 50, """ +
+        s""""wall_ms": 1, "partitions": ${files.mkString("[", ", ", "]")}}""").getBytes("UTF-8"))
+      var computed = 0
+      val (_, old) = stage(root, "narrow")({ computed += 1; narrow(50) })
+      assert(!old.resumed && computed === 1)
+      assert((manifest(root, "narrow") \ "schema").isInstanceOf[JObject])
+      val (again, info) = stage(root, "narrow")(sys.error("recomputed"))
+      assert(info.resumed && again.count() === 50)
+    }
+  }
+
+  test("a truncated manifest recomputes its stage without throwing") {
+    withRoot { root =>
+      var computed = 0
+      def run() = stage(root)({ computed += 1; narrow(100) })._2
+      assert(!run().resumed && computed === 1)
+      val bytes = Files.readAllBytes(manifestPath(root, "s"))
+      Files.write(manifestPath(root, "s"), bytes.take(bytes.length / 2))
+      val again = run()
+      assert(!again.resumed && computed === 2 && again.rows === 100)
+      assert(run().resumed && computed === 2)
     }
   }
 
@@ -139,6 +173,11 @@ class CheckpointsSpec extends AnyFunSuite {
       }
       val (c1, s1) = run()
       assert(s1.forall(!_.resumed))
+      val stageNames = Seq("signatures", "bands", "candidates", "verified", "clusters")
+      assert(s1.map(_.name) === stageNames)
+      // one metadata file per stage, the manifest, and nothing else
+      assert(new File(root).listFiles.filter(_.isFile).map(_.getName).toSet ===
+        stageNames.map(n => s"_MANIFEST_$n.json").toSet)
       val (c2, s2) = run()
       assert(s2.map(s => (s.name, s.resumed)).forall(_._2), s2.map(s => (s.name, s.resumed)).toString)
       assert(s2.map(s => (s.name, s.rows, s.files)) === s1.map(s => (s.name, s.rows, s.files)))
@@ -150,6 +189,18 @@ class CheckpointsSpec extends AnyFunSuite {
         "candidates" -> true, "verified" -> false, "clusters" -> true))
       assert(c3 === c1)
       assert(s3.find(_.name == "verified").get.rows === s1.find(_.name == "verified").get.rows)
+    }
+  }
+
+  test("a pipeline run resumes all five stages under the same config and none under a changed one") {
+    withRoot { root =>
+      val df = ClipTableGen.table(spark, 120, 42L).toDF()
+      val conf = GraftConf(checkpointDir = Some(root))
+      def resumed(c: GraftConf) = DedupPipeline.run(spark, df, c).stages.map(s => (s.name, s.resumed))
+      assert(resumed(conf).forall(!_._2))
+      assert(resumed(conf).forall(_._2))
+      val changed = resumed(conf.copy(textJaccardThreshold = 0.8))
+      assert(changed.size === 5 && changed.forall(!_._2), changed.toString)
     }
   }
 }

@@ -27,14 +27,6 @@ class PlanSpec extends AnyFunSuite {
       assert(!scan.contains(col), s"column $col should be pruned from the scan:\n$scan")
   }
 
-  test("suffix pass scan prunes the bytes column (text-only stage never reads audio)") {
-    val clips = spark.read.parquet(clipsDir)
-    val cand = SuffixDups.candidates(spark, clips, GraftConf())
-    val scan = cand.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")
-    assert(scan.contains("ReadSchema"))
-    assert(!scan.contains("bytes"), s"bytes should be pruned from the suffix scan:\n$scan")
-  }
-
   test("relational join query uses a broadcast join for the small dimension side") {
     val plan = graft.queries.RelQueries.queries("q_join_agg")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString

@@ -1,9 +1,12 @@
 #!/bin/bash
-# Run a graft main class via plain java (no sbt lock): compiled classes +
-# the image's Spark jars. Usage: run_main.sh graft.Verify <args...>
+# Run a graft main class via plain java (no sbt lock): this checkout's
+# compiled classes + the Spark jars its build.sbt names (unmanagedBase).
+# Usage: run_main.sh graft.Verify <args...>
 # Env: SPARK_DRIVER_MEM (default 24g), plus whatever the main reads.
 set -e
 MAIN=$1; shift
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+JARS=$(sed -n 's/^unmanagedBase := file("\(.*\)").*/\1/p' "$ROOT/build.sbt")
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -15,5 +18,5 @@ done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$JARS/*" \
   "$MAIN" "$@"
