@@ -140,6 +140,11 @@ object Bench {
     (legSecs.sum + pairOverheadSec) * 1.1 + 30
   }
 
+  /** Budget a further main pair must leave for the parity retry: one
+    * [[legGate]] at the contested level, nothing while the levels agree. */
+  private[graft] def retryReserve(legs: Seq[Leg], baseN: Int, n: Int): Double =
+    contestedLevel(legs, baseN).fold(0.0)(legGate(legs, _, baseN, n))
+
   /** Budget one parity-retry leg at `cores` needs: the level's fastest
     * measured leg +20 %, plus 60 s for JVM start and warmup. */
   private[graft] def legGate(legs: Seq[Leg], cores: Int, baseN: Int, n: Int): Double = {
@@ -432,10 +437,12 @@ object Bench {
     }
 
     phase = "scaling-pairs"
-    while (pairsDone < reps && (pairsDone == 0 || remaining > pairGate(times.toSeq, baseN, nClips))) {
+    // a contaminated pair holds back the retry's budget before another pair
+    def nextPairGate = pairGate(times.toSeq, baseN, nClips) + retryReserve(times.toSeq, baseN, nClips)
+    while (pairsDone < reps && (pairsDone == 0 || remaining > nextPairGate)) {
       Seq(baseN, 4 * baseN).foreach(once)
       pairsDone += 1
-      if (pairsDone < reps && remaining <= pairGate(times.toSeq, baseN, nClips))
+      if (pairsDone < reps && remaining <= nextPairGate)
         System.err.println(f"[bench] budget ${remaining}%.0f s: stopping after $pairsDone of $reps pairs")
     }
 

@@ -2,7 +2,9 @@ package graft.pipeline
 
 import graft.conf.GraftConf
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.ColumnBridge
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -56,10 +58,19 @@ object CandidatePairs {
 
   /** bands (band_key: Long, src: Int, clip_id: String) → raw pair stream
     * (a, b, sources, capped); every member probes. */
-  def fromBands(spark: SparkSession, bands: DataFrame, conf: GraftConf): DataFrame = {
-    import spark.implicits._
-    bucketPairs(bands.select($"band_key", $"clip_id", $"src", lit(true))
-      .as[(Long, String, Int, Boolean)], conf, cappedProbes = 0)
+  def fromBands(spark: SparkSession, bands: DataFrame, conf: GraftConf): DataFrame =
+    bucketPairs(bandMembers(bands), conf, cappedProbes = 0)
+
+  /** Band rows as bucket members. `band_key` and `src` are asserted
+    * non-null — [[Signatures]] zips equal-length key and source arrays of
+    * non-null elements, and a null fails the task instead of reading as 0 —
+    * so the members have the substring pass's schema, and the two passes
+    * share one set of generated sort and (de)serializer classes. */
+  private[pipeline] def bandMembers(bands: DataFrame): Dataset[(Long, String, Int, Boolean)] = {
+    import bands.sparkSession.implicits._
+    def nonNull(c: String) = ColumnBridge.column(AssertNotNull(ColumnBridge.expression(bands.col(c)))).as(c)
+    bands.select(nonNull("band_key"), $"clip_id", nonNull("src"), lit(true))
+      .as[(Long, String, Int, Boolean)]
   }
 
   private[pipeline] def bucketPairs(members: Dataset[(Long, String, Int, Boolean)],

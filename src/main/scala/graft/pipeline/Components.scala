@@ -2,14 +2,17 @@ package graft.pipeline
 
 import scala.collection.mutable
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Connected components over the verified-edge list, pure DataFrame ops —
-  * hash-min label propagation (each vertex repeatedly takes the min label in
-  * its closed neighborhood) with pointer doubling and per-iteration lineage
-  * truncation.
+/** Connected components over the verified-edge list: hash-min label
+  * propagation (each vertex repeatedly takes the min label in its closed
+  * neighborhood) with pointer doubling and per-round lineage truncation.
   *
   * The reference has no clustering stage (its queries return kNN lists);
   * dedup needs the transitive closure of dup edges. Design points for the
@@ -18,67 +21,62 @@ import org.apache.spark.storage.StorageLevel
   *  - Only edge-endpoint vertices enter the iteration. Singletons (the vast
   *    majority of a deduped corpus) are attached at the end with a single
   *    left join — the loop's working set is O(|edges|), not O(|corpus|).
-  *  - ONE Spark job per round: the round's min-aggregated labels are
-  *    lazily local-checkpointed and the convergence fingerprint aggregate
-  *    is the action that materializes them — computation, lineage
-  *    truncation, caching, and convergence detection share a single job
-  *    (a per-JOB latency floor is what caps local scaling efficiency; a
-  *    separate fingerprint job per round doubled the loop's floor).
-  *  - Convergence is detected by an order-insensitive label fingerprint
-  *    (bit_xor of xxhash64(vertex, label)) over the round's min-aggregated
-  *    labels. Labels only ever decrease, so fingerprint equality ⇔ the
-  *    propagation fixpoint (= per-component min) up to hash cancellation:
-  *    a change set whose per-row old⊕new hashes XOR to zero (probability
-  *    2^-64 per round, the single-collision case being one of them) would
-  *    terminate one round early; accepted and documented.
+  *  - The loop runs on pair RDDs co-partitioned by one `HashPartitioner`,
+  *    not on DataFrames. Its operators (union-find passes, min over string
+  *    labels, joins, a fingerprint fold) need no optimizer, and every
+  *    Catalyst plan is whole-stage code that the session's codegen cache
+  *    must hold: a DataFrame loop planned each round, fingerprint, sizing
+  *    scan and exit anew (57 of a checkpointed pipeline run's 122 cache
+  *    keys, where Spark's cache holds 100), so every warm run recompiled
+  *    ~90 classes. Only the edge read and the exit join are DataFrames.
+  *  - The partition count comes from the data volume only (≈50k edge rows
+  *    per partition, floor 4), never from the core count, so the same input
+  *    runs the same loop at every cluster size. The caller passes the edge
+  *    rows it already knows (the pipeline: the verified stage's footer
+  *    count, an upper bound); without one the edges are counted.
   *  - The symmetrized edges are CONTRACTED before the loop by
   *    `ContractionPasses` = 3 per-partition union-find passes (after *BTS:
-  *    Load-Balanced Distributed Union-Find*, ICDE 2024): hash-repartition
-  *    on `src`, run [[localRoots]] over each partition's edges, emit
+  *    Load-Balanced Distributed Union-Find*, ICDE 2024): hash-partition on
+  *    `src`, run [[localRoots]] over each partition's edges, emit
   *    `(v, root)` for every local non-root `v` with root = the min
   *    `clip_id` of `v`'s local component, symmetrize. Each output edge joins
   *    two vertices connected in the input and every input edge's endpoints
   *    share a root, so components and their min labels are unchanged. The
-  *    shuffles are stages of the job that materializes the edge cache: no
-  *    extra jobs. The skew-capped generator's id-order chains (width 2,
-  *    200-member ad and music-only clusters) need 7 loop rounds after
-  *    round 0 uncontracted, 5 after one hash pass, 2 after two and 1 after
-  *    three — one round is the minimum, it confirms the fixpoint, so a
-  *    fourth pass cannot save a round. Range partitioning (3 rounds after
-  *    one pass) costs a sampling job. The rows each pass
-  *    emits follow row arrival order (vertex slots are assigned on first
-  *    sight) and their set depends on the hash partitioning; the fixpoint,
-  *    the per-component min, depends on neither. Union-find memory per
-  *    task is the partition's distinct vertices (≤ 2 × its rows); a pass
-  *    emits at most one forest edge per input row, symmetrized, so it at
-  *    most doubles its input. In practice the list shrinks: 19,550 →
-  *    14,218 rows on `dedup_skew_ckpt` seed 7 after two passes.
+  *    skew-capped generator's id-order chains (width 2, 200-member ad and
+  *    music-only clusters) need 7 loop rounds after round 0 uncontracted,
+  *    5 after one hash pass, 2 after two and 1 after three — one round is
+  *    the minimum, it confirms the fixpoint, so a fourth pass cannot save a
+  *    round. The rows each pass emits follow row arrival order and their
+  *    set depends on the partitioning; the fixpoint, the per-component min,
+  *    depends on neither. Union-find memory per task is the partition's
+  *    distinct vertices (≤ 2 × its rows); a pass at most doubles its input.
+  *  - The contracted list `und` is partitioned on `src` and persisted, so
+  *    round 0 (min over each vertex's neighbors) is a narrow reduce and each
+  *    round's message join is a narrow per-partition hash lookup into the
+  *    (co-partitioned) labels.
   *  - One pointer-jump join per round (label ← label∘label) turns the
   *    chain-shaped components produced by the skew-capped pair generator
-  *    into O(log d) rounds. The jump is applied LAZILY on top of the
-  *    cached min-aggregation (both sides of its self-join scan the cache —
-  *    no recompute of the aggregation subplan, which plain exchange reuse
-  *    does not dedupe across the nested self-join).
-  *  - The symmetrized edge list is pre-partitioned on the join key and
-  *    persisted once, so the per-round message join reshuffles only the
-  *    (much smaller) label side; the edge side is a cache scan every
-  *    round.
-  *  - The exit joins the converged min-aggregation itself to the vertices,
-  *    not its jump: at the fixpoint every label is its component's min,
-  *    whose own label is itself, so the jump is the identity — and its lazy
-  *    self-join would cost a broadcast job and stages of its own.
+  *    into O(log d) rounds. The exit uses the converged min-aggregation
+  *    itself: at the fixpoint every label is its component's min, whose own
+  *    label is itself, so the jump is the identity.
+  *  - Convergence is detected by an order-insensitive label fingerprint
+  *    (XOR of Spark's `xxhash64(clip_id, label)` per row) over each round's
+  *    min-aggregated labels, folded by the job that materializes the round.
+  *    Labels only ever decrease, so fingerprint equality ⇔ the propagation
+  *    fixpoint (= per-component min) up to hash cancellation: a change set
+  *    whose per-row old⊕new hashes XOR to zero (probability 2^-64 per round,
+  *    the single-collision case being one of them) would terminate one
+  *    round early; accepted and documented.
   *  - Lineage truncation per round: reliable `checkpoint()` under
   *    `checkpointDir` (an executor loss mid-loop recovers from files —
-  *    `localCheckpoint` blocks would die with the executor), else lazy
-  *    `localCheckpoint` materialized by the fingerprint action. The
-  *    previous round's blocks are freed once the next round is
-  *    materialized, so long runs don't accumulate block-manager storage.
-  *  - AQE is disabled inside the loop: re-planning every tiny iterative
-  *    join costs more than it saves; it is restored afterwards.
+  *    `localCheckpoint` blocks would die with the executor), else
+  *    `localCheckpoint`. The previous round is unpersisted once the next is
+  *    materialized, and `und` once the loop ends; in reliable mode the
+  *    result reads the last round's files, in memory its blocks.
   *
-  * Labels are the `clip_id` strings themselves (min = lexicographic), which
-  * avoids the birthday collisions of 64-bit hashed labels at 10^12 rows
-  * and keeps resume byte-identical.
+  * Labels are the `clip_id` strings themselves, min in Spark's string order
+  * (UTF-8 bytes), which avoids the birthday collisions of 64-bit hashed
+  * labels at 10^12 rows and keeps resume byte-identical.
   */
 object Components {
 
@@ -121,167 +119,120 @@ object Components {
     }
   }
 
+  /** The lesser of two labels in Spark's string order (UTF-8 bytes, i.e.
+    * code points). `String` order compares UTF-16 units, which puts a
+    * surrogate pair (U+10000 and up) before U+E000..U+FFFF. */
+  private[pipeline] def least(x: String, y: String): String = {
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n && x.charAt(i) == y.charAt(i)) i += 1
+    if (i == n) { if (x.length <= y.length) x else y }
+    else {
+      var c = x.charAt(i).toInt
+      var d = y.charAt(i).toInt
+      if (c >= 0xd800 && d >= 0xd800) { // map both to code-point order
+        c += (if (c >= 0xe000) -0x800 else 0x2000)
+        d += (if (d >= 0xe000) -0x800 else 0x2000)
+      }
+      if (c < d) x else y
+    }
+  }
+
+  /** Spark's `xxhash64(clip_id, label)` of one labeled vertex. */
+  private def labelHash(v: String, label: String): Long =
+    XXH64.hashUTF8String(UTF8String.fromString(label),
+      XXH64.hashUTF8String(UTF8String.fromString(v), 42L))
+
   /** vertices: (clip_id), edges: (a, b) → (clip_id, cluster_id).
-    * Singletons keep themselves as cluster_id. */
+    * Singletons keep themselves as cluster_id. `edgeRows` is the edge
+    * count or an upper bound of it; negative means unknown, and the edges
+    * are counted to size the loop. */
   def connectedComponents(
       spark: SparkSession,
       vertices: DataFrame,
       edges: DataFrame,
       maxIterations: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None,
+      edgeRows: Long = -1L): DataFrame = {
     import spark.implicits._
+    val sc = spark.sparkContext
+    val reliable = checkpointDir.isDefined
+    // every call: a session-wide dir set by an earlier run would collect
+    // (and keep) this run's round files
+    checkpointDir.foreach(d => sc.setCheckpointDir(rddCheckpointDir(d)))
 
-    val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled").getOrElse("true")
-    val shuffleWas = spark.conf.getOption("spark.sql.shuffle.partitions").getOrElse("200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val sc = spark.sparkContext
-      val reliable = checkpointDir.isDefined
-      // every call: a session-wide dir set by an earlier run would collect
-      // (and keep) this run's round files
-      checkpointDir.foreach(d => sc.setCheckpointDir(rddCheckpointDir(d)))
-      // Reliable mode materializes eagerly (checkpoint files must exist for
-      // fault recovery); local mode defers to the caller's next action —
-      // here always the fingerprint aggregate — so each round is one job.
-      def ckpt(df: DataFrame): DataFrame =
-        if (reliable) df.checkpoint() else df.localCheckpoint(false)
+    // edges are distinct unordered pairs upstream (candidates are
+    // groupBy(a,b)-deduped), and min is multiset-safe anyway
+    val pairs = edges.select($"a", $"b").as[(String, String)].rdd
+    val rows = if (edgeRows >= 0) edgeRows else pairs.count()
+    val p = new HashPartitioner(math.min(4096L, math.max(4L, 2L * rows / 50000L)).toInt)
 
-      // Per-round block rotation: free the previous round's truncated-
-      // lineage blocks once the current round is materialized (they can no
-      // longer be referenced — each round reads only its predecessor).
-      def persistedIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-      var prevRoundIds: Set[Int] = Set.empty
-      def rotateBlocks(before: Set[Int]): Unit = {
-        val created = persistedIds -- before
-        prevRoundIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-        prevRoundIds = created
-      }
+    var contracted = pairs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+    for (_ <- 1 to ContractionPasses)
+      contracted = contracted.partitionBy(p)
+        .mapPartitions(rows => localRoots(rows).flatMap { case (v, r) => Iterator((v, r), (r, v)) })
+    val und = contracted.partitionBy(p).persist(StorageLevel.MEMORY_AND_DISK)
 
-      // The loop's working set is O(|edges|) — orders of magnitude smaller
-      // than the corpus after endpoint restriction. Size its shuffles by its
-      // own DATA volume only (≈50k rows/partition, floor 4): at test scale
-      // this collapses session-default microshuffles to a handful, while
-      // edge volumes large enough to be real work still spread wide. The
-      // count deliberately does NOT depend on the cluster/core count — the
-      // plan (partitioning included) is a property of the job, so the same
-      // input produces the same loop plan at every cluster size (the
-      // two-cluster-size scaling protocol compares identical plans; a
-      // cores-derived term here handed the bigger cluster extra
-      // tiny-partition rounds). Sized from the edge count (one cheap scan
-      // of the already-materialized verify stage) BEFORE building the
-      // symmetrized list, so the list can be pre-partitioned on its join
-      // key in the same pass that caches it. Restored before the final
-      // corpus-sized join below.
-      val edgeRows = edges.count()
-      val loopParts = math.min(4096L, math.max(4L, 2L * edgeRows / 50000L)).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-
-      // edges are distinct unordered pairs upstream (candidates are
-      // groupBy(a,b)-deduped), so the symmetrized list needs no distinct —
-      // and min-aggregation is multiset-safe anyway. Contracted first
-      // (class doc): each pass hash-partitions on src and replaces the
-      // partition's edges by its union-find forest, symmetrized.
-      var contracted = edges.select($"a".as("src"), $"b".as("dst"))
-        .union(edges.select($"b".as("src"), $"a".as("dst")))
-      for (_ <- 1 to ContractionPasses)
-        contracted = contracted.repartition(loopParts, $"src").as[(String, String)]
-          .mapPartitions(rows => localRoots(rows).flatMap { case (v, r) => Iterator((v, r), (r, v)) })
-          .toDF("src", "dst")
-      // Pre-partitioned and pre-sorted on the message-join key: the cached
-      // partitioning (and, where the planner honors cached ordering, the
-      // sort) satisfies the join requirement, so each round reshuffles only
-      // the label side.
-      val und = contracted
-        .repartition(loopParts, $"src")
-        .sortWithinPartitions($"src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Materialize the edge cache BEFORE the first persistedIds snapshot.
-      // DataFrame.persist registers its RDD in sc.getPersistentRDDs only at
-      // first materialization — deferring that to the round-0 fingerprint
-      // job would make rotateBlocks count und as a round-0 ckpt block and
-      // sweep it at round 1, so every round >= 2 would silently recompute
-      // the whole symmetrized edge list (the design contract is one cache
-      // scan per round). One extra job per CC invocation, amortized over
-      // all rounds; it also keeps reliable-checkpoint mode's eager round-0
-      // job from registering und inside a rotation window.
-      und.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
-
-      def fingerprint(labels: DataFrame): Long =
-        labels.agg(coalesce(expr("bit_xor(xxhash64(clip_id, label))"), lit(0L)))
-          .head().getLong(0)
-
-      // label ← label(label): the shortcut only improves (invariant
-      // label(v) ≤ v). Applied lazily on top of the round's CACHED
-      // min-aggregation — both join sides scan the cache.
-      def jump(m: DataFrame): DataFrame =
-        m.join(m.select($"clip_id".as("label"), $"label".as("ll")), Seq("label"))
-          .select($"clip_id", $"ll".as("label"))
-
-      // Iteration 1 folded into one aggregation: with identity initial
-      // labels, min-over-closed-neighborhood(v) = least(v, min(neighbors)).
-      // Every endpoint appears as dst of the symmetrized list (contraction
-      // keeps each one: it is a non-root, or the root a non-root points
-      // at), so this covers the whole endpoint vertex set without a
-      // separate distinct + identity-label pass.
-      var before = persistedIds
-      val minned0 = ckpt(
-        und.groupBy($"dst".as("clip_id")).agg(min($"src").as("m"))
-          .select($"clip_id", least($"clip_id", $"m").as("label")))
-      // the fingerprint action materializes the aggregation (and the und
-      // cache): one job for compute + truncate + converge-check
-      var fp = fingerprint(minned0)
-      rotateBlocks(before)
-      var labels = jump(minned0)
-
-      var minned = minned0 // the latest round's min-aggregation
-      val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
-      var converged = false
-      var iter = 0
-      // maxIterations bounds the loop rounds; hitting it is an error, never
-      // a partial labeling (confirming a fixpoint takes one round)
-      while (!converged && iter < maxIterations) {
-        val itT0 = System.nanoTime()
-        before = persistedIds
-        // min label over closed neighborhood
-        val msgs = und
-          .join(labels.withColumnRenamed("clip_id", "src"), Seq("src"))
-          .select($"dst".as("clip_id"), $"label")
-        val nextMin = ckpt(
-          labels.union(msgs).groupBy($"clip_id").agg(min($"label").as("label")))
-        // Convergence compares successive MIN-AGGREGATIONS: nextMin is a
-        // deterministic function of the previous round's minned, so equal
-        // fingerprints ⇒ every later round is identical ⇒ the propagation
-        // fixpoint (= per-component min) is reached. The jump stays lazy:
-        // it only accelerates propagation and is identity at the fixpoint.
-        val nfp = fingerprint(nextMin)
-        rotateBlocks(before)
-        labels = jump(nextMin)
-        minned = nextMin
-        converged = nfp == fp
-        fp = nfp
-        iter += 1
-        if (verbose)
-          System.err.println(f"[cc] iter=$iter wall=${(System.nanoTime() - itT0) / 1e9}%.2fs converged=$converged")
-      }
-      if (!converged) {
-        und.unpersist(false)
-        throw new IllegalStateException(
-          s"connected components: no fixpoint after round $iter (maxIterations = $maxIterations)")
-      }
-
-      // restore session-scale shuffle sizing before planning the
-      // corpus-sized singleton join
-      spark.conf.set("spark.sql.shuffle.partitions", shuffleWas)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      // minned, not jump(minned): identity at the fixpoint (class doc)
-      val out = vertices.select($"clip_id")
-        .join(minned, Seq("clip_id"), "left")
-        .select($"clip_id", coalesce($"label", $"clip_id").as("cluster_id"))
-      und.unpersist(false)
-      out
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", shuffleWas)
+    // Persisted and marked for truncation; the fingerprint fold is the job
+    // that computes it (reliable mode then writes its files from the blocks).
+    def round(labels: RDD[(String, String)]): RDD[(String, String)] = {
+      if (reliable) labels.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      else labels.localCheckpoint()
+      labels
     }
+    def fingerprint(labels: RDD[(String, String)]): Long =
+      labels.map { case (v, l) => labelHash(v, l) }.fold(0L)(_ ^ _)
+    // (y, label of x) for each (x, y) of `keyed`: both sides are partitioned
+    // by p, so each task joins against one partition of the labels in a
+    // hash map (a cogroup would buffer both sides and shuffle with Java
+    // serialization)
+    def lookup(keyed: RDD[(String, String)], labels: RDD[(String, String)]): RDD[(String, String)] =
+      keyed.zipPartitions(labels) { (ps, ls) =>
+        val label = new java.util.HashMap[String, String]()
+        ls.foreach { case (v, l) => label.put(v, l) }
+        ps.map { case (x, y) => (y, label.get(x)) }
+      }
+    // label ← label(label): the shortcut only improves (label(v) ≤ v); every
+    // label is itself a labeled vertex
+    def jump(m: RDD[(String, String)]): RDD[(String, String)] =
+      lookup(m.map(_.swap).partitionBy(p), m).partitionBy(p)
+
+    // Round 0, with identity initial labels: least(v, min neighbor). Every
+    // endpoint is a key of the symmetrized list (contraction keeps each
+    // one), so this covers the whole endpoint vertex set.
+    var minned = round(und.reduceByKey(p, least _)
+      .mapPartitions(_.map { case (v, m) => (v, least(v, m)) }, preservesPartitioning = true))
+    var fp = fingerprint(minned)
+    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
+    var converged = false
+    var iter = 0
+    // maxIterations bounds the loop rounds; hitting it is an error, never
+    // a partial labeling (confirming a fixpoint takes one round)
+    while (!converged && iter < maxIterations) {
+      val itT0 = System.nanoTime()
+      val labels = jump(minned)
+      val msgs = lookup(und, labels).reduceByKey(p, least _)
+      val next = round(labels.union(msgs).reduceByKey(p, least _))
+      // Convergence compares successive MIN-AGGREGATIONS: next is a
+      // deterministic function of minned, so equal fingerprints ⇒ every
+      // later round is identical ⇒ the fixpoint is reached.
+      val nfp = fingerprint(next)
+      minned.unpersist(false)
+      minned = next
+      converged = nfp == fp
+      fp = nfp
+      iter += 1
+      if (verbose)
+        System.err.println(f"[cc] iter=$iter wall=${(System.nanoTime() - itT0) / 1e9}%.2fs converged=$converged")
+    }
+    und.unpersist(false)
+    if (reliable || !converged) minned.unpersist(false) // reliable: the result reads its files
+    if (!converged)
+      throw new IllegalStateException(
+        s"connected components: no fixpoint after round $iter (maxIterations = $maxIterations)")
+
+    vertices.select($"clip_id")
+      .join(minned.toDF("clip_id", "label"), Seq("clip_id"), "left")
+      .select($"clip_id", coalesce($"label", $"clip_id").as("cluster_id"))
   }
 }

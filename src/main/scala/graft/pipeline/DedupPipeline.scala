@@ -80,6 +80,8 @@ object DedupPipeline {
       releaseVerify = v.release
       v.edges
     })
+    // its footer row count bounds CC's edges (-1 in memory: CC counts them)
+    val verifiedRows = stages.result().last.rows
     // checkpoint mode materializes the stage to parquet eagerly — the text
     // phase can be released immediately; persist mode defers to cleanup()
     if (conf.checkpointDir.isDefined) releaseVerify()
@@ -90,7 +92,7 @@ object DedupPipeline {
       val vertices = signatures.select($"clip_id")
       val edges = verified.filter($"accepted").select($"a", $"b")
       Components.connectedComponents(spark, vertices, edges, conf.maxCcIterations,
-        conf.checkpointDir)
+        conf.checkpointDir, verifiedRows)
     }
     // the clusters stage is parquet now: CC's round checkpoints are garbage
     conf.checkpointDir.foreach { d =>

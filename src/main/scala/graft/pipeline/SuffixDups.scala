@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.conf.GraftConf
 import graft.kernel.Hashing
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Exact-substring duplicate pass: finds pairs (a, b) where a's full token
   * sequence appears verbatim inside b's — duplicates MinHash misses because
@@ -37,11 +37,17 @@ object SuffixDups {
     * (clip_id, toks_h) — the signature stage's `toks_h`, so the corpus is
     * tokenized once. Verification happens in VerifyPairs. */
   def candidatesFromTokenHashes(spark: SparkSession, tokens: DataFrame,
-      conf: GraftConf): DataFrame = {
-    import spark.implicits._
+      conf: GraftConf): DataFrame =
+    CandidatePairs.bucketPairs(windowMembers(tokens, conf), conf, cappedProbes = SeedProbeLimit)
+
+  /** One bucket member per distinct (window hash, doc), probing when the
+    * window is the doc's first. */
+  private[pipeline] def windowMembers(tokens: DataFrame,
+      conf: GraftConf): Dataset[(Long, String, Int, Boolean)] = {
+    import tokens.sparkSession.implicits._
     val w = conf.substringWindow
     val seed = conf.seed
-    val windows = tokens.select($"clip_id", $"toks_h").as[(String, Array[Long])]
+    tokens.select($"clip_id", $"toks_h").as[(String, Array[Long])]
       .flatMap { case (id, toksH) =>
         if (toksH == null || toksH.length < w) Iterator.empty
         else {
@@ -61,6 +67,5 @@ object SuffixDups {
           out.result().iterator
         }
       }
-    CandidatePairs.bucketPairs(windows, conf, cappedProbes = SeedProbeLimit)
   }
 }

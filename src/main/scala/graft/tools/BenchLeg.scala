@@ -19,10 +19,14 @@ import org.apache.spark.sql.SparkSession
   * mask, so auxiliary parallelism scales with the leg too.
   *
   * Protocol per leg: untimed warmup on a row-limited prefix (JIT +
-  * whole-stage-codegen compilation of the same generated classes the timed
-  * run uses — a cold first run burns ~3x the CPU of a warm one),
-  * then ONE timed full run. The parent interleaves (N, 4N) legs and takes
-  * best-of, so per-leg JVM cold-start stays out of the timed window.
+  * whole-stage-codegen compilation of the generated classes the timed run
+  * uses — a cold first run burns ~3x the CPU of a warm one), then ONE timed
+  * full run. The warmup spares the timed run its compiles only while a run's
+  * classes fit Spark's codegen cache (100 entries): before the clusters
+  * stage ran on pair RDDs a run needed ~120 keys, and an in-memory run
+  * recompiled 86 classes however warm. The parent interleaves (N, 4N)
+  * legs and takes best-of, so per-leg JVM cold-start stays out of the timed
+  * window.
   *
   * Shuffle partitions are FIXED (passed by the parent, same for both
   * levels): the job's plan — partition count included — is a property of

@@ -22,26 +22,45 @@ class BenchSpec extends AnyFunSuite {
   private def withParity(parity: Double): Seq[Leg] =
     Seq(leg(2, 273.812, 600.0), leg(8, 91.373, 600.0 * parity))
 
-  test("the default budget admits at least two main pairs after headlines and synth") {
-    val budget = 1800.0
+  private val budget = 1800.0
+
+  /** Each replayed leg's wall: the timed run, +20 % for the untimed warmup
+    * on 100k of the 500k rows, +15 s for child JVM and session start. */
+  private def legWall(l: Leg): Double = l.sec * 1.2 + 15
+
+  /** The default run replayed on r05's legs up to the end of its main
+    * pairs: (pairs run, legs, elapsed seconds). */
+  private def replayPairs(): (Int, Seq[Leg], Double) = {
     // r05's 13 headline queries sum to 23.0 s; 120 s also covers JVM and
     // session start and the untimed warmup query, with margin
     var elapsed = 120.0
     assert(budget - elapsed > Bench.scalingCost(n) + 60, "main input would be resized")
     elapsed += n * Bench.secPerClipSynth // the planned synth
-    // each replayed leg: the timed run, +20 % for the untimed warmup on
-    // 100k of the 500k rows, +15 s for child JVM and session start
-    val pairWall = r05.map(l => l.sec * 1.2 + 15).sum
     val legs = scala.collection.mutable.ArrayBuffer.empty[Leg]
     var pairs = 0
     // the scaling-pairs loop condition of Bench.main
-    while (pairs < 3 && (pairs == 0 || budget - elapsed > Bench.pairGate(legs.toSeq, baseN, n))) {
+    while (pairs < 3 && (pairs == 0 || budget - elapsed >
+        Bench.pairGate(legs.toSeq, baseN, n) + Bench.retryReserve(legs.toSeq, baseN, n))) {
       legs ++= r05
-      elapsed += pairWall
+      elapsed += r05.map(legWall).sum
       pairs += 1
     }
+    (pairs, legs.toSeq, elapsed)
+  }
+
+  test("the default budget admits at least two main pairs after headlines and synth") {
+    val (pairs, _, elapsed) = replayPairs()
     assert(pairs >= 2, s"only $pairs pair(s) fit; elapsed $elapsed s")
     assert(elapsed <= budget)
+  }
+
+  test("r05's legs leave the budget for the 8c parity retry after the main pairs") {
+    // without the reserve a third pair ran and left ~151 s, under legGate(8) ≈ 170 s
+    val (pairs, legs, elapsed) = replayPairs()
+    assert(Bench.contestedLevel(legs, baseN).contains(8))
+    assert(Bench.retryReserve(legs, baseN, n) === Bench.legGate(legs, 8, baseN, n))
+    assert(budget - elapsed > Bench.legGate(legs, 8, baseN, n), s"$pairs pairs, elapsed $elapsed s")
+    assert(elapsed + legWall(r05(1)) <= budget)
   }
 
   test("gates come from the measured legs, with no quiet-wait allowance") {
@@ -59,6 +78,7 @@ class BenchSpec extends AnyFunSuite {
     val full = Seq(leg(2, 361.036, 693.29), leg(8, 92.21, 693.02),
       leg(8, 124.32, 904.98), leg(2, 362.167, 701.61))
     assert(Bench.contestedLevel(full, baseN).isEmpty)
+    assert(Bench.retryReserve(full, baseN, n) === 0.0)
   }
 
   test("a 2c-side storm at parity 0.878 asks for a retry at 2 cores") {

@@ -1,17 +1,23 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 
 import scala.util.Random
 
 import graft.SparkTestBase
 import graft.conf.GraftConf
+import graft.synth.ClipTableGen
+import graft.tools.Scratch
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{arrays_zip, explode}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `CandidatePairs.bucketPairs` against a plain-Scala reference of the
   * bucket rules (class doc), as sorted multisets of (a, b, sources, capped)
-  * rows, over generated buckets. */
+  * rows, over generated buckets; and the member schema its two callers
+  * feed it. */
 class CandidatePairsSpec extends AnyFunSuite {
   import CandidatePairsSpec._
   lazy val spark = SparkTestBase.spark
@@ -33,6 +39,26 @@ class CandidatePairsSpec extends AnyFunSuite {
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(50), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("band and substring members reach bucketPairs with one schema; band pairs are unchanged") {
+    val conf = GraftConf()
+    val sigs = Signatures.compute(spark, ClipTableGen.table(spark, 120, 42L).toDF(), conf).toDF()
+    val bands = sigs.select($"clip_id", explode(arrays_zip($"band_keys", $"band_srcs")).as("z"))
+      .select($"z.band_keys".as("band_key"), $"z.band_srcs".as("src"), $"clip_id")
+    val dir = Files.createTempDirectory("graft-members").toFile
+    try {
+      bands.write.mode("overwrite").parquet(dir.getPath)
+      val readBack = spark.read.parquet(dir.getPath) // every field nullable
+      def fed(m: Dataset[Member]) = m.toDF("key", "id", "src", "probe").schema
+      val substring = fed(SuffixDups.windowMembers(sigs.select($"clip_id", $"toks_h"), conf))
+      for (b <- Seq(bands, readBack)) {
+        assert(fed(CandidatePairs.bandMembers(b)) === substring, b.schema.treeString)
+        val members = b.as[(Long, Int, String)].collect().toSeq.map { case (k, s, id) => (k, id, s, true) }
+        assert(CandidatePairs.fromBands(spark, b, conf).as[Pair].collect().toSeq.sorted ===
+          reference(members, conf.bucketCap, conf.chainWidth, 0).sorted)
+      }
+    } finally Scratch.deleteRec(dir)
   }
 }
 

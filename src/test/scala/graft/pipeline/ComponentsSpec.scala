@@ -10,6 +10,7 @@ import graft.SparkTestBase
 import graft.conf.GraftConf
 import graft.synth.ClipTableGen
 import graft.tools.Scratch
+import org.apache.spark.sql.functions.min
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -126,6 +127,38 @@ class ComponentsSpec extends AnyFunSuite {
       val g = Graph(ids, for (i <- ids.indices; k <- 1 to 2 if i + k < ids.size) yield (ids(i), ids(i + k)))
       assert(cc(g, None, maxIterations = 1) === referenceLabels(g), s"seed $seed")
     }
+  }
+
+  test("a call leaves no persisted RDD but, in memory, the converged round its result reads") {
+    // a path in random id order: round 0, then loop rounds that each free the one before
+    val ids = randomIds(new Random(7), 400, mutable.HashSet.empty[String])
+    val g = Graph(ids, ids.zip(ids.tail))
+    val sc = spark.sparkContext
+    def left[T](body: => T): (T, Set[Int]) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = body
+      (out, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    val dir = tempDir("graft-cc-persist")
+    try {
+      val (reliable, leftReliable) = left(cc(g, Some(dir.getPath)))
+      assert(leftReliable.isEmpty, "reliable mode: the result reads the last round's files")
+      assert(reliable === referenceLabels(g))
+    } finally Scratch.deleteRec(dir)
+    val (out, leftLocal) = left(Components.connectedComponents(spark, g.vertices.toDF("clip_id"),
+      g.edges.toDF("a", "b")))
+    assert(leftLocal.size === 1, "in memory: only the converged round's blocks")
+    assert(out.as[(String, String)].collect().toMap === referenceLabels(g))
+    sc.getPersistentRDDs(leftLocal.head).unpersist(false)
+    assert(left(intercept[IllegalStateException](cc(g, None, maxIterations = 0)))._2.isEmpty)
+  }
+
+  test("labels take the min id in Spark's string order, not UTF-16 order") {
+    // U+E000 sorts after a surrogate pair in UTF-16, before it in UTF-8
+    val (bmp, astral) = ("\ue000", "\ud83d\ude00")
+    assert(cc(Graph(Seq(astral, bmp), Seq((astral, bmp))), None).values.toSet ===
+      Set(Seq(astral, bmp).toDF("id").agg(min($"id")).as[String].head()))
+    assert(Components.least(astral, bmp) === bmp && Components.least("ab", "a") === "a")
   }
 
   test("round checkpoints follow each run's checkpointDir and are deleted after the run") {

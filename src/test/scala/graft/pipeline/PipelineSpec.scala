@@ -251,18 +251,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(r3.stages.forall(!_.resumed))
   }
 
-  test("job budget: one checkpointed run over the 120-row table starts 23 Spark jobs") {
-    // Measured. Each stage boundary costs its write only, CC needs one loop
-    // round after three contraction passes and exits without a jump, and
-    // verify unions its two halves (45 jobs with a schema-inference and two
-    // lineage jobs per boundary, two passes, the jump exit and the
-    // verify join-back). A per-stage scan or an extra CC round fails this.
+  test("job budget: one checkpointed run over the 120-row table starts 20 Spark jobs") {
+    // Measured. Each stage boundary costs its write only; CC sizes its loop
+    // from the verified stage's footer count, needs one loop round after
+    // three contraction passes (each round a fingerprint fold plus its
+    // checkpoint write) and exits without a jump; verify unions its two
+    // halves. A per-stage scan or an extra CC round fails this.
     val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toFile
     try {
       val df = ClipTableGen.table(spark, 120, conf.seed).toDF()
       val (_, jobs) = org.apache.spark.graft.JobCounter.count(spark.sparkContext)(
         DedupPipeline.run(spark, df, conf.copy(checkpointDir = Some(tmp.getPath))))
-      assert(jobs === 23, s"$jobs Spark jobs")
+      assert(jobs === 20, s"$jobs Spark jobs")
     } finally graft.tools.Scratch.deleteRec(tmp)
   }
 
