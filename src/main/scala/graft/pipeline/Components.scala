@@ -31,9 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    ~90 classes. Only the edge read and the exit join are DataFrames.
   *  - The partition count comes from the data volume only (≈50k edge rows
   *    per partition, floor 4), never from the core count, so the same input
-  *    runs the same loop at every cluster size. The caller passes the edge
-  *    rows it already knows (the pipeline: the verified stage's footer
-  *    count, an upper bound); without one the edges are counted.
+  *    runs the same loop at every cluster size. One job counts the edges:
+  *    a bound such as the verified stage's row count, rejected rows
+  *    included, can overstate them tenfold at scale.
   *  - The symmetrized edges are CONTRACTED before the loop by
   *    `ContractionPasses` = 3 per-partition union-find passes (after *BTS:
   *    Load-Balanced Distributed Union-Find*, ICDE 2024): hash-partition on
@@ -144,16 +144,13 @@ object Components {
       XXH64.hashUTF8String(UTF8String.fromString(v), 42L))
 
   /** vertices: (clip_id), edges: (a, b) → (clip_id, cluster_id).
-    * Singletons keep themselves as cluster_id. `edgeRows` is the edge
-    * count or an upper bound of it; negative means unknown, and the edges
-    * are counted to size the loop. */
+    * Singletons keep themselves as cluster_id. */
   def connectedComponents(
       spark: SparkSession,
       vertices: DataFrame,
       edges: DataFrame,
       maxIterations: Int = 50,
-      checkpointDir: Option[String] = None,
-      edgeRows: Long = -1L): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     import spark.implicits._
     val sc = spark.sparkContext
     val reliable = checkpointDir.isDefined
@@ -164,8 +161,7 @@ object Components {
     // edges are distinct unordered pairs upstream (candidates are
     // groupBy(a,b)-deduped), and min is multiset-safe anyway
     val pairs = edges.select($"a", $"b").as[(String, String)].rdd
-    val rows = if (edgeRows >= 0) edgeRows else pairs.count()
-    val p = new HashPartitioner(math.min(4096L, math.max(4L, 2L * rows / 50000L)).toInt)
+    val p = new HashPartitioner(math.min(4096L, math.max(4L, 2L * pairs.count() / 50000L)).toInt)
 
     var contracted = pairs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
     for (_ <- 1 to ContractionPasses)

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * the reference's LSH capabilities onto a web-scale dedup pipeline:
   *
   *   decode + signatures (batched kernel, SURVEY §7.2)
-  *   → band explode (L tables ↔ bands, §7.0)
-  *   → band-key shuffle → candidate pairs with skew capping (§7.4)
-  *   ∪ exact-substring seed candidates (§7.5)
+  *   → one bucket shuffle of band keys (L tables ↔ bands, §7.0) and
+  *     exact-substring windows (§7.5) → candidate pairs with skew capping
+  *     (§7.4)
   *   → exact verification (Q7)
   *   → connected components (§7.6)
   *   → (clip_id, cluster_id)
@@ -55,21 +55,10 @@ object DedupPipeline {
       Signatures.compute(spark, clips, conf).toDF()
     })
 
-    val bands = stage("bands") {
-      // keys are family-salted in the kernel, so one explode covers all
-      // band families (text/audio/simhash); src carries provenance bits
-      signatures
-        .select($"clip_id", explode(arrays_zip($"band_keys", $"band_srcs")).as("z"))
-        .select($"z.band_keys".as("band_key"), $"z.band_srcs".as("src"), $"clip_id")
-    }
-
     val candidates = stage("candidates") {
-      // the substring pass reads the signature cache's ordered token
-      // hashes — the corpus parquet is scanned exactly once, by the
-      // signature stage
-      CandidatePairs.fromBands(spark, bands, conf)
-        .union(SuffixDups.candidatesFromTokenHashes(
-          spark, signatures.select($"clip_id", $"toks_h"), conf))
+      // band keys and transcript windows come from the signature cache —
+      // the corpus parquet is scanned exactly once, by the signature stage
+      CandidatePairs.fromSignatures(signatures, conf)
         .groupBy($"a", $"b")
         .agg(expr("bit_or(sources)").as("sources"), max($"capped").as("capped"))
     }
@@ -80,8 +69,6 @@ object DedupPipeline {
       releaseVerify = v.release
       v.edges
     })
-    // its footer row count bounds CC's edges (-1 in memory: CC counts them)
-    val verifiedRows = stages.result().last.rows
     // checkpoint mode materializes the stage to parquet eagerly — the text
     // phase can be released immediately; persist mode defers to cleanup()
     if (conf.checkpointDir.isDefined) releaseVerify()
@@ -91,8 +78,7 @@ object DedupPipeline {
       // decode-failed ones) — not a tail-end re-scan of the corpus parquet
       val vertices = signatures.select($"clip_id")
       val edges = verified.filter($"accepted").select($"a", $"b")
-      Components.connectedComponents(spark, vertices, edges, conf.maxCcIterations,
-        conf.checkpointDir, verifiedRows)
+      Components.connectedComponents(spark, vertices, edges, conf.maxCcIterations, conf.checkpointDir)
     }
     // the clusters stage is parquet now: CC's round checkpoints are garbage
     conf.checkpointDir.foreach { d =>

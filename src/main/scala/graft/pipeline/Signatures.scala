@@ -9,16 +9,16 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   *  - `band_keys`/`band_srcs`: ALL band keys (text-MinHash, audio-MinHash,
   *    SimHash chunks) as one parallel array pair. Keys are family-salted
-  *    (each family's keys derive from its own seed stream), so one explode +
-  *    one shuffle covers all families; `band_srcs` carries the family bit
-  *    ([[Signatures.SrcText]]/[[Signatures.SrcAudio]]/[[Signatures.SrcSimhash]])
-  *    for pair provenance.
+  *    (each family's keys derive from its own seed stream), so one bucket
+  *    shuffle ([[CandidatePairs]]) covers all families; `band_srcs`
+  *    carries the family bit ([[Signatures.SrcText]]/[[Signatures.SrcAudio]]/
+  *    [[Signatures.SrcSimhash]]) for pair provenance.
   *  - `text_sh`/`audio_sh`: sorted shingle-hash sets (~1 KB/row) and
   *    `toks_h`: ordered token hashes — the verification stage joins
   *    candidates back to THIS table (slim columns) instead of re-shipping
   *    and re-decoding multi-KB audio payloads. The heavy `bytes` column
   *    never leaves the signature scan; shingle sets never travel through
-  *    the band shuffle (bands are separate slim rows).
+  *    the bucket shuffle (its members are slim rows).
   */
 final case class ClipSignature(
     clip_id: String,

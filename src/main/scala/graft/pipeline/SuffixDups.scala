@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.conf.GraftConf
 import graft.kernel.Hashing
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Exact-substring duplicate pass: finds pairs (a, b) where a's full token
   * sequence appears verbatim inside b's — duplicates MinHash misses because
@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * W-token prefixes), distinct per (hash, doc) so a repeated phrase costs
   * one row. The FIRST window doubles as the document's probe seed, so one
   * pass over the corpus produces both sides of the seed↔window join: the
-  * windows are buckets of [[CandidatePairs.bucketPairs]] with the seeds as
+  * windows are window-kind buckets of [[CandidatePairs]] with the seeds as
   * probe members. A hot-phrase bucket over `bucketCap` keeps the chain and
   * fans out at most [[SeedProbeLimit]] seeds against its first `bucketCap`
   * id-sorted members — docs sharing one boilerplate window are mostly NOT
@@ -34,38 +34,32 @@ object SuffixDups {
 
   /** Candidate substring edges (a, b, sources = SrcSubstring, capped), a's
     * text potentially inside b's, a != b, from ordered token hashes
-    * (clip_id, toks_h) — the signature stage's `toks_h`, so the corpus is
-    * tokenized once. Verification happens in VerifyPairs. */
+    * (clip_id, toks_h) — the window members alone of the pipeline's pass
+    * ([[CandidatePairs.fromSignatures]]). Verification happens in
+    * VerifyPairs. */
   def candidatesFromTokenHashes(spark: SparkSession, tokens: DataFrame,
-      conf: GraftConf): DataFrame =
-    CandidatePairs.bucketPairs(windowMembers(tokens, conf), conf, cappedProbes = SeedProbeLimit)
+      conf: GraftConf): DataFrame = {
+    import spark.implicits._
+    CandidatePairs.bucketPairs(tokens.select($"clip_id", $"toks_h").as[(String, Array[Long])]
+      .flatMap { case (id, toksH) => windowMembers(id, toksH, conf) }, conf)
+  }
 
-  /** One bucket member per distinct (window hash, doc), probing when the
-    * window is the doc's first. */
-  private[pipeline] def windowMembers(tokens: DataFrame,
-      conf: GraftConf): Dataset[(Long, String, Int, Boolean)] = {
-    import tokens.sparkSession.implicits._
+  /** One document's window members: one per distinct W-token window hash,
+    * probing when the window is the document's first; none below W
+    * tokens. */
+  private[pipeline] def windowMembers(id: String, toksH: Array[Long],
+      conf: GraftConf): Iterator[CandidatePairs.Member] = {
     val w = conf.substringWindow
-    val seed = conf.seed
-    tokens.select($"clip_id", $"toks_h").as[(String, Array[Long])]
-      .flatMap { case (id, toksH) =>
-        if (toksH == null || toksH.length < w) Iterator.empty
-        else {
-          val seen = new java.util.HashMap[java.lang.Long, java.lang.Boolean]()
-          var i = 0
-          while (i + w <= toksH.length) {
-            var h = seed ^ 0x50ff1eL
-            var j = 0
-            while (j < w) { h = Hashing.combine(h, toksH(i + j)); j += 1 }
-            val isSeed = i == 0
-            val prev = seen.get(h)
-            if (prev == null || (!prev && isSeed)) seen.put(h, isSeed)
-            i += 1
-          }
-          val out = Vector.newBuilder[(Long, String, Int, Boolean)]
-          seen.forEach((h, s) => out += ((h.longValue, id, Signatures.SrcSubstring, s.booleanValue)))
-          out.result().iterator
-        }
+    if (toksH == null || toksH.length < w) Iterator.empty
+    else {
+      val hashes = Array.tabulate(toksH.length - w + 1) { i =>
+        var h = conf.seed ^ 0x50ff1eL
+        var j = 0
+        while (j < w) { h = Hashing.combine(h, toksH(i + j)); j += 1 }
+        h
       }
+      hashes.distinct.iterator.map(h =>
+        CandidatePairs.Member(h, window = true, id, Signatures.SrcSubstring, probe = h == hashes(0)))
+    }
   }
 }

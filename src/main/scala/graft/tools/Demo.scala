@@ -3,11 +3,13 @@ package graft.tools
 import graft.conf.GraftConf
 import graft.pipeline.DedupPipeline
 import graft.synth.ClipTableGen
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end driver through the public API: synthesize the input_hint
-  * table, run the dedup pipeline with checkpoints, print cluster stats.
+  * table, run the dedup pipeline with checkpoints, print cluster stats and
+  * the whole-stage classes the run compiled.
   * Usage: runMain graft.tools.Demo [nClips] [checkpointDir] */
 object Demo {
   def main(args: Array[String]): Unit = {
@@ -32,14 +34,16 @@ object Demo {
     ).toDF("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
     val input = clips.unionByName(hostile)
 
+    val compiled0 = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
     val t0 = System.nanoTime()
     val res = DedupPipeline.run(spark, input, GraftConf(checkpointDir = ckpt), inputSig = s"demo-$n")
     val clusters = res.clusters.cache()
     val total = clusters.count()
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiled = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount - compiled0
     val sizes = clusters.groupBy($"cluster_id").count()
       .groupBy($"count".as("cluster_size")).count().orderBy($"cluster_size").collect()
-    println(f"rows=$total%d wall=$wall%.1fs clips/sec=${total / wall}%.0f")
+    println(f"rows=$total%d wall=$wall%.1fs clips/sec=${total / wall}%.0f codegen_classes=$compiled%d")
     println("cluster size histogram: " + sizes.map(r => s"${r.get(0)}x${r.get(1)}").mkString(" "))
     res.stages.foreach(s => println(f"stage ${s.name}%-12s rows=${s.rows}%8d wall_ms=${s.wallMs}%6d resumed=${s.resumed}"))
     val accepted = res.edges.filter($"accepted").count()

@@ -9,30 +9,31 @@ import graft.SparkTestBase
 import graft.conf.GraftConf
 import graft.synth.ClipTableGen
 import graft.tools.Scratch
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{arrays_zip, explode}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `CandidatePairs.bucketPairs` against a plain-Scala reference of the
   * bucket rules (class doc), as sorted multisets of (a, b, sources, capped)
-  * rows, over generated buckets; and the member schema its two callers
-  * feed it. */
+  * rows, over generated buckets of both kinds; the pipeline's one pass
+  * against its two one-kind calls; and the null check of the band input. */
 class CandidatePairsSpec extends AnyFunSuite {
   import CandidatePairsSpec._
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  def pairs(df: DataFrame): Seq[Pair] = df.as[Pair].collect().toSeq.sorted
+
   def generated(c: Case, partitions: Int): Seq[Pair] = {
     val rows = new Random(c.shuffleSeed).shuffle(c.members)
-    CandidatePairs.bucketPairs(rows.toDS().repartition(partitions),
-      GraftConf(bucketCap = c.cap, chainWidth = c.width), c.cappedProbes)
-      .as[Pair].collect().toSeq.sorted
+    pairs(CandidatePairs.bucketPairs(rows.toDS().repartition(partitions),
+      GraftConf(bucketCap = c.cap, chainWidth = c.width)))
   }
 
   test("bucketPairs equals the reference rules on 1 and 7 input partitions") {
     val prop = Prop.forAll(cases) { c =>
-      val want = reference(c.members, c.cap, c.width, c.cappedProbes).sorted
+      val want = reference(c.members, c.cap, c.width).sorted
       val got1 = generated(c, 1)
       val got7 = generated(c, 7)
       Prop(got1 == want && got7 == want) :| s"$c\nwant=$want\ngot1=$got1\ngot7=$got7"
@@ -41,40 +42,52 @@ class CandidatePairsSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  test("band and substring members reach bucketPairs with one schema; band pairs are unchanged") {
+  test("fromSignatures equals fromBands over the band explode plus candidatesFromTokenHashes") {
     val conf = GraftConf()
     val sigs = Signatures.compute(spark, ClipTableGen.table(spark, 120, 42L).toDF(), conf).toDF()
     val bands = sigs.select($"clip_id", explode(arrays_zip($"band_keys", $"band_srcs")).as("z"))
       .select($"z.band_keys".as("band_key"), $"z.band_srcs".as("src"), $"clip_id")
-    val dir = Files.createTempDirectory("graft-members").toFile
+    val bandPairs = pairs(CandidatePairs.fromBands(spark, bands, conf))
+    val members = bands.as[(Long, Int, String)].collect().toSeq
+      .map { case (k, s, id) => CandidatePairs.Member(k, window = false, id, s, probe = true) }
+    assert(bandPairs === reference(members, conf.bucketCap, conf.chainWidth).sorted)
+    val substringPairs =
+      pairs(SuffixDups.candidatesFromTokenHashes(spark, sigs.select($"clip_id", $"toks_h"), conf))
+    assert(bandPairs.nonEmpty && substringPairs.nonEmpty)
+    assert(pairs(CandidatePairs.fromSignatures(sigs, conf)) === (bandPairs ++ substringPairs).sorted)
+  }
+
+  test("a null band_key or src read back from parquet fails fromBands instead of reading as 0") {
+    val dir = Files.createTempDirectory("graft-null-bands").toFile
     try {
-      bands.write.mode("overwrite").parquet(dir.getPath)
-      val readBack = spark.read.parquet(dir.getPath) // every field nullable
-      def fed(m: Dataset[Member]) = m.toDF("key", "id", "src", "probe").schema
-      val substring = fed(SuffixDups.windowMembers(sigs.select($"clip_id", $"toks_h"), conf))
-      for (b <- Seq(bands, readBack)) {
-        assert(fed(CandidatePairs.bandMembers(b)) === substring, b.schema.treeString)
-        val members = b.as[(Long, Int, String)].collect().toSeq.map { case (k, s, id) => (k, id, s, true) }
-        assert(CandidatePairs.fromBands(spark, b, conf).as[Pair].collect().toSeq.sorted ===
-          reference(members, conf.bucketCap, conf.chainWidth, 0).sorted)
+      for ((col, row) <- Seq("band_key" -> (None, Some(1), "b"), "src" -> (Some(5L), None, "b"))) {
+        val path = s"$dir/$col"
+        Seq[(Option[Long], Option[Int], String)]((Some(5L), Some(1), "a"), row)
+          .toDF("band_key", "src", "clip_id").write.parquet(path)
+        val e = intercept[Exception](
+          CandidatePairs.fromBands(spark, spark.read.parquet(path), GraftConf()).collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("NULL value appeared")), e.toString)
       }
     } finally Scratch.deleteRec(dir)
   }
 }
 
 object CandidatePairsSpec {
-  type Member = (Long, String, Int, Boolean)
+  type Member = CandidatePairs.Member
   type Pair = (String, String, Int, Boolean)
 
   /** Spark's string order: unsigned lexicographic over the UTF-8 bytes. */
   val utf8Order: Ordering[String] =
     (x, y) => java.util.Arrays.compareUnsigned(x.getBytes(UTF_8), y.getBytes(UTF_8))
 
-  /** The bucket rules of the `CandidatePairs` class doc, bucket by bucket. */
-  def reference(members: Seq[Member], cap: Int, width: Int, cappedProbes: Int): Seq[Pair] =
-    members.groupBy(_._1).values.toSeq.flatMap { rows =>
-      val merged = rows.groupBy(_._2).toSeq
-        .map { case (id, rs) => (id, rs.map(_._3).reduce(_ | _), rs.exists(_._4)) }
+  /** The bucket rules of the `CandidatePairs` class doc, bucket by bucket;
+    * a bucket is a (key, kind). */
+  def reference(members: Seq[Member], cap: Int, width: Int): Seq[Pair] =
+    members.groupBy(m => (m.key, m.window)).toSeq.flatMap { case ((_, window), rows) =>
+      val cappedProbes = if (window) SuffixDups.SeedProbeLimit else 0
+      val merged = rows.groupBy(_.id).toSeq
+        .map { case (id, rs) => (id, rs.map(_.src).reduce(_ | _), rs.exists(_.probe)) }
         .sortBy(_._1)(utf8Order)
       val n = merged.size
       def id(i: Int) = merged(i)._1
@@ -95,8 +108,7 @@ object CandidatePairsSpec {
       }
     }
 
-  final case class Case(cap: Int, width: Int, cappedProbes: Int, members: Seq[Member],
-      shuffleSeed: Long)
+  final case class Case(cap: Int, width: Int, members: Seq[Member], shuffleSeed: Long)
 
   // ASCII plus code points whose UTF-8 order differs from their UTF-16
   // (`String`) order: U+E000 sorts after a surrogate pair in UTF-16,
@@ -105,24 +117,32 @@ object CandidatePairsSpec {
   private val idPool: IndexedSeq[String] =
     (for (x <- glyphs; y <- "" +: glyphs; z <- "" +: glyphs) yield x + y + z).distinct.toIndexedSeq
 
-  /** One bucket: 0..4·cap distinct ids, each on 1–3 rows with their own
-    * `src` bit and probe flag. */
-  private def bucket(key: Long, cap: Int, probeRate: Double): Gen[Seq[Member]] = for {
-    size <- Gen.choose(0, 4 * cap)
+  /** One bucket (key, window): 0..4·cap distinct ids, each on 1–3 rows
+    * with their own `src` bit and probe flag. A window bucket is sometimes
+    * larger than its probe budget, so the budget runs out when all probe. */
+  private def bucket(key: Long, window: Boolean, cap: Int, probeRate: Double): Gen[Seq[Member]] = for {
+    size <- if (!window) Gen.choose(0, 4 * cap)
+      else Gen.frequency(4 -> Gen.choose(0, 4 * cap),
+        1 -> Gen.choose(SuffixDups.SeedProbeLimit + 1, SuffixDups.SeedProbeLimit + 24))
     ids <- Gen.pick(size, idPool)
     rows <- Gen.sequence[Seq[Seq[Member]], Seq[Member]](ids.map { id =>
       Gen.listOfN(3, Gen.zip(Gen.oneOf(1, 2, 4, 8), Gen.prob(probeRate)))
-        .flatMap(rs => Gen.choose(1, 3).map(k => rs.take(k).map { case (s, p) => (key, id, s, p) }))
+        .flatMap(rs => Gen.choose(1, 3).map(k => rs.take(k).map { case (s, p) =>
+          CandidatePairs.Member(key, window, id, s, p) }))
     })
   } yield rows.flatten
 
+  /** 1–4 keys; the first holds a band and a window bucket, each other one
+    * a band bucket, a window bucket or both. */
   val cases: Gen[Case] = for {
     cap <- Gen.choose(2, 8)
     width <- Gen.choose(1, 3)
-    cappedProbes <- Gen.choose(0, 3)
     probeRate <- Gen.oneOf(0.0, 0.3, 1.0)
     keys <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.long)).map(_.distinct)
-    buckets <- Gen.sequence[Seq[Seq[Member]], Seq[Member]](keys.map(bucket(_, cap, probeRate)))
+    kinds <- Gen.listOfN(keys.size - 1, Gen.oneOf(Seq(false), Seq(true), Seq(false, true)))
+    buckets <- Gen.sequence[Seq[Seq[Member]], Seq[Member]](
+      for ((key, ks) <- keys.zip(Seq(false, true) +: kinds); window <- ks)
+        yield bucket(key, window, cap, probeRate))
     shuffleSeed <- Gen.long
-  } yield Case(cap, width, cappedProbes, buckets.flatten, shuffleSeed)
+  } yield Case(cap, width, buckets.flatten, shuffleSeed)
 }

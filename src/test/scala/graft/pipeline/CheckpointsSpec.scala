@@ -173,7 +173,7 @@ class CheckpointsSpec extends AnyFunSuite {
       }
       val (c1, s1) = run()
       assert(s1.forall(!_.resumed))
-      val stageNames = Seq("signatures", "bands", "candidates", "verified", "clusters")
+      val stageNames = Seq("signatures", "candidates", "verified", "clusters")
       assert(s1.map(_.name) === stageNames)
       // one metadata file per stage, the manifest, and nothing else
       assert(new File(root).listFiles.filter(_.isFile).map(_.getName).toSet ===
@@ -185,14 +185,14 @@ class CheckpointsSpec extends AnyFunSuite {
 
       Files.delete(partPaths(s"$root/verified").head.toPath)
       val (c3, s3) = run()
-      assert(s3.map(s => (s.name, s.resumed)) === Seq("signatures" -> true, "bands" -> true,
+      assert(s3.map(s => (s.name, s.resumed)) === Seq("signatures" -> true,
         "candidates" -> true, "verified" -> false, "clusters" -> true))
       assert(c3 === c1)
       assert(s3.find(_.name == "verified").get.rows === s1.find(_.name == "verified").get.rows)
     }
   }
 
-  test("a pipeline run resumes all five stages under the same config and none under a changed one") {
+  test("a pipeline run resumes all its stages under the same config and none under a changed one") {
     withRoot { root =>
       val df = ClipTableGen.table(spark, 120, 42L).toDF()
       val conf = GraftConf(checkpointDir = Some(root))
@@ -200,7 +200,7 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(resumed(conf).forall(!_._2))
       assert(resumed(conf).forall(_._2))
       val changed = resumed(conf.copy(textJaccardThreshold = 0.8))
-      assert(changed.size === 5 && changed.forall(!_._2), changed.toString)
+      assert(changed.size === 4 && changed.forall(!_._2), changed.toString)
     }
   }
 }

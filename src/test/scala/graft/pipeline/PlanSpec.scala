@@ -3,12 +3,21 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.conf.GraftConf
 import graft.synth.ClipTableGen
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan audits: the properties `.explain` should show at scale.
   * These pin the plan shape so a regression (e.g. a select that defeats
   * column pruning, or a lost broadcast) fails loudly. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestBase.spark
 
   lazy val clipsDir: String = {
@@ -121,5 +130,29 @@ class PlanSpec extends AnyFunSuite {
     // "*(n)" is the WholeStageCodegen marker in simpleString
     assert(plan.contains("*(1)"), s"expected codegen spans:\n${plan.take(2000)}")
     assert(plan.contains("partial_sum"), s"expected map-side partial aggregation:\n${plan.take(2000)}")
+  }
+
+  test("a pipeline run shuffles its candidate members once, on their key") {
+    // the band keys and the substring windows share one exchange and sort
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-run").toFile
+    spark.listenerManager.register(listener)
+    try JobCounter.count(spark.sparkContext)( // drains the listener bus
+      DedupPipeline.run(spark, spark.read.parquet(clipsDir), GraftConf(checkpointDir = Some(dir.getPath))))
+    finally {
+      spark.listenerManager.unregister(listener)
+      graft.tools.Scratch.deleteRec(dir)
+    }
+    val onKey = plans.asScala.toSeq.flatMap(p => collect(p) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "key"
+        case _ => false
+      }) => e
+    })
+    assert(onKey.size === 1, onKey.mkString("\n"))
   }
 }

@@ -20,9 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The cache is four 25-entry LRU segments, and a key hashes the class
   * loader's identity with the code (in `local` mode the driver and the
   * executor each key every whole-stage class), so a key's segment differs
-  * from JVM to JVM. A checkpointed run's ~72 keys overflow one segment in
-  * about one JVM in ten, which then recompiles that segment's classes each
-  * run; two segments overflow in well under 1 %. The bound is therefore one
+  * from JVM to JVM. A checkpointed run's ~59 keys overflow one segment in
+  * about one JVM in 200, which then recompiles that segment's classes each
+  * run; two segments overflow far more rarely. The bound is therefore one
   * segment's worth, not zero. */
 class WarmRunSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
