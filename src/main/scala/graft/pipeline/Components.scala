@@ -144,13 +144,26 @@ object Components {
       XXH64.hashUTF8String(UTF8String.fromString(v), 42L))
 
   /** vertices: (clip_id), edges: (a, b) → (clip_id, cluster_id).
-    * Singletons keep themselves as cluster_id. */
+    * Singletons keep themselves as cluster_id. Without `checkpointDir` the
+    * result reads the converged round's local-checkpoint blocks, which stay
+    * registered until the result is garbage-collected. */
   def connectedComponents(
       spark: SparkSession,
       vertices: DataFrame,
       edges: DataFrame,
       maxIterations: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    components(spark, vertices, edges, maxIterations, checkpointDir)._1
+
+  /** [[connectedComponents]] plus the release of the blocks its result
+    * reads (a no-op with `checkpointDir`); after the release the result
+    * cannot be read. */
+  private[pipeline] def components(
+      spark: SparkSession,
+      vertices: DataFrame,
+      edges: DataFrame,
+      maxIterations: Int,
+      checkpointDir: Option[String]): (DataFrame, () => Unit) = {
     import spark.implicits._
     val sc = spark.sparkContext
     val reliable = checkpointDir.isDefined
@@ -227,8 +240,9 @@ object Components {
       throw new IllegalStateException(
         s"connected components: no fixpoint after round $iter (maxIterations = $maxIterations)")
 
-    vertices.select($"clip_id")
+    (vertices.select($"clip_id")
       .join(minned.toDF("clip_id", "label"), Seq("clip_id"), "left")
-      .select($"clip_id", coalesce($"label", $"clip_id").as("cluster_id"))
+      .select($"clip_id", coalesce($"label", $"clip_id").as("cluster_id")),
+      () => minned.unpersist(false))
   }
 }

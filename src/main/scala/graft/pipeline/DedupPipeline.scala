@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *   → one bucket shuffle of band keys (L tables ↔ bands, §7.0) and
   *     exact-substring windows (§7.5) → candidate pairs with skew capping
   *     (§7.4)
-  *   → exact verification (Q7)
+  *   → exact verification (Q7): one join pass per candidate against the
+  *     signatures, text and audio scored together
   *   → connected components (§7.6)
   *   → (clip_id, cluster_id)
   *
@@ -25,9 +26,11 @@ object DedupPipeline {
       clusters: DataFrame,
       edges: DataFrame,
       stages: Seq[Checkpoints.StageInfo],
-      /** Unpersist the run's internal intermediates (verify text phase,
-        * signature/edge persists). Call after the outputs are materialized
-        * — repeated runs in one session otherwise accumulate blocks. */
+      /** Unpersist the run's internal intermediates (the signature and
+        * edge persists, CC's converged labels). Call once the outputs are
+        * consumed — repeated runs in one session otherwise accumulate
+        * blocks. Without `checkpointDir` the outputs read those blocks, so
+        * they cannot be read after `cleanup()`. */
       cleanup: () => Unit = () => ())
 
   /** `inputSig` names the input; every stage's checkpoint key is it plus
@@ -63,22 +66,20 @@ object DedupPipeline {
         .agg(expr("bit_or(sources)").as("sources"), max($"capped").as("capped"))
     }
 
-    var releaseVerify: () => Unit = () => ()
     val verified = materialized(stage("verified") {
-      val v = VerifyPairs.verify(spark, candidates, signatures, conf)
-      releaseVerify = v.release
-      v.edges
+      VerifyPairs.verify(spark, candidates, signatures, conf).edges
     })
-    // checkpoint mode materializes the stage to parquet eagerly — the text
-    // phase can be released immediately; persist mode defers to cleanup()
-    if (conf.checkpointDir.isDefined) releaseVerify()
 
+    var releaseLabels: () => Unit = () => ()
     val clusters = stage("clusters") {
       // vertex set from the signature cache (one row per input row, even
       // decode-failed ones) — not a tail-end re-scan of the corpus parquet
       val vertices = signatures.select($"clip_id")
       val edges = verified.filter($"accepted").select($"a", $"b")
-      Components.connectedComponents(spark, vertices, edges, conf.maxCcIterations, conf.checkpointDir)
+      val (labels, release) =
+        Components.components(spark, vertices, edges, conf.maxCcIterations, conf.checkpointDir)
+      releaseLabels = release
+      labels
     }
     // the clusters stage is parquet now: CC's round checkpoints are garbage
     conf.checkpointDir.foreach { d =>
@@ -87,7 +88,7 @@ object DedupPipeline {
     }
 
     val cleanup: () => Unit = () => {
-      releaseVerify()
+      releaseLabels()
       Seq(signatures, verified).foreach(df => df.unpersist(false))
     }
     Result(clusters, verified, stages.result(), cleanup)

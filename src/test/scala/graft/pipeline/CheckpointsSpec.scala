@@ -66,6 +66,13 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
+  test("without a checkpoint dir a stage is a pass-through: no job, rows and wall ms unmeasured (-1)") {
+    val plan = narrow(100)
+    val ((df, info), n) = jobs(Checkpoints.stage(spark, None, "s", "sig")(plan))
+    assert(n === 0 && (df eq plan))
+    assert(info === Checkpoints.StageInfo("s", "sig", -1L, -1L, resumed = false, Nil))
+  }
+
   test("manifest per-file rows equal input_file_name() counts of the read-back, zero-row stage included") {
     withRoot { root =>
       val skewed = narrow(2000).repartition(5, ($"id" % 7).cast("int"))

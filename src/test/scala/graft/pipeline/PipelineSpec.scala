@@ -251,18 +251,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(r3.stages.forall(!_.resumed))
   }
 
+  test("an in-memory run's cleanup() releases every RDD the run left persisted") {
+    // the signature and edge persists and CC's converged labels
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val res = DedupPipeline.run(spark, ClipTableGen.table(spark, 120, conf.seed).toDF(), conf)
+    res.clusters.collect()
+    res.edges.collect()
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).nonEmpty)
+    res.cleanup()
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, left.map(sc.getPersistentRDDs(_).toDebugString).mkString("\n"))
+  }
+
   test("job budget: one checkpointed run over the 120-row table starts its pinned job count") {
-    // Measured: 19. Each of the four stage boundaries costs its write only;
+    // Measured: 16. Each of the four stage boundaries costs its write only;
     // CC counts its accepted edges to size its loop, needs one loop round
     // after three contraction passes (each round a fingerprint fold plus
-    // its checkpoint write) and exits without a jump; verify unions its two
-    // halves. A per-stage scan or an extra CC round fails this.
+    // its checkpoint write) and exits without a jump. A per-stage scan or
+    // an extra CC round fails this.
     val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toFile
     try {
       val df = ClipTableGen.table(spark, 120, conf.seed).toDF()
       val (_, jobs) = org.apache.spark.graft.JobCounter.count(spark.sparkContext)(
         DedupPipeline.run(spark, df, conf.copy(checkpointDir = Some(tmp.getPath))))
-      assert(jobs === 19, s"$jobs Spark jobs")
+      assert(jobs === 16, s"$jobs Spark jobs")
     } finally graft.tools.Scratch.deleteRec(tmp)
   }
 

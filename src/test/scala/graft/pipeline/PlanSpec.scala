@@ -6,9 +6,11 @@ import graft.synth.ClipTableGen
 import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,9 +120,15 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // distinct shingles, c2's tokens are a contiguous suffix of c1's
     val rows = v.edges.collect().map(r => (r.getString(0), r.getString(1),
       r.getDouble(2), r.getBoolean(4))).sortBy(_._1)
-    v.release()
     assert(rows(0) == ("c1", "c2", 0.5, true))
     assert(rows(1)._3 == 1.0) // c3/c4: identical single-shingle text
+    // one join chain, pairs ⋈ sig(a) ⋈ sig(b): a split into phases shows up
+    // as more joins, a Union of the halves or an InMemoryTableScan of a
+    // persisted phase (AQE finalizes the plan only on execution)
+    val executed = v.edges.queryExecution.executedPlan
+    assert(collect(executed) { case j: BaseJoinExec => j }.size === 2, executed.toString)
+    assert(collect(executed) { case u: UnionExec => u }.isEmpty, executed.toString)
+    assert(collect(executed) { case m: InMemoryTableScanExec => m }.isEmpty, executed.toString)
   }
 
   test("whole-stage codegen + partial aggregation cover the relational aggregate") {

@@ -2,14 +2,16 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.conf.GraftConf
-import graft.functions.ArraySetExprs.{containsSubseq, jaccardSorted}
+import graft.kernel.Shingles
 import graft.synth.ClipTableGen
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `VerifyPairs.verify` (two phases, disjoint halves unioned) against a
-  * one-phase reference that joins every pair to all three signature sets. */
+/** `VerifyPairs.verify` against a driver-side reference over the collected
+  * signature rows, scored with the Scala kernels the native expressions
+  * mirror (`Shingles.jaccardSorted`, `VerifyPairs.isSubSequence`). */
 class VerifyPairsSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -27,7 +29,7 @@ class VerifyPairsSpec extends AnyFunSuite {
   }
 
   /** Every unordered pair of signature ids, plus one pair with an id that
-    * has no signature (dropped by both). */
+    * has no signature (dropped). */
   lazy val pairs: DataFrame = {
     val ids = signatures.select($"clip_id")
     ids.as("l").crossJoin(ids.as("r")).filter($"l.clip_id" < $"r.clip_id")
@@ -35,63 +37,59 @@ class VerifyPairsSpec extends AnyFunSuite {
       .union(Seq(("bad-wav-1", "zz-missing", 1, false)).toDF("a", "b", "sources", "capped"))
   }
 
-  def reference(pairs: DataFrame, c: GraftConf): DataFrame = {
-    val side = signatures.select($"clip_id", $"text_sh", $"toks_h", $"audio_sh")
-    def named(s: String) = side.select($"clip_id".as(s), $"text_sh".as(s"tsh_$s"),
-      $"toks_h".as(s"th_$s"), $"audio_sh".as(s"ash_$s"))
-    pairs.join(named("a"), Seq("a")).join(named("b"), Seq("b"))
-      .select($"a", $"b",
-        jaccardSorted($"tsh_a", $"tsh_b").as("text_jaccard"),
-        (containsSubseq($"th_a", $"th_b") || containsSubseq($"th_b", $"th_a")).as("substring"),
-        when(size($"ash_a") === 0 || size($"ash_b") === 0, lit(0.0))
-          .otherwise(jaccardSorted($"ash_a", $"ash_b")).as("audio_full"))
-      .withColumn("text_accepted", $"text_jaccard" >= c.textJaccardThreshold || $"substring")
-      // the reported audio metric is 0.0 where the text phase accepted
-      .withColumn("audio_jaccard", coalesce(when($"text_accepted", lit(0.0)).otherwise($"audio_full"), lit(0.0)))
-      .select($"a", $"b", $"text_jaccard", $"audio_jaccard", $"substring",
-        ($"text_accepted" || $"audio_jaccard" >= c.audioJaccardThreshold).as("accepted"),
-        array_compact(array(
-          when($"text_jaccard" >= c.textJaccardThreshold, "text"),
-          when($"audio_jaccard" >= c.audioJaccardThreshold, "audio"),
-          when($"substring", "substring"))).as("reasons"))
+  type Edge = (String, String, Double, Double, Boolean, Boolean, Seq[String])
+
+  val schema = StructType(Seq(
+    StructField("a", StringType), StructField("b", StringType),
+    StructField("text_jaccard", DoubleType), StructField("audio_jaccard", DoubleType),
+    StructField("substring", BooleanType), StructField("accepted", BooleanType),
+    StructField("reasons", ArrayType(StringType, containsNull = false))))
+
+  /** The verified edge of each pair whose ids both have a signature. */
+  def reference(pairs: DataFrame, c: GraftConf): Seq[Edge] = {
+    val sig = signatures.select($"clip_id", $"text_sh", $"toks_h", $"audio_sh")
+      .as[(String, Array[Long], Array[Long], Array[Long])].collect().map(r => r._1 -> r).toMap
+    pairs.select($"a", $"b").as[(String, String)].collect().toSeq.flatMap { case (a, b) =>
+      for ((_, tA, kA, aA) <- sig.get(a); (_, tB, kB, aB) <- sig.get(b)) yield {
+        val text = Shingles.jaccardSorted(tA, tB)
+        val audio = Shingles.jaccardSorted(aA, aB)
+        val sub = VerifyPairs.isSubSequence(kA, kB) || VerifyPairs.isSubSequence(kB, kA)
+        val reasons = Seq("text" -> (text >= c.textJaccardThreshold),
+          "audio" -> (audio >= c.audioJaccardThreshold), "substring" -> sub).collect { case (r, true) => r }
+        (a, b, text, audio, sub, reasons.nonEmpty, reasons)
+      }
+    }.sortBy(e => (e._1, e._2))
   }
 
-  def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+  def edges(df: DataFrame): Seq[Edge] =
+    df.as[Edge].collect().toSeq.sortBy(e => (e._1, e._2))
 
   for ((label, c) <- Seq("default thresholds" -> GraftConf(),
       "audioJaccardThreshold = 0.0" -> GraftConf(audioJaccardThreshold = 0.0))) {
     test(s"verify equals the one-phase reference row for row and schema for schema ($label)") {
       val v = VerifyPairs.verify(spark, pairs, signatures, c)
-      try {
-        val ref = reference(pairs, c)
-        assert(v.edges.schema === ref.schema)
-        val got = rows(v.edges)
-        assert(got === rows(ref))
-        // every path is exercised: text-accepted, audio residue, empty audio sets
-        val e = v.edges
-        val residue = e.filter(!($"text_jaccard" >= c.textJaccardThreshold) && !$"substring")
-        val emptyAudio = signatures.filter(size($"audio_sh") === 0).select($"clip_id").as[String].collect()
-        assert(e.filter($"accepted" && array_contains($"reasons", "text")).count() > 0)
-        assert(residue.filter($"audio_jaccard" > 0.0).count() > 0)
-        assert(emptyAudio.length >= 2)
-        assert(residue.filter($"a".isin(emptyAudio: _*) || $"b".isin(emptyAudio: _*)).count() > 0)
-        if (c.audioJaccardThreshold == 0.0) assert(e.filter(!$"accepted").count() === 0)
-        else assert(e.filter(!$"accepted").count() > 0)
-      } finally v.release()
+      assert(v.edges.schema.map(f => (f.name, f.dataType)) === schema.map(f => (f.name, f.dataType)))
+      assert(!v.edges.schema("audio_jaccard").nullable)
+      val got = edges(v.edges)
+      assert(got === reference(pairs, c))
+      assert(!got.exists(_._2 == "zz-missing"))
+      // every test is exercised: text accepts, audio scores of text-rejected
+      // pairs, pairs with an empty audio set, and both text and audio passing
+      val emptyAudio = signatures.filter(size($"audio_sh") === 0).select($"clip_id").as[String].collect().toSet
+      assert(emptyAudio.size >= 2)
+      assert(got.exists(e => e._6 && e._7.contains("text")))
+      assert(got.exists(e => !e._7.contains("text") && !e._5 && e._4 > 0.0))
+      assert(got.exists(e => emptyAudio(e._1) || emptyAudio(e._2)))
+      assert(got.exists(e => e._7.contains("text") && e._7.contains("audio")),
+        "a pair that passes both the text and the audio test lists both reasons")
+      if (c.audioJaccardThreshold == 0.0) assert(got.forall(_._6))
+      else assert(got.exists(!_._6))
     }
   }
 
-  test("verify with no audio residue, and with no pairs") {
-    val c = GraftConf()
-    val textAccepted = pairs.join(reference(pairs, c)
-      .filter($"text_jaccard" >= c.textJaccardThreshold || $"substring").select($"a", $"b"), Seq("a", "b"))
-    for (p <- Seq(textAccepted, pairs.limit(0))) {
-      val v = VerifyPairs.verify(spark, p, signatures, c)
-      try {
-        assert(v.edges.schema === reference(p, c).schema)
-        assert(rows(v.edges) === rows(reference(p, c)))
-      } finally v.release()
-    }
-    assert(textAccepted.count() > 0)
+  test("verify with no pairs gives no edges") {
+    val v = VerifyPairs.verify(spark, pairs.limit(0), signatures, GraftConf())
+    assert(v.edges.schema.map(f => (f.name, f.dataType)) === schema.map(f => (f.name, f.dataType)))
+    assert(edges(v.edges).isEmpty)
   }
 }

@@ -20,10 +20,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The cache is four 25-entry LRU segments, and a key hashes the class
   * loader's identity with the code (in `local` mode the driver and the
   * executor each key every whole-stage class), so a key's segment differs
-  * from JVM to JVM. A checkpointed run's ~59 keys overflow one segment in
-  * about one JVM in 200, which then recompiles that segment's classes each
-  * run; two segments overflow far more rarely. The bound is therefore one
-  * segment's worth, not zero. */
+  * from JVM to JVM. A checkpointed run's ~48 keys overflow one segment in
+  * about one JVM in 17,000, which then recompiles that segment's classes
+  * each run; two segments overflow far more rarely. The bound is therefore
+  * one segment's worth, not zero. */
 class WarmRunSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
