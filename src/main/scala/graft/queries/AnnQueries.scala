@@ -94,34 +94,26 @@ object AnnQueries {
 
   private val duckCodes = codesCte(EmbedQueries.duckBitDot, duckDot("embedding", "embedding"))
 
-  /** The table-0 ("rp") code table's defining SQL — materialized once per
-    * (session, dir) via [[CodesCache]] (see there for why: CTE inlining
-    * rebuilt it under every reference). Shared with [[ForestQueries]],
-    * whose table 0 is the same projection. */
-  private[queries] val codesRpSql: String =
-    s"""WITH ${sparkSgnCte("rp", EmbedQueries.CodeBits, Dim)}
-       |SELECT vec_id, embedding, sqrt(${sparkDot("embedding", "embedding")}) AS nrm,
-       |  CAST(${EmbedQueries.codeExpr(EmbedQueries.sparkBitDot)} AS BIGINT) AS code
-       |FROM embeddings CROSS JOIN sgn""".stripMargin
-
-  /** Registered view name of the materialized rp code table. */
-  private[queries] def codesRpView(spark: SparkSession, dir: String): String =
-    CodesCache.materialize(spark, dir, "codes_rp", codesRpSql)
-
   private def sparkWith(spark: SparkSession, dir: String): String =
-    s"codes AS (SELECT vec_id, embedding, nrm, code FROM ${codesRpView(spark, dir)})"
+    s"codes AS (SELECT vec_id, embedding, nrm, code FROM ${EmbedQueries.codesRpView(spark, dir)})"
   private val duckWith =
     s"${duckSgnCte("rp", EmbedQueries.CodeBits, Dim)},\n$duckCodes"
 
+  private val bandMask = (1L << BandBits) - 1
+
+  /** The base side of the probe join: every vector's band keys, built once
+    * per (session, dir) ([[CodesCache]]). */
+  private def bbView(spark: SparkSession, dir: String): String =
+    CodesCache.materialize(spark, dir, "ann_bb",
+      s"""SELECT vec_id, band_idx, shiftright(code, band_idx * $BandBits) & $bandMask AS band_key
+         |FROM ${EmbedQueries.codesRpView(spark, dir)} LATERAL VIEW explode(sequence(0, ${Bands - 1})) tb AS band_idx""".stripMargin)
+
   /** Spark CTE chain on top of `codes`: banded multiprobe equi-join →
     * exact filter + re-rank (see class doc, step 2). */
-  private val sparkAnnCtes: String = {
-    val bandMask = (1L << BandBits) - 1
+  private def sparkAnnCtes(spark: SparkSession, dir: String): String = {
     val probes = BandProbeMasks.map(m => s"CAST($m AS BIGINT)").mkString(", ")
     s"""q AS (SELECT * FROM codes WHERE vec_id % $QueryStride = 0),
-       |bb AS (
-       |  SELECT vec_id, band_idx, shiftright(code, band_idx * $BandBits) & $bandMask AS band_key
-       |  FROM codes LATERAL VIEW explode(sequence(0, ${Bands - 1})) tb AS band_idx),
+       |bb AS (SELECT vec_id, band_idx, band_key FROM ${bbView(spark, dir)}),
        |qp AS (
        |  SELECT vec_id, band_idx,
        |    (shiftright(code, band_idx * $BandBits) & $bandMask) ^ pm AS band_key
@@ -254,20 +246,16 @@ object AnnQueries {
     (a, b) => s"xor($a, $b)", duckDot,
     s"SELECT CAST(unnest([$budgetsList]) AS BIGINT) AS r")
 
-  /** Register the input table, then build the SQL — the materialized codes
-    * view resolves against the freshly registered `embeddings`. */
-  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame = {
-    view(spark, dir, "embeddings")
-    spark.sql(mkSql)
-  }
+  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
+    query(spark, dir, "embeddings")(mkSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ann_hamming_knn" -> ((s, d) =>
-      q(s, d)(annKnnSql(sparkWith(s, d), sparkAnnCtes))),
+      q(s, d)(annKnnSql(sparkWith(s, d), sparkAnnCtes(s, d)))),
     "q_ann_recall" -> ((s, d) =>
-      q(s, d)(annRecallSql(sparkWith(s, d), sparkAnnCtes, sparkDot))),
+      q(s, d)(annRecallSql(sparkWith(s, d), sparkAnnCtes(s, d), sparkDot))),
     "q_ann_recall_curve" -> ((s, d) =>
-      q(s, d)(recallCurveSql(sparkWith(s, d), sparkAnnCtes,
+      q(s, d)(recallCurveSql(sparkWith(s, d), sparkAnnCtes(s, d),
         (a, b) => s"$a ^ $b", sparkDot,
         s"SELECT CAST(r AS BIGINT) AS r FROM (SELECT explode(array($budgetsList)) AS r)")))
   )

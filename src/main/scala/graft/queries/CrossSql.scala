@@ -103,10 +103,22 @@ object CrossSql {
   def duckSgnCte(tag: String, bits: Int, dim: Int, cteName: String = "sgn"): String =
     s"""$cteName AS (SELECT list_transform(range(0, $bits), b -> list_transform(range(1, ${dim + 1}), j -> CASE WHEN (${duckH60(s"concat('$tag', CAST(b AS VARCHAR), '_', CAST(j AS VARCHAR))")} & 1) = 1 THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END)) AS m)"""
 
-  /** Register `<dir>/<table>.parquet` as a temp view named `table`. */
+  /** Register `<dir>/<table>.parquet` as a temp view named `table`. The
+    * DataFrame is read once per (session, dir) ([[CodesCache.input]]), so a
+    * repeated call infers no schema and lists no files; it is registered
+    * again on every call because the view name is shared by all dirs a
+    * session queries. Static-input contract: see [[CodesCache]]. */
   def view(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$table.parquet")
+    val df = CodesCache.input(spark, dir, table)
     df.createOrReplaceTempView(table)
     df
+  }
+
+  /** Register `dir`'s `table`, then plan the SQL. By-name: the SQL text
+    * names index views that [[CodesCache.materialize]] builds from the
+    * freshly registered table on first use. */
+  def query(spark: SparkSession, dir: String, table: String)(mkSql: => String): DataFrame = {
+    view(spark, dir, table)
+    spark.sql(mkSql)
   }
 }

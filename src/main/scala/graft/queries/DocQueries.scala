@@ -17,18 +17,14 @@ import CrossSql._
   */
 object DocQueries {
 
-  /** Register the input table, then build the SQL (by-name: the
-    * materialized index views below resolve against the freshly
-    * registered `documents`). */
-  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame = {
-    view(spark, dir, "documents")
-    spark.sql(mkSql)
-  }
+  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
+    query(spark, dir, "documents")(mkSql)
 
   // ------------------------------------------------------------------
   // build/query split (see CodesCache): the shared derived relations —
-  // shingle set, minhash signatures, band keys, simhash codes — are each
-  // materialized ONCE per (session, dir) and every query scans the view.
+  // shingle set, minhash signatures, band keys, simhash codes and band
+  // rows, substring windows and seeds — are each materialized ONCE per
+  // (session, dir) and every query scans the view.
   // Without this, CTE inlining rebuilt the full md5 derivation chain under
   // every reference (q_simhash_pairs re-derived simhash codes ~10x: 11
   // documents.parquet scans in one plan). The DuckDB oracles keep the pure
@@ -257,25 +253,35 @@ object DocQueries {
   private val simhashDuckSql = s"""$duckSim
     |SELECT doc_id, code AS simhash FROM simhash ORDER BY doc_id""".stripMargin
 
-  private def simPairsSql(simCte: String, xor: (String, String) => String, shr: (String, Int) => String): String = {
-    val bandRows = (0 until SimBands)
+  /** The SimHash band rows `(doc_id, band_idx, band_val)` of `simhash`. */
+  private def simBandsSql(shr: (String, Int) => String): String =
+    (0 until SimBands)
       .map(b => s"SELECT doc_id, $b AS band_idx, (${shr("code", b * SimBandBits)} & ${(1 << SimBandBits) - 1}) AS band_val FROM simhash")
       .mkString(" UNION ALL ")
-    s"""$simCte,
-       |sbands AS ($bandRows),
+
+  /** Banded Hamming pairs over CTEs `simhash(doc_id, code)` and
+    * `sbands(doc_id, band_idx, band_val)`. */
+  private def simPairsSql(ctes: String, xor: (String, String) => String): String =
+    s"""$ctes,
        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
        |  FROM sbands x JOIN sbands y ON x.band_idx = y.band_idx AND x.band_val = y.band_val AND x.doc_id < y.doc_id)
        |SELECT cand.a AS a, cand.b AS b, CAST(bit_count(${xor("sa.code", "sb.code")}) AS BIGINT) AS hamming
        |FROM cand JOIN simhash sa ON sa.doc_id = cand.a JOIN simhash sb ON sb.doc_id = cand.b
        |WHERE bit_count(${xor("sa.code", "sb.code")}) <= $SimMaxHamming
        |ORDER BY a, b""".stripMargin
-  }
+
+  /** The band rows, built once per (session, dir) ([[CodesCache]]). */
+  private def simBandsV(s: SparkSession, d: String): String =
+    CodesCache.materialize(s, d, "doc_sim_bands",
+      s"WITH simhash AS (SELECT doc_id, code FROM ${simV(s, d)})\n" +
+        simBandsSql((x, b) => s"shiftright($x, $b)"))
 
   private def simPairsSparkSql(s: SparkSession, d: String) =
-    simPairsSql(s"WITH simhash AS (SELECT doc_id, code FROM ${simV(s, d)})",
-      (a, b) => s"$a ^ $b", (x, b) => s"shiftright($x, $b)")
+    simPairsSql(s"""WITH simhash AS (SELECT doc_id, code FROM ${simV(s, d)}),
+                   |sbands AS (SELECT doc_id, band_idx, band_val FROM ${simBandsV(s, d)})""".stripMargin,
+      (a, b) => s"$a ^ $b")
   private val simPairsDuckSql =
-    simPairsSql(duckSim, (a, b) => s"xor($a, $b)", (x, b) => s"($x >> $b)")
+    simPairsSql(s"$duckSim,\nsbands AS (${simBandsSql((x, b) => s"($x >> $b)")})", (a, b) => s"xor($a, $b)")
 
   // ------------------------------------------------------------------
   // exact-substring containment (seed-window pass, SURVEY §7.5)
@@ -283,32 +289,43 @@ object DocQueries {
 
   private val SubW = 10
 
-  private def substringSql(tokCte: String,
-      winExpr: String, seedExpr: String, lenF: String, containsF: (String, String) => String): String =
-    s"""$tokCte,
-       |wins AS (SELECT DISTINCT doc_id, $winExpr AS wh FROM tw),
-       |seeds AS (SELECT doc_id, $seedExpr AS wh FROM toks WHERE $lenF >= $SubW)
+  /** Seeds joined to windows, then verified by padded-text containment.
+    * Over CTEs `wins(doc_id, wh)` (every doc's distinct W-token window
+    * hashes) and `seeds(doc_id, wh)` (each doc's first window). */
+  private def substringSql(ctes: String): String =
+    s"""$ctes
        |SELECT DISTINCT s.doc_id AS a, w.doc_id AS b
        |FROM seeds s JOIN wins w ON s.wh = w.wh AND s.doc_id <> w.doc_id
        |JOIN documents da ON da.doc_id = s.doc_id JOIN documents db ON db.doc_id = w.doc_id
-       |WHERE ${containsF("concat(' ', trim(db.text), ' ')", "concat(' ', trim(da.text), ' ')")}
+       |WHERE contains(concat(' ', trim(db.text), ' '), concat(' ', trim(da.text), ' '))
        |ORDER BY a, b""".stripMargin
 
-  private val substringSparkSql = substringSql(
-    """WITH toks AS (SELECT doc_id, split(trim(text), '\\s+') AS t FROM documents),
-      |tw AS (SELECT doc_id, explode(transform(sequence(1, size(t) - ${W} + 1), i -> concat_ws(' ', slice(t, i, ${W})))) AS win
-      |  FROM toks WHERE size(t) >= ${W})""".stripMargin.replace("${W}", SubW.toString),
-    sparkH60("win"),
-    sparkH60(s"concat_ws(' ', slice(t, 1, $SubW))"), "size(t)",
-    (outer, inner) => s"contains($outer, $inner)")
+  private val subToksSpark = "WITH toks AS (SELECT doc_id, split(trim(text), '\\\\s+') AS t FROM documents)"
+
+  /** The window table, built once per (session, dir) ([[CodesCache]]). */
+  private def winsV(s: SparkSession, d: String): String =
+    CodesCache.materialize(s, d, "doc_wins",
+      s"""$subToksSpark,
+         |tw AS (SELECT doc_id, explode(transform(sequence(1, size(t) - $SubW + 1), i -> concat_ws(' ', slice(t, i, $SubW)))) AS win
+         |  FROM toks WHERE size(t) >= $SubW)
+         |SELECT DISTINCT doc_id, ${sparkH60("win")} AS wh FROM tw""".stripMargin)
+
+  /** The seed table, built once per (session, dir). */
+  private def seedsV(s: SparkSession, d: String): String =
+    CodesCache.materialize(s, d, "doc_seeds",
+      s"""$subToksSpark
+         |SELECT doc_id, ${sparkH60(s"concat_ws(' ', slice(t, 1, $SubW))")} AS wh FROM toks WHERE size(t) >= $SubW""".stripMargin)
+
+  private def substringSparkSql(s: SparkSession, d: String) = substringSql(
+    s"""WITH wins AS (SELECT doc_id, wh FROM ${winsV(s, d)}),
+       |seeds AS (SELECT doc_id, wh FROM ${seedsV(s, d)})""".stripMargin)
 
   private val substringDuckSql = substringSql(
-    """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-      |tw AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - ${W} + 2), i -> array_to_string(list_slice(t, i, i + ${W} - 1), ' '))) AS win
-      |  FROM toks WHERE len(t) >= ${W})""".stripMargin.replace("${W}", SubW.toString),
-    duckH60("win"),
-    duckH60(s"array_to_string(list_slice(t, 1, $SubW), ' ')"), "len(t)",
-    (outer, inner) => s"contains($outer, $inner)")
+    s"""WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+       |tw AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - $SubW + 2), i -> array_to_string(list_slice(t, i, i + $SubW - 1), ' '))) AS win
+       |  FROM toks WHERE len(t) >= $SubW),
+       |wins AS (SELECT DISTINCT doc_id, ${duckH60("win")} AS wh FROM tw),
+       |seeds AS (SELECT doc_id, ${duckH60(s"array_to_string(list_slice(t, 1, $SubW), ' ')")} AS wh FROM toks WHERE len(t) >= $SubW)""".stripMargin)
 
   // ------------------------------------------------------------------
   // registry
@@ -328,7 +345,7 @@ object DocQueries {
     "q_near_dup_pairs" -> ((s, d) => q(s, d)(nearDupSparkSql(s, d))),
     "q_simhash" -> ((s, d) => q(s, d)(simhashSparkSql(s, d))),
     "q_simhash_pairs" -> ((s, d) => q(s, d)(simPairsSparkSql(s, d))),
-    "q_substring_pairs" -> ((s, d) => q(s, d)(substringSparkSql))
+    "q_substring_pairs" -> ((s, d) => q(s, d)(substringSparkSql(s, d)))
   )
 
   val oracleSql: Map[String, String] = Map(

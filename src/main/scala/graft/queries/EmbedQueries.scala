@@ -34,14 +34,11 @@ object EmbedQueries {
   private def duckDot(a: String, b: String): String =
     s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
-  private def knnSql(scoreOf: String, asc: Boolean, normExpr: String = ""): String = {
+  /** Top-k neighbours of every query point over `base(vec_id, embedding[,
+    * nrm])`, defined by `baseSql`. */
+  private def knnSql(baseSql: String, scoreOf: String, asc: Boolean): String = {
     val ord = if (asc) "ASC" else "DESC"
-    val base =
-      if (normExpr.isEmpty) "SELECT vec_id, embedding FROM embeddings"
-      // norms precomputed once per vector (identical double fold → identical
-      // value as recomputing per pair, at 1/|B| the cost)
-      else s"SELECT vec_id, embedding, sqrt($normExpr) AS nrm FROM embeddings"
-    s"""WITH base AS ($base),
+    s"""WITH base AS ($baseSql),
        |q AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
        |scored AS (
        |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $scoreOf AS score
@@ -54,24 +51,26 @@ object EmbedQueries {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  private val knnCosSparkSql = knnSql(
-    s"${sparkDot("q.embedding", "b.embedding")} / (q.nrm * b.nrm)",
-    asc = false, normExpr = sparkDot("embedding", "embedding"))
-  private val knnCosDuckSql = knnSql(
-    s"${duckDot("q.embedding", "b.embedding")} / (q.nrm * b.nrm)",
-    asc = false, normExpr = duckDot("embedding", "embedding"))
+  private val rawBase = "SELECT vec_id, embedding FROM embeddings"
+
+  /** Cosine kNN over a `base` that carries each vector's norm `nrm`: one
+    * sqrt of the same ordered double fold per vector, the identical value
+    * to recomputing it per pair at 1/|B| the cost. The Spark side reads the
+    * norms from [[nrmView]]. */
+  private def cosSql(baseSql: String, dot: (String, String) => String): String =
+    knnSql(baseSql, s"${dot("q.embedding", "b.embedding")} / (q.nrm * b.nrm)", asc = false)
+
+  private val knnCosDuckSql = cosSql(
+    s"SELECT vec_id, embedding, sqrt(${duckDot("embedding", "embedding")}) AS nrm FROM embeddings", duckDot)
 
   private def sparkDist2(a: String, b: String): String =
     s"aggregate(sequence(1, $Dim), CAST(0 AS DOUBLE), (acc, i) -> acc + (CAST(element_at($a, i) AS DOUBLE) - CAST(element_at($b, i) AS DOUBLE)) * (CAST(element_at($a, i) AS DOUBLE) - CAST(element_at($b, i) AS DOUBLE)))"
   private def duckDist2(a: String, b: String): String =
     s"list_sum(list_transform(range(1, ${Dim + 1}), i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))))"
 
-  private val knnL2SparkSql = knnSql(sparkDist2("q.embedding", "b.embedding"), asc = true)
-  private val knnL2DuckSql = knnSql(duckDist2("q.embedding", "b.embedding"), asc = true)
+  private val knnL2SparkSql = knnSql(rawBase, sparkDist2("q.embedding", "b.embedding"), asc = true)
+  private val knnL2DuckSql = knnSql(rawBase, duckDist2("q.embedding", "b.embedding"), asc = true)
 
-  private val normsSparkSql =
-    s"""SELECT vec_id, CAST(floor(1000000 * sqrt(${sparkDot("embedding", "embedding")})) AS BIGINT) AS norm_x1e6
-       |FROM embeddings ORDER BY vec_id""".stripMargin
   private val normsDuckSql =
     s"""SELECT vec_id, CAST(floor(1000000 * sqrt(${duckDot("embedding", "embedding")})) AS BIGINT) AS norm_x1e6
        |FROM embeddings ORDER BY vec_id""".stripMargin
@@ -91,31 +90,54 @@ object EmbedQueries {
       .map(b => s"CASE WHEN ${dotTerm(b)} > 0 THEN CAST(${1L << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
       .mkString(" + ")
 
-  private def annCodesSql(sgnCte: String, dotTerm: Int => String): String =
-    s"""WITH $sgnCte
-       |SELECT vec_id, CAST(${codeExpr(dotTerm)} AS BIGINT) AS code
+  private val annCodesDuckSql =
+    s"""WITH ${duckSgnCte("rp", CodeBits, Dim)}
+       |SELECT vec_id, CAST(${codeExpr(duckBitDot)} AS BIGINT) AS code
        |FROM embeddings CROSS JOIN sgn ORDER BY vec_id""".stripMargin
 
-  private val annCodesSparkSql = annCodesSql(sparkSgnCte("rp", CodeBits, Dim), sparkBitDot)
-  private val annCodesDuckSql = annCodesSql(duckSgnCte("rp", CodeBits, Dim), duckBitDot)
-
-  private def annBucketsSql(sgnCte: String, dotTerm: Int => String): String =
-    s"""WITH $sgnCte,
-       |codes AS (SELECT vec_id, CAST(${codeExpr(dotTerm)} AS BIGINT) AS code FROM embeddings CROSS JOIN sgn)
+  private def annBucketsSql(withCtes: String): String =
+    s"""WITH $withCtes
        |SELECT code, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec
        |FROM codes GROUP BY code ORDER BY code""".stripMargin
 
-  private def q(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    view(spark, dir, "embeddings")
-    spark.sql(sql)
-  }
+  private val annBucketsDuckSql = annBucketsSql(
+    s"""${duckSgnCte("rp", CodeBits, Dim)},
+       |codes AS (SELECT vec_id, CAST(${codeExpr(duckBitDot)} AS BIGINT) AS code FROM embeddings CROSS JOIN sgn)""".stripMargin)
+
+  // ------------------------------------------------------------------
+  // build/query split (see CodesCache): the norm table and the "rp" code
+  // table are input-only, so each is materialized once per (session, dir).
+  // The codes read the norm table, and carry its columns for the ANN
+  // re-rank; the forest's table 0 is the same projection.
+  // ------------------------------------------------------------------
+
+  /** View of `(vec_id, embedding, nrm)`: the input vectors and their norms. */
+  private[queries] def nrmView(spark: SparkSession, dir: String): String =
+    CodesCache.materialize(spark, dir, "embed_nrm",
+      s"SELECT vec_id, embedding, sqrt(${sparkDot("embedding", "embedding")}) AS nrm FROM embeddings")
+
+  /** View of `(vec_id, embedding, nrm, code)`: the H1 sign code of every
+    * vector under the "rp" matrix ([[CrossSql.sparkSgnCte]]). */
+  private[queries] def codesRpView(spark: SparkSession, dir: String): String =
+    CodesCache.materialize(spark, dir, "codes_rp",
+      s"""WITH ${sparkSgnCte("rp", CodeBits, Dim)}
+         |SELECT vec_id, embedding, nrm, CAST(${codeExpr(sparkBitDot)} AS BIGINT) AS code
+         |FROM ${nrmView(spark, dir)} CROSS JOIN sgn""".stripMargin)
+
+  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
+    query(spark, dir, "embeddings")(mkSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_embed_norms" -> ((s, d) => q(s, d, normsSparkSql)),
-    "q_knn_cosine" -> ((s, d) => q(s, d, knnCosSparkSql)),
-    "q_knn_l2" -> ((s, d) => q(s, d, knnL2SparkSql)),
-    "q_ann_codes" -> ((s, d) => q(s, d, annCodesSparkSql)),
-    "q_ann_buckets" -> ((s, d) => q(s, d, annBucketsSql(sparkSgnCte("rp", CodeBits, Dim), sparkBitDot)))
+    "q_embed_norms" -> ((s, d) => q(s, d)(
+      s"""SELECT vec_id, CAST(floor(1000000 * nrm) AS BIGINT) AS norm_x1e6
+         |FROM ${nrmView(s, d)} ORDER BY vec_id""".stripMargin)),
+    "q_knn_cosine" -> ((s, d) => q(s, d)(
+      cosSql(s"SELECT vec_id, embedding, nrm FROM ${nrmView(s, d)}", sparkDot))),
+    "q_knn_l2" -> ((s, d) => q(s, d)(knnL2SparkSql)),
+    "q_ann_codes" -> ((s, d) => q(s, d)(
+      s"SELECT vec_id, code FROM ${codesRpView(s, d)} ORDER BY vec_id")),
+    "q_ann_buckets" -> ((s, d) => q(s, d)(
+      annBucketsSql(s"codes AS (SELECT vec_id, code FROM ${codesRpView(s, d)})")))
   )
 
   val oracleSql: Map[String, String] = Map(
@@ -123,6 +145,6 @@ object EmbedQueries {
     "q_knn_cosine" -> knnCosDuckSql,
     "q_knn_l2" -> knnL2DuckSql,
     "q_ann_codes" -> annCodesDuckSql,
-    "q_ann_buckets" -> annBucketsSql(duckSgnCte("rp", CodeBits, Dim), duckBitDot)
+    "q_ann_buckets" -> annBucketsDuckSql
   )
 }

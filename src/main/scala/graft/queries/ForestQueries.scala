@@ -73,66 +73,66 @@ object ForestQueries {
   private def duckDot(a: String, b: String): String =
     s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
-  /** Per-table sgn + codes CTEs; table 0 also carries embedding + nrm for
-    * the exact re-rank (norms are table-independent). */
-  private def withCtes(sgnCte: (String, Int, Int, String) => String,
-      bitDot: Int => String, dot: (String, String) => String): String = {
+  /** Table t's sign matrix and code CTEs (`sgn_t`, `codes_t`). */
+  private def codesCtes(sgnCte: (String, Int, Int, String) => String, bitDot: Int => String,
+      t: Int, cols: String): String =
+    s"""${sgnCte(tag(t), EmbedQueries.CodeBits, Dim, s"sgn_$t")},
+       |codes_$t AS (SELECT vec_id$cols, CAST(${EmbedQueries.codeExpr(bitDot)} AS BIGINT) AS code FROM embeddings CROSS JOIN sgn_$t)""".stripMargin
+
+  /** The union of the tables' codes, `tc(t, vec_id, code)`, over CTEs
+    * `codes_t`. */
+  private def tcCte(codes0: String): String =
+    s"tc AS (SELECT 0 AS t, vec_id, code FROM $codes0" +
+      (1 until NumTables).map(t => s" UNION ALL SELECT $t AS t, vec_id, code FROM codes_$t").mkString + ")"
+
+  /** Bucket sizes per (table, level, prefix) over a level relation. */
+  private def sizesSql(lv: String): String = s"SELECT t, s, pre, COUNT(*) AS sz FROM $lv GROUP BY t, s, pre"
+
+  /** DuckDB header: the per-table codes (table 0 also carries embedding +
+    * nrm for the exact re-rank; norms are table-independent), the level
+    * explosion and the bucket sizes, all inline. */
+  private val duckWith: String = {
     val perTable = (0 until NumTables).map { t =>
-      val nrm = if (t == 0) s", embedding, sqrt(${dot("embedding", "embedding")}) AS nrm" else ""
-      s"""${sgnCte(tag(t), EmbedQueries.CodeBits, Dim, s"sgn_$t")},
-         |codes_$t AS (SELECT vec_id$nrm, CAST(${EmbedQueries.codeExpr(bitDot)} AS BIGINT) AS code FROM embeddings CROSS JOIN sgn_$t)""".stripMargin
+      val nrm = if (t == 0) s", embedding, sqrt(${duckDot("embedding", "embedding")}) AS nrm" else ""
+      codesCtes(duckSgnCte, EmbedQueries.duckBitDot, t, nrm)
     }
-    val union = (0 until NumTables)
-      .map(t => s"SELECT $t AS t, vec_id, code FROM codes_$t")
-      .mkString(" UNION ALL ")
     s"""${perTable.mkString(",\n")},
-       |tc AS ($union),
+       |${tcCte("codes_0")},
        |base AS (SELECT vec_id, embedding, nrm FROM codes_0),
-       |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0)""".stripMargin
-  }
-
-  private val duckWith = withCtes(duckSgnCte, EmbedQueries.duckBitDot, duckDot)
-
-  /** Spark side of the forest index — all four tables' (t, vec_id, code)
-    * rows, materialized ONCE per (session, dir) via [[CodesCache]] (table 0
-    * reuses [[AnnQueries.codesRpView]], the same "rp" projection). Without
-    * this, CTE inlining rebuilt the sign codes under every reference — 40
-    * instantiations of the md5 matrix + interpreted code dots in one
-    * forest-kNN plan (see CodesCache). */
-  private def forestTcSql(rpView: String): String = {
-    val perTable = (1 until NumTables).map { t =>
-      s"""${sparkSgnCte(tag(t), EmbedQueries.CodeBits, Dim, s"sgn_$t")},
-         |codes_$t AS (SELECT vec_id, CAST(${EmbedQueries.codeExpr(EmbedQueries.sparkBitDot)} AS BIGINT) AS code FROM embeddings CROSS JOIN sgn_$t)""".stripMargin
-    }
-    val union = (1 until NumTables)
-      .map(t => s"UNION ALL SELECT $t AS t, vec_id, code FROM codes_$t")
-      .mkString("\n")
-    s"""WITH ${perTable.mkString(",\n")}
-       |SELECT 0 AS t, vec_id, code FROM $rpView
-       |$union""".stripMargin
-  }
-
-  /** Cached-view CTE header for the Spark dialect: same relation names the
-    * DuckDB dialect defines inline (`tc`, `base`, `qbase`, `codes_0`), so
-    * [[forestCtes]] stays one shared text. */
-  private def sparkWith(spark: SparkSession, dir: String): String = {
-    val rp = AnnQueries.codesRpView(spark, dir)
-    val tc = CodesCache.materialize(spark, dir, "forest_tc", forestTcSql(rp))
-    s"""tc AS (SELECT t, vec_id, code FROM $tc),
-       |codes_0 AS (SELECT vec_id, code FROM $rp),
-       |base AS (SELECT vec_id, embedding, nrm FROM $rp),
-       |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0)""".stripMargin
-  }
-
-  /** Level explosion, dialect-split only on the sequence generator. */
-  private val sparkLvCtes =
-    s"""lv AS (SELECT t, vec_id, s, shiftright(code, s) AS pre
-       |  FROM tc LATERAL VIEW explode(sequence(0, $MaxDepth)) tl AS s),
-       |qlv AS (SELECT * FROM lv WHERE vec_id % $QueryStride = 0)""".stripMargin
-  private val duckLvCtes =
-    s"""lv AS (SELECT t, vec_id, CAST(s AS INT) AS s, code >> s AS pre
+       |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
+       |lv AS (SELECT t, vec_id, CAST(s AS INT) AS s, code >> s AS pre
        |  FROM tc, (SELECT unnest(range(0, ${MaxDepth + 1})) AS s) tl),
-       |qlv AS (SELECT * FROM lv WHERE vec_id % $QueryStride = 0)""".stripMargin
+       |qlv AS (SELECT * FROM lv WHERE vec_id % $QueryStride = 0),
+       |sizes AS (
+       |  ${sizesSql("lv")})""".stripMargin
+  }
+
+  /** Spark side of the forest index, built once per (session, dir) via
+    * [[CodesCache]]: the level table `lv(t, vec_id, s, pre)` — every
+    * table's code at every prefix length — and its bucket sizes. Table 0
+    * reuses [[EmbedQueries.codesRpView]], the same "rp" projection, which
+    * also serves the re-rank's `base`. Without the views, CTE inlining
+    * rebuilt the sign codes under every reference (40 instantiations of the
+    * md5 matrix + interpreted code dots in one forest-kNN plan, see
+    * CodesCache), and each execution re-exploded the levels and re-counted
+    * the buckets. The relation names are the ones the DuckDB header defines
+    * inline, so [[forestCtes]] stays one shared text. */
+  private def sparkWith(spark: SparkSession, dir: String): String = {
+    val rp = EmbedQueries.codesRpView(spark, dir)
+    val perTable = (1 until NumTables).map(t => codesCtes(sparkSgnCte, EmbedQueries.sparkBitDot, t, ""))
+    val lv = CodesCache.materialize(spark, dir, "forest_lv",
+      s"""WITH ${perTable.mkString(",\n")},
+         |${tcCte(rp)}
+         |SELECT t, vec_id, s, shiftright(code, s) AS pre
+         |FROM tc LATERAL VIEW explode(sequence(0, $MaxDepth)) tl AS s""".stripMargin)
+    val sizes = CodesCache.materialize(spark, dir, "forest_sizes", sizesSql(lv))
+    s"""codes_0 AS (SELECT vec_id, code FROM $rp),
+       |base AS (SELECT vec_id, embedding, nrm FROM $rp),
+       |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
+       |lv AS (SELECT t, vec_id, s, pre FROM $lv),
+       |qlv AS (SELECT * FROM lv WHERE vec_id % $QueryStride = 0),
+       |sizes AS (SELECT t, s, pre, sz FROM $sizes)""".stripMargin
+  }
 
   /** chosen level per (query, table) + union candidates + exact re-rank —
     * identical text in both dialects up to the XOR spelling.
@@ -145,9 +145,7 @@ object ForestQueries {
     * blowup hidden in the count stage. */
   private def forestCtes(dot: (String, String) => String,
       xor: (String, String) => String): String =
-    s"""sizes AS (
-       |  SELECT t, s, pre, COUNT(*) AS sz FROM lv GROUP BY t, s, pre),
-       |cnt AS (
+    s"""cnt AS (
        |  SELECT ql.vec_id AS query_id, ql.t AS t, ql.s AS s, b.sz - 1 AS c
        |  FROM qlv ql JOIN sizes b ON ql.t = b.t AND ql.s = b.s AND ql.pre = b.pre),
        |chosen AS (
@@ -178,18 +176,16 @@ object ForestQueries {
        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
        |  FROM cand)""".stripMargin
 
-  private def knnSql(withC: String, lvC: String,
+  private def knnSql(withC: String,
       dot: (String, String) => String, xor: (String, String) => String): String =
     s"""WITH $withC,
-       |$lvC,
        |${forestCtes(dot, xor)}
        |SELECT query_id, rank, neighbor_id FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
-  private def recallSql(withC: String, lvC: String,
+  private def recallSql(withC: String,
       dot: (String, String) => String, xor: (String, String) => String): String =
     s"""WITH $withC,
-       |$lvC,
        |${forestCtes(dot, xor)},
        |ann AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= $TopK),
        |exact AS (SELECT query_id, neighbor_id FROM (
@@ -207,21 +203,15 @@ object ForestQueries {
   private val sparkXor = (a: String, b: String) => s"$a ^ $b"
   private val duckXor = (a: String, b: String) => s"xor($a, $b)"
 
-  private val knnDuckSql = knnSql(duckWith, duckLvCtes, duckDot, duckXor)
-  private val recallDuckSql = recallSql(duckWith, duckLvCtes, duckDot, duckXor)
+  private val knnDuckSql = knnSql(duckWith, duckDot, duckXor)
+  private val recallDuckSql = recallSql(duckWith, duckDot, duckXor)
 
-  /** Register the input table, then build the SQL — the materialized code
-    * views resolve against the freshly registered `embeddings`. */
-  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame = {
-    view(spark, dir, "embeddings")
-    spark.sql(mkSql)
-  }
+  private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
+    query(spark, dir, "embeddings")(mkSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_forest_knn" -> ((s, d) =>
-      q(s, d)(knnSql(sparkWith(s, d), sparkLvCtes, sparkDot, sparkXor))),
-    "q_ann_forest_recall" -> ((s, d) =>
-      q(s, d)(recallSql(sparkWith(s, d), sparkLvCtes, sparkDot, sparkXor)))
+    "q_ann_forest_knn" -> ((s, d) => q(s, d)(knnSql(sparkWith(s, d), sparkDot, sparkXor))),
+    "q_ann_forest_recall" -> ((s, d) => q(s, d)(recallSql(sparkWith(s, d), sparkDot, sparkXor)))
   )
 
   val oracleSql: Map[String, String] = Map(

@@ -118,10 +118,8 @@ object TransformQueries {
        |SELECT vec_id, CAST(${EmbedQueries.codeExpr(EmbedQueries.duckBitDot)} AS BIGINT) AS ssc_code
        |FROM embeddings CROSS JOIN sgn ORDER BY vec_id""".stripMargin
 
-  private def q(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    view(spark, dir, "embeddings")
-    spark.sql(sql)
-  }
+  private def q(spark: SparkSession, dir: String, sql: String): DataFrame =
+    query(spark, dir, "embeddings")(sql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_null_transform" -> ((s, d) => q(s, d, nullSparkSql)),

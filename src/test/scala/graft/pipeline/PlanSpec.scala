@@ -6,7 +6,7 @@ import graft.synth.ClipTableGen
 import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -92,6 +92,27 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"forest read path should not rescan parquet ($fileScans FileScans — codes rebuilt per reference?):\n${plan.take(3000)}")
     assert(plan.contains("ExistingRDD"),
       s"expected scans of the materialized (checkpointed) code views:\n${plan.take(3000)}")
+  }
+
+  /** The executed plan of a query's second execution in the session:
+    * the first built its index views. */
+  private def warmPlan(q: String): SparkPlan = {
+    val dir = "/root/testdata/sf0.001"
+    graft.SparkEntry.queries(q)(spark, dir).collect()
+    val df = graft.SparkEntry.queries(q)(spark, dir)
+    df.collect() // AQE finalizes the physical plan only on execution
+    df.queryExecution.executedPlan
+  }
+
+  test("a warm q_substring_pairs plan scans the window table, it explodes no windows") {
+    val plan = warmPlan("q_substring_pairs")
+    assert(collect(plan) { case g: GenerateExec => g }.isEmpty, plan.toString)
+  }
+
+  test("a warm q_ann_forest_knn plan explodes no levels and scans no parquet") {
+    val plan = warmPlan("q_ann_forest_knn")
+    assert(collect(plan) { case g: GenerateExec => g }.isEmpty, plan.toString)
+    assert(collect(plan) { case f: FileSourceScanExec => f }.isEmpty, plan.toString)
   }
 
   test("verify phase is object-serde free (native expressions, no Dataset.map round-trip)") {

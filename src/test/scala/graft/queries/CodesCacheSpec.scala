@@ -1,11 +1,27 @@
 package graft.queries
 
-import graft.SparkTestBase
+import java.io.File
+
+import graft.{SparkEntry, SparkTestBase}
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[CodesCache]] — build-once materialization of derived index relations. */
+/** [[CodesCache]] — the query surface's build side: the inputs and every
+  * input-only relation, built once per (session, dir). */
 class CodesCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
+
+  /** The LSH/ANN headline queries (the `ann_queries` benchmark mix). */
+  private val Headline = Seq("q_exact_dedup", "q_minhash_bands", "q_lsh_pairs", "q_near_dup_pairs",
+    "q_simhash_pairs", "q_substring_pairs", "q_knn_cosine", "q_ann_buckets",
+    "q_ann_hamming_knn", "q_ann_forest_knn")
+  private val Sf0001 = "/root/testdata/sf0.001"
+  private val Sf001 = "/root/testdata/sf0.01"
+
+  /** A query's rows, order-free. */
+  private def rows(s: SparkSession, q: String, dir: String): Seq[String] =
+    SparkEntry.queries(q)(s, dir).collect().map(_.mkString("|")).sorted.toSeq
 
   test("same (dir, name) returns the same view; different dirs get distinct views") {
     val v1 = CodesCache.materialize(spark, "/fake/dir-a", "cc_spec", "SELECT 1 AS v")
@@ -53,13 +69,63 @@ class CodesCacheSpec extends AnyFunSuite {
   }
 
   test("forest knn and recall share one materialized code table per dir") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0001
+    def forestViews = spark.catalog.listTables().collect().count(t =>
+      Seq("forest_lv_", "forest_sizes_", "codes_rp_", "embed_nrm_").exists(t.name.startsWith))
     ForestQueries.queries("q_ann_forest_knn")(spark, dir).count()
-    val before = spark.catalog.listTables().collect()
-      .count(t => t.name.startsWith("forest_tc_") || t.name.startsWith("codes_rp_"))
+    val before = forestViews
     ForestQueries.queries("q_ann_forest_recall")(spark, dir).count()
-    val after = spark.catalog.listTables().collect()
-      .count(t => t.name.startsWith("forest_tc_") || t.name.startsWith("codes_rp_"))
-    assert(before === after, "second forest query must reuse the views, not register new ones")
+    assert(before === forestViews, "second forest query must reuse the views, not register new ones")
+  }
+
+  test("one session alternating two dirs answers each query from that dir's inputs and index") {
+    // `documents` and `embeddings` are view names every dir shares: a cached
+    // input or index that served the other dir would change the rows
+    val dirs = Seq(Sf0001, Sf001)
+    val fresh = dirs.map { d =>
+      val s = spark.newSession()
+      d -> Headline.map(q => q -> rows(s, q, d)).toMap
+    }.toMap
+    assert(Headline.forall(q => fresh(Sf0001)(q) != fresh(Sf001)(q)),
+      "the two dirs must disagree, or a crossed cache could not show")
+    val mixed = spark.newSession()
+    for (round <- 1 to 2; q <- Headline; d <- dirs)
+      assert(rows(mixed, q, d) === fresh(d)(q), s"round $round, $q over $d")
+  }
+
+  test("a warm headline pass infers no schema and runs only its probe jobs") {
+    val s = spark.newSession()
+    Headline.foreach(q => SparkEntry.queries(q)(s, Sf0001).collect())
+    val warm = Headline.map(q =>
+      q -> JobCounter.callSites(s.sparkContext)(SparkEntry.queries(q)(s, Sf0001).collect())._2)
+    for ((q, sites) <- warm)
+      assert(!sites.exists(_.startsWith("parquet at")), s"$q re-read an input: $sites")
+    // 78 when every execution re-read its inputs and re-derived the
+    // windows, seeds, forest levels and sizes, bucket codes and norms
+    assert(warm.map(_._2.size).sum === 65, warm.map { case (q, j) => s"$q=${j.size}" }.mkString(" "))
+  }
+
+  test("GRAFT_INDEX_DIR: the query surface's views spill once and are re-read by a new session") {
+    val root = java.nio.file.Files.createTempDirectory("graft-indexdir-views").toFile
+    val queries = Seq("q_simhash_pairs", "q_substring_pairs", "q_knn_cosine", "q_ann_buckets",
+      "q_ann_hamming_knn", "q_ann_forest_knn")
+    def all(s: SparkSession) = queries.map(q => rows(s, q, Sf0001))
+    val inMemory = all(spark.newSession())
+    System.setProperty("graft.index.dir", root.getPath)
+    try {
+      val first = all(spark.newSession())
+      val spills = Seq("doc_sim_bands_", "doc_wins_", "doc_seeds_", "embed_nrm_", "codes_rp_",
+        "ann_bb_", "forest_lv_", "forest_sizes_").map(p => p -> root.listFiles().filter(_.getName.startsWith(p)))
+      for ((p, dirs) <- spills)
+        assert(dirs.length == 1 && new File(dirs.head, "_SUCCESS").isFile, s"$p: one completed spill")
+      def stamps = root.listFiles().flatMap(_.listFiles()).map(f => f.getPath -> f.lastModified).toMap
+      val written = stamps
+      assert(all(spark.newSession()) === first)
+      assert(stamps === written, "a new session must read the spilled views, not rewrite them")
+      assert(first === inMemory, "spilled and checkpointed views must answer alike")
+    } finally {
+      System.clearProperty("graft.index.dir")
+      graft.tools.Scratch.deleteRec(root)
+    }
   }
 }
