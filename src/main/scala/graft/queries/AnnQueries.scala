@@ -21,7 +21,8 @@ import CrossSql._
   *      Q1/Q2's `bucket[hashCode ^ mask]` lookups
   *      (`/root/reference/hashIndex/StdHashIndex.h:129-157`) as a shuffled
   *      hash join instead of a pairwise theta-join. Candidates from all
-  *      bands union via DISTINCT (Q4, `HashCollection.h:196-210`; the
+  *      bands union as a set (Q4, `HashCollection.h:196-210`: each pair is
+  *      kept on its first hitting band, see [[sparkAnnCtes]]; the
   *      reference accumulates per-table candidates in a round-robin
   *      interleave there — LshForestSpec's "Q4 depth-major round-robin"
   *      set-equivalence argument covers this non-forest union too, since
@@ -76,17 +77,12 @@ object AnnQueries {
     * unbounded candidates — the one 100 TB hazard the uncapped plan had.
     *
     * Cross-dialect equivalence: the Spark probe join gathers a SUPERSET of
-    * the Hamming ball (pigeonhole), but every extra has distance
-    * > [[ProbeRadius]], strictly greater than every ball member's — so
-    * ball members' (distance, id) ranks are identical whether computed
-    * within the superset (Spark) or within the exact ball (oracle), and
-    * the post-cap `bit_count ≤ r` filter leaves the same capped set. */
+    * the Hamming ball (pigeonhole), and its `bit_count ≤ r` filter drops
+    * the extras before the cap. Every extra has distance > [[ProbeRadius]],
+    * strictly greater than every ball member's, so dropping them changes
+    * no ball member's (distance, id) rank: both dialects cap the same
+    * ranked ball. */
   val GatherCap = 128
-
-  private def sparkDot(a: String, b: String): String =
-    s"aggregate(sequence(1, $Dim), CAST(0 AS DOUBLE), (acc, i) -> acc + CAST(element_at($a, i) AS DOUBLE) * CAST(element_at($b, i) AS DOUBLE))"
-  private def duckDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   private def codesCte(bitDot: Int => String, normExpr: String): String =
     // per-vector norm precomputed once (identical double fold as per-pair)
@@ -101,44 +97,51 @@ object AnnQueries {
 
   private val bandMask = (1L << BandBits) - 1
 
-  /** The base side of the probe join: every vector's band keys, built once
-    * per (session, dir) ([[CodesCache]]). */
+  /** The base side of the probe join: every vector's band keys and its
+    * code, built once per (session, dir) ([[CodesCache]]). */
   private def bbView(spark: SparkSession, dir: String): String =
     CodesCache.materialize(spark, dir, "ann_bb",
-      s"""SELECT vec_id, band_idx, shiftright(code, band_idx * $BandBits) & $bandMask AS band_key
+      s"""SELECT vec_id, band_idx, shiftright(code, band_idx * $BandBits) & $bandMask AS band_key, code
          |FROM ${EmbedQueries.codesRpView(spark, dir)} LATERAL VIEW explode(sequence(0, ${Bands - 1})) tb AS band_idx""".stripMargin)
 
   /** Spark CTE chain on top of `codes`: banded multiprobe equi-join →
-    * exact filter + re-rank (see class doc, step 2). */
+    * exact filter + re-rank (see class doc, step 2).
+    *
+    * Probe and base rows both carry the code, so each joined row knows its
+    * pair's Hamming distance `hd` without a lookup. A probe hits band j iff
+    * the pair's band-j codes differ in at most [[BandRadius]] bits (the
+    * masks are that whole ball), so a pair joins once per such band; only
+    * the row of its first such band is kept ([[CrossSql.firstBand]]), which
+    * leaves one row per pair without a DISTINCT. The `hd ≤ r` filter runs
+    * before the [[GatherCap]] window (see there for why that is exact). Only the capped candidates fetch `embedding, nrm`:
+    * one broadcast lookup per side. */
   private def sparkAnnCtes(spark: SparkSession, dir: String): String = {
     val probes = BandProbeMasks.map(m => s"CAST($m AS BIGINT)").mkString(", ")
+    val first = firstBand(Bands, j =>
+      s"bit_count(shiftright(qp.code ^ bb.code, ${j * BandBits}) & $bandMask) <= $BandRadius")
     s"""q AS (SELECT * FROM codes WHERE vec_id % $QueryStride = 0),
-       |bb AS (SELECT vec_id, band_idx, band_key FROM ${bbView(spark, dir)}),
        |qp AS (
-       |  SELECT vec_id, band_idx,
+       |  SELECT vec_id, band_idx, code,
        |    (shiftright(code, band_idx * $BandBits) & $bandMask) ^ pm AS band_key
        |  FROM q LATERAL VIEW explode(sequence(0, ${Bands - 1})) tb AS band_idx
        |       LATERAL VIEW explode(array($probes)) tm AS pm),
        |cand0 AS (
-       |  SELECT DISTINCT qp.vec_id AS query_id, bb.vec_id AS neighbor_id
-       |  FROM qp JOIN bb ON qp.band_idx = bb.band_idx AND qp.band_key = bb.band_key
-       |  WHERE qp.vec_id <> bb.vec_id),
+       |  SELECT qp.vec_id AS query_id, bb.vec_id AS neighbor_id, bit_count(qp.code ^ bb.code) AS hd
+       |  FROM qp JOIN ${bbView(spark, dir)} bb ON qp.band_idx = bb.band_idx AND qp.band_key = bb.band_key
+       |  WHERE qp.vec_id <> bb.vec_id AND bit_count(qp.code ^ bb.code) <= $ProbeRadius
+       |    AND qp.band_idx = $first),
        |cand_ids AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT c0.query_id, c0.neighbor_id,
-       |      CAST(row_number() OVER (PARTITION BY c0.query_id
-       |        ORDER BY bit_count(cq.code ^ cb.code) ASC, c0.neighbor_id ASC) AS BIGINT) AS crank
-       |    FROM cand0 c0
-       |    JOIN q cq ON cq.vec_id = c0.query_id
-       |    JOIN codes cb ON cb.vec_id = c0.neighbor_id) rc
+       |  SELECT query_id, neighbor_id, hd FROM (
+       |    SELECT query_id, neighbor_id, hd,
+       |      row_number() OVER (PARTITION BY query_id ORDER BY hd ASC, neighbor_id ASC) AS crank
+       |    FROM cand0) rc
        |  WHERE crank <= $GatherCap),
        |cand AS (
-       |  SELECT ci.query_id, ci.neighbor_id,
-       |    ${sparkDot("q.embedding", "b.embedding")} / (q.nrm * b.nrm) AS score
+       |  SELECT ci.query_id, ci.neighbor_id, ci.hd,
+       |    ${sparkDot("qv.embedding", "b.embedding")} / (qv.nrm * b.nrm) AS score
        |  FROM cand_ids ci
-       |  JOIN q ON q.vec_id = ci.query_id
-       |  JOIN codes b ON b.vec_id = ci.neighbor_id
-       |  WHERE bit_count(q.code ^ b.code) <= $ProbeRadius),
+       |  JOIN codes qv ON qv.vec_id = ci.query_id
+       |  JOIN codes b ON b.vec_id = ci.neighbor_id),
        |ranked AS (
        |  SELECT query_id, neighbor_id,
        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
@@ -157,14 +160,14 @@ object AnnQueries {
        |  FROM q JOIN codes b ON q.vec_id <> b.vec_id
        |    AND bit_count(xor(q.code, b.code)) <= $ProbeRadius),
        |cand_ids AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT c0.query_id, c0.neighbor_id,
+       |  SELECT query_id, neighbor_id, hd FROM (
+       |    SELECT c0.query_id, c0.neighbor_id, c0.hd,
        |      CAST(row_number() OVER (PARTITION BY c0.query_id
        |        ORDER BY c0.hd ASC, c0.neighbor_id ASC) AS BIGINT) AS crank
        |    FROM cand0 c0) rc
        |  WHERE crank <= $GatherCap),
        |cand AS (
-       |  SELECT ci.query_id, ci.neighbor_id,
+       |  SELECT ci.query_id, ci.neighbor_id, ci.hd,
        |    ${duckDot("q.embedding", "b.embedding")} / (q.nrm * b.nrm) AS score
        |  FROM cand_ids ci
        |  JOIN q ON q.vec_id = ci.query_id
@@ -215,17 +218,13 @@ object AnnQueries {
   val CurveBudgets: Seq[Int] = Seq(1, 5, 10, 20)
 
   private def recallCurveSql(withCtes: String, annCtes: String,
-      xor: (String, String) => String, dot: (String, String) => String,
-      budgetsRel: String): String =
+      dot: (String, String) => String, budgetsRel: String): String =
     s"""WITH $withCtes,
        |$annCtes,
        |disc AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY c.query_id ORDER BY
-       |      bit_count(${xor("q.code", "b.code")}) ASC, c.neighbor_id ASC) AS BIGINT) AS drank
-       |  FROM cand c
-       |  JOIN q ON q.vec_id = c.query_id
-       |  JOIN codes b ON b.vec_id = c.neighbor_id),
+       |  SELECT query_id, neighbor_id,
+       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY hd ASC, neighbor_id ASC) AS BIGINT) AS drank
+       |  FROM cand),
        |exact AS (SELECT query_id, neighbor_id FROM (
        |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
        |    CAST(row_number() OVER (PARTITION BY q.vec_id ORDER BY
@@ -242,8 +241,7 @@ object AnnQueries {
        |GROUP BY exact.query_id, budgets.r ORDER BY query_id, r""".stripMargin
 
   private val budgetsList = CurveBudgets.mkString(", ")
-  private val recallCurveDuckSql = recallCurveSql(duckWith, duckAnnCtes,
-    (a, b) => s"xor($a, $b)", duckDot,
+  private val recallCurveDuckSql = recallCurveSql(duckWith, duckAnnCtes, duckDot,
     s"SELECT CAST(unnest([$budgetsList]) AS BIGINT) AS r")
 
   private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
@@ -255,8 +253,7 @@ object AnnQueries {
     "q_ann_recall" -> ((s, d) =>
       q(s, d)(annRecallSql(sparkWith(s, d), sparkAnnCtes(s, d), sparkDot))),
     "q_ann_recall_curve" -> ((s, d) =>
-      q(s, d)(recallCurveSql(sparkWith(s, d), sparkAnnCtes(s, d),
-        (a, b) => s"$a ^ $b", sparkDot,
+      q(s, d)(recallCurveSql(sparkWith(s, d), sparkAnnCtes(s, d), sparkDot,
         s"SELECT CAST(r AS BIGINT) AS r FROM (SELECT explode(array($budgetsList)) AS r)")))
   )
 

@@ -20,13 +20,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    cached DataFrame does neither again, so re-registering it under the
   *    table's view name ([[CrossSql.view]]) costs no job.
   *  - [[materialize]]: the derived index relations. Over `documents`:
-  *    the shingle set, minhash signatures and band keys, simhash codes
-  *    and band rows, and the substring window and seed tables. Over
-  *    `embeddings`: the per-vector norm table, the "rp" sign codes (read
-  *    by the bucket, ANN and forest paths) and their multiprobe band keys,
-  *    and the forest's level table with its `(t, s, pre)` bucket sizes. A
-  *    warm query scans these and runs only its query-dependent part: probe
-  *    joins, verification, rank windows and the final ORDER BY.
+  *    the shingle set (`doc_sh`) and each doc's distinct shingles as one
+  *    array with its size (`doc_shsets`), minhash signatures (`doc_mh`),
+  *    band keys (`doc_bands`, each row also holding all of its doc's keys
+  *    in band order), simhash codes (`doc_simhash`) and band rows
+  *    (`doc_sim_bands`, each with its doc's code), and the substring
+  *    window and seed tables (`doc_wins`, `doc_seeds`). Over `embeddings`:
+  *    the per-vector norm table (`embed_nrm`), the "rp" sign codes
+  *    (`codes_rp`, read by the bucket, ANN and forest paths) and their
+  *    multiprobe band keys (`ann_bb`, each with its code), and the forest's
+  *    level table (`forest_lv`, each row with its vector's table-0 code
+  *    and its `(t, s, pre)` bucket size). The rows carry what a candidate
+  *    pair is ranked or scored on, so a warm query scans these and runs
+  *    only its query-dependent part — probe joins, verification, rank
+  *    windows and the final ORDER BY — and fetches a per-id attribute only
+  *    for candidates past its rank cap, never to rank them.
   *
   * At production scale a materialization is the bucketed index table you
   * would write to distributed storage once per index build (operator
@@ -69,13 +77,14 @@ object CodesCache {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Entry]()
 
-  /** Collision-resistant dir tag for view names: 16 hex chars of SHA-256.
-    * (32-bit String.hashCode collides birthday-style across a few tens of
-    * thousands of dirs — and a collision would silently serve one dir's
-    * index for another, since createOrReplaceTempView overwrites.) */
-  private def dirTag(dir: String): String = {
+  /** Collision-resistant tag of a view's input dir and defining SQL: 16 hex
+    * chars of SHA-256. (32-bit String.hashCode collides birthday-style
+    * across a few tens of thousands of dirs — and a collision would
+    * silently serve one dir's index for another, since
+    * createOrReplaceTempView overwrites.) */
+  private def tag(dir: String, sql: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8"))
+      .digest(s"$dir\u0000$sql".getBytes("UTF-8"))
     d.take(8).map(b => f"$b%02x").mkString
   }
 
@@ -89,10 +98,14 @@ object CodesCache {
   }
 
   /** Temp-view name of `sql` (over `dir`'s already-registered tables),
-    * materialized once per (session, dir, name); later calls — including
-    * from other query families in the same session — reuse the view. The
-    * view name carries a dir digest so one session can hold several dirs'
-    * indexes side by side.
+    * materialized once per (session, dir, name, sql); later calls —
+    * including from other query families in the same session — reuse the
+    * view. The view name is `<name>_<tag>`, the tag a digest of the dir and
+    * the SQL text: one session can hold several dirs' indexes side by side,
+    * and a spill under `GRAFT_INDEX_DIR` (named like the view) is only
+    * re-read by the definition that wrote it. A view whose SQL names
+    * another view names its tag, so a changed definition renames every
+    * view built on it too.
     *
     * Materialization is an EAGER `localCheckpoint` (or a parquet write
     * when `GRAFT_INDEX_DIR` is set — see class doc for the fault-model
@@ -104,8 +117,8 @@ object CodesCache {
     * references CANNOT re-expand into a rebuild. */
   def materialize(spark: SparkSession, dir: String, name: String, sql: String): String = {
     evictStopped()
-    cache.computeIfAbsent((spark, dir, name), _ => {
-      val viewName = s"${name}_${dirTag(dir)}"
+    val viewName = s"${name}_${tag(dir, sql)}"
+    cache.computeIfAbsent((spark, dir, viewName), _ => {
       // env for deployments; -Dgraft.index.dir for in-JVM callers (tests)
       val df = sys.props.get("graft.index.dir").orElse(sys.env.get("GRAFT_INDEX_DIR")) match {
         case Some(root) =>

@@ -90,6 +90,25 @@ object CrossSql {
        |    ${duckH60(s"concat(CAST(perm // $Rows AS VARCHAR), '|', string_agg(concat(lpad(CAST(perm AS VARCHAR), 2, '0'), ':', CAST(minhash AS VARCHAR)), ',' ORDER BY perm))")} AS band_key
        |  FROM mh GROUP BY doc_id, perm // $Rows)""".stripMargin
 
+  /** Ordered double dot product of two FLOAT[] `embedding` columns, Spark
+    * dialect: a left-to-right fold over double-cast elements. [[duckDot]]
+    * spells the identical reduction, so both engines compute the same
+    * doubles bit for bit and their rank windows agree. */
+  def sparkDot(a: String, b: String): String =
+    s"aggregate(sequence(1, ${EmbedQueries.Dim}), CAST(0 AS DOUBLE), (acc, i) -> acc + CAST(element_at($a, i) AS DOUBLE) * CAST(element_at($b, i) AS DOUBLE))"
+
+  /** [[sparkDot]] in the DuckDB dialect. */
+  def duckDot(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, ${EmbedQueries.Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+
+  /** The first band, of `bands`, on which a candidate pair meets (`meets(j)`
+    * is the predicate for band j; SQL NULL when it meets on none). A banded
+    * equi-join yields a pair once per band it meets on, so keeping only the
+    * row whose band is the pair's first band keeps each pair exactly once:
+    * the `DISTINCT` over the pairs, without its shuffle. */
+  def firstBand(bands: Int, meets: Int => String): String =
+    (0 until bands).map(j => s"WHEN ${meets(j)} THEN $j").mkString("CASE ", " ", " END")
+
   /** Hoisted ±1 sign-matrix CTE `sgn(m)`: `m[b+1][j] ∈ {−1,+1}` from md5
     * parity of "<tag><b>_<j>" — the cross-engine stand-in for the reference's
     * seeded Gaussian projection rows

@@ -22,9 +22,9 @@ object DocQueries {
 
   // ------------------------------------------------------------------
   // build/query split (see CodesCache): the shared derived relations —
-  // shingle set, minhash signatures, band keys, simhash codes and band
-  // rows, substring windows and seeds — are each materialized ONCE per
-  // (session, dir) and every query scans the view.
+  // shingle set and per-doc shingle arrays, minhash signatures, band keys,
+  // simhash codes and band rows, substring windows and seeds — are each
+  // materialized ONCE per (session, dir) and every query scans the view.
   // Without this, CTE inlining rebuilt the full md5 derivation chain under
   // every reference (q_simhash_pairs re-derived simhash codes ~10x: 11
   // documents.parquet scans in one plan). The DuckDB oracles keep the pure
@@ -35,17 +35,33 @@ object DocQueries {
     CodesCache.materialize(s, d, "doc_sh",
       s"$sparkShingleCte\nSELECT doc_id, s FROM sh")
 
+  /** Each doc's distinct shingles as one array `sh`, with its size `n`. */
+  private def shSetsV(s: SparkSession, d: String): String =
+    CodesCache.materialize(s, d, "doc_shsets",
+      s"SELECT doc_id, collect_list(s) AS sh, COUNT(*) AS n FROM ${shV(s, d)} GROUP BY doc_id")
+
   private def mhV(s: SparkSession, d: String): String =
     CodesCache.materialize(s, d, "doc_mh",
       s"""WITH sh AS (SELECT doc_id, s FROM ${shV(s, d)}),
          |$sparkMhCteBody
          |SELECT doc_id, perm, minhash FROM mh""".stripMargin)
 
+  /** The band rows `(doc_id, band_idx, band_key, keys)`: `keys` holds all
+    * of the doc's band keys in band order, so a banded pair knows every band
+    * it meets on ([[firstBandOfPair]]). */
   private def bandsV(s: SparkSession, d: String): String =
     CodesCache.materialize(s, d, "doc_bands",
       s"""WITH mh AS (SELECT doc_id, perm, minhash FROM ${mhV(s, d)}),
          |$sparkBandsCteBody
-         |SELECT doc_id, band_idx, band_key FROM bands""".stripMargin)
+         |SELECT doc_id, band_idx, band_key,
+         |  transform(array_sort(collect_list(struct(band_idx, band_key)) OVER (PARTITION BY doc_id)), k -> k.band_key) AS keys
+         |FROM bands""".stripMargin)
+
+  /** The MinHash band self-join's pair filter on Spark: a pair joins once
+    * per band whose keys it shares, and only the row of its first such band
+    * is kept ([[CrossSql.firstBand]]), so the pairs need no DISTINCT. */
+  private val firstBandOfPair: String =
+    s"x.band_idx = ${firstBand(Bands, j => s"element_at(x.keys, ${j + 1}) = element_at(y.keys, ${j + 1})")}"
 
   private def simV(s: SparkSession, d: String): String =
     CodesCache.materialize(s, d, "doc_simhash",
@@ -186,9 +202,10 @@ object DocQueries {
        |SELECT doc_id, band_idx, band_key FROM bands ORDER BY doc_id, band_idx""".stripMargin
 
   private def lshPairsSparkSql(s: SparkSession, d: String) =
-    s"""WITH bands AS (SELECT doc_id, band_idx, band_key FROM ${bandsV(s, d)})
-       |SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+    s"""WITH bands AS (SELECT doc_id, band_idx, band_key, keys FROM ${bandsV(s, d)})
+       |SELECT x.doc_id AS a, y.doc_id AS b
        |FROM bands x JOIN bands y ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id
+       |WHERE $firstBandOfPair
        |ORDER BY a, b""".stripMargin
 
   private val lshPairsDuckSql =
@@ -198,10 +215,10 @@ object DocQueries {
        |ORDER BY a, b""".stripMargin
 
   /** LSH candidates + exact Jaccard verification (candidate-then-verify,
-    * reference Q7) at threshold 0.3; all-integer outputs. `idiv` is the
-    * dialect's integer-division operator (Spark `DIV`, DuckDB `//`). */
-  private def nearDupSql(bandsCte: String, idiv: String): String =
-    s"""$bandsCte,
+    * reference Q7) at threshold 0.3; all-integer outputs. The DuckDB
+    * oracle; the Spark text is [[nearDupSparkSql]]. */
+  private val nearDupDuckSql =
+    s"""$duckBandsCte,
        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
        |  FROM bands x JOIN bands y ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -209,16 +226,28 @@ object DocQueries {
        |  FROM cand JOIN sh sa ON sa.doc_id = cand.a JOIN sh sb ON sb.doc_id = cand.b AND sa.s = sb.s
        |  GROUP BY cand.a, cand.b)
        |SELECT inter.a AS a, inter.b AS b, i AS inter_sz, (na.n + nb.n - i) AS union_sz,
-       |  (1000 * i) $idiv (na.n + nb.n - i) AS jaccard_x1000
+       |  (1000 * i) // (na.n + nb.n - i) AS jaccard_x1000
        |FROM inter JOIN sizes na ON na.doc_id = inter.a JOIN sizes nb ON nb.doc_id = inter.b
        |WHERE 10 * i >= 3 * (na.n + nb.n - i)
        |ORDER BY a, b""".stripMargin
 
-  private def nearDupSparkSql(s: SparkSession, d: String) = nearDupSql(
-    s"""WITH sh AS (SELECT doc_id, s FROM ${shV(s, d)}),
-       |bands AS (SELECT doc_id, band_idx, band_key FROM ${bandsV(s, d)})""".stripMargin,
-    "DIV")
-  private val nearDupDuckSql = nearDupSql(duckBandsCte, "//")
+  /** [[nearDupDuckSql]] on Spark: each candidate pair fetches both docs'
+    * shingle arrays and sizes ([[shSetsV]]) and counts the shared shingles
+    * with `array_intersect`. The arrays hold distinct shingles, so that is
+    * the same integer as the oracle's shingle join + `GROUP BY`; a pair
+    * sharing none scores 0 and fails the threshold, as it finds no row
+    * there. */
+  private def nearDupSparkSql(s: SparkSession, d: String) =
+    s"""WITH bands AS (SELECT doc_id, band_idx, band_key, keys FROM ${bandsV(s, d)}),
+       |cand AS (SELECT x.doc_id AS a, y.doc_id AS b
+       |  FROM bands x JOIN bands y ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id
+       |  WHERE $firstBandOfPair),
+       |inter AS (SELECT cand.a, cand.b, CAST(size(array_intersect(sa.sh, sb.sh)) AS BIGINT) AS i, sa.n AS na, sb.n AS nb
+       |  FROM cand JOIN ${shSetsV(s, d)} sa ON sa.doc_id = cand.a JOIN ${shSetsV(s, d)} sb ON sb.doc_id = cand.b)
+       |SELECT a, b, i AS inter_sz, (na + nb - i) AS union_sz, (1000 * i) DIV (na + nb - i) AS jaccard_x1000
+       |FROM inter
+       |WHERE 10 * i >= 3 * (na + nb - i)
+       |ORDER BY a, b""".stripMargin
 
   // ------------------------------------------------------------------
   // SimHash (H1 semantics over the shingle space) + banded Hamming pairs
@@ -253,35 +282,46 @@ object DocQueries {
   private val simhashDuckSql = s"""$duckSim
     |SELECT doc_id, code AS simhash FROM simhash ORDER BY doc_id""".stripMargin
 
-  /** The SimHash band rows `(doc_id, band_idx, band_val)` of `simhash`. */
-  private def simBandsSql(shr: (String, Int) => String): String =
+  private val simBandMask = (1 << SimBandBits) - 1
+
+  /** The SimHash band rows `(doc_id, band_idx, band_val$cols)` of `simhash`. */
+  private def simBandsSql(shr: (String, Int) => String, cols: String = ""): String =
     (0 until SimBands)
-      .map(b => s"SELECT doc_id, $b AS band_idx, (${shr("code", b * SimBandBits)} & ${(1 << SimBandBits) - 1}) AS band_val FROM simhash")
+      .map(b => s"SELECT doc_id, $b AS band_idx, (${shr("code", b * SimBandBits)} & $simBandMask) AS band_val$cols FROM simhash")
       .mkString(" UNION ALL ")
 
-  /** Banded Hamming pairs over CTEs `simhash(doc_id, code)` and
-    * `sbands(doc_id, band_idx, band_val)`. */
-  private def simPairsSql(ctes: String, xor: (String, String) => String): String =
-    s"""$ctes,
+  /** Banded Hamming pairs: the banded candidates, then each pair's codes
+    * and the distance check. The DuckDB oracle; the Spark text is
+    * [[simPairsSparkSql]]. */
+  private val simPairsDuckSql =
+    s"""$duckSim,
+       |sbands AS (${simBandsSql((x, b) => s"($x >> $b)")}),
        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
        |  FROM sbands x JOIN sbands y ON x.band_idx = y.band_idx AND x.band_val = y.band_val AND x.doc_id < y.doc_id)
-       |SELECT cand.a AS a, cand.b AS b, CAST(bit_count(${xor("sa.code", "sb.code")}) AS BIGINT) AS hamming
+       |SELECT cand.a AS a, cand.b AS b, CAST(bit_count(xor(sa.code, sb.code)) AS BIGINT) AS hamming
        |FROM cand JOIN simhash sa ON sa.doc_id = cand.a JOIN simhash sb ON sb.doc_id = cand.b
-       |WHERE bit_count(${xor("sa.code", "sb.code")}) <= $SimMaxHamming
+       |WHERE bit_count(xor(sa.code, sb.code)) <= $SimMaxHamming
        |ORDER BY a, b""".stripMargin
 
-  /** The band rows, built once per (session, dir) ([[CodesCache]]). */
+  /** The band rows, each with its doc's code, built once per (session,
+    * dir) ([[CodesCache]]). */
   private def simBandsV(s: SparkSession, d: String): String =
     CodesCache.materialize(s, d, "doc_sim_bands",
       s"WITH simhash AS (SELECT doc_id, code FROM ${simV(s, d)})\n" +
-        simBandsSql((x, b) => s"shiftright($x, $b)"))
+        simBandsSql((x, b) => s"shiftright($x, $b)", ", code"))
 
-  private def simPairsSparkSql(s: SparkSession, d: String) =
-    simPairsSql(s"""WITH simhash AS (SELECT doc_id, code FROM ${simV(s, d)}),
-                   |sbands AS (SELECT doc_id, band_idx, band_val FROM ${simBandsV(s, d)})""".stripMargin,
-      (a, b) => s"$a ^ $b")
-  private val simPairsDuckSql =
-    simPairsSql(s"$duckSim,\nsbands AS (${simBandsSql((x, b) => s"($x >> $b)")})", (a, b) => s"xor($a, $b)")
+  /** [[simPairsDuckSql]] on Spark: the band rows carry both codes into the
+    * self-join, so the Hamming distance needs no lookup, and a pair is kept
+    * on its first shared band only ([[CrossSql.firstBand]]) instead of
+    * through a DISTINCT. */
+  private def simPairsSparkSql(s: SparkSession, d: String) = {
+    val first = firstBand(SimBands, j => s"(shiftright(x.code ^ y.code, ${j * SimBandBits}) & $simBandMask) = 0")
+    s"""WITH sbands AS (SELECT doc_id, band_idx, band_val, code FROM ${simBandsV(s, d)})
+       |SELECT x.doc_id AS a, y.doc_id AS b, CAST(bit_count(x.code ^ y.code) AS BIGINT) AS hamming
+       |FROM sbands x JOIN sbands y ON x.band_idx = y.band_idx AND x.band_val = y.band_val AND x.doc_id < y.doc_id
+       |WHERE bit_count(x.code ^ y.code) <= $SimMaxHamming AND x.band_idx = $first
+       |ORDER BY a, b""".stripMargin
+  }
 
   // ------------------------------------------------------------------
   // exact-substring containment (seed-window pass, SURVEY §7.5)

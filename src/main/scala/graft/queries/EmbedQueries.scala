@@ -22,17 +22,10 @@ import CrossSql._
   */
 object EmbedQueries {
 
-  val Dim = 64
+  final val Dim = 64
   val TopK = 10
   val QueryStride = 25 // vec_id % stride == 0 → query point
   val CodeBits = 16
-
-  /** Ordered double dot product of two FLOAT[] columns, Spark dialect. */
-  private def sparkDot(a: String, b: String): String =
-    s"aggregate(sequence(1, $Dim), CAST(0 AS DOUBLE), (acc, i) -> acc + CAST(element_at($a, i) AS DOUBLE) * CAST(element_at($b, i) AS DOUBLE))"
-
-  private def duckDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   /** Top-k neighbours of every query point over `base(vec_id, embedding[,
     * nrm])`, defined by `baseSql`. */

@@ -68,25 +68,18 @@ object ForestQueries {
   /** Table t's projection tag ("rp" = the flat-band path's table). */
   private def tag(t: Int): String = if (t == 0) "rp" else s"rf$t"
 
-  private def sparkDot(a: String, b: String): String =
-    s"aggregate(sequence(1, $Dim), CAST(0 AS DOUBLE), (acc, i) -> acc + CAST(element_at($a, i) AS DOUBLE) * CAST(element_at($b, i) AS DOUBLE))"
-  private def duckDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  /** Table t's sign matrix and code CTEs (`sgn_t`, `codes_t`). */
+  /** Table t's sign matrix and code CTEs (`sgn_t`, `codes_t`) over the
+    * vectors of relation `from`. */
   private def codesCtes(sgnCte: (String, Int, Int, String) => String, bitDot: Int => String,
-      t: Int, cols: String): String =
+      t: Int, cols: String, from: String = "embeddings"): String =
     s"""${sgnCte(tag(t), EmbedQueries.CodeBits, Dim, s"sgn_$t")},
-       |codes_$t AS (SELECT vec_id$cols, CAST(${EmbedQueries.codeExpr(bitDot)} AS BIGINT) AS code FROM embeddings CROSS JOIN sgn_$t)""".stripMargin
+       |codes_$t AS (SELECT vec_id$cols, CAST(${EmbedQueries.codeExpr(bitDot)} AS BIGINT) AS code FROM $from CROSS JOIN sgn_$t)""".stripMargin
 
-  /** The union of the tables' codes, `tc(t, vec_id, code)`, over CTEs
+  /** The union of the tables' codes, `tc(t, vec_id, code$cols)`, over CTEs
     * `codes_t`. */
-  private def tcCte(codes0: String): String =
-    s"tc AS (SELECT 0 AS t, vec_id, code FROM $codes0" +
-      (1 until NumTables).map(t => s" UNION ALL SELECT $t AS t, vec_id, code FROM codes_$t").mkString + ")"
-
-  /** Bucket sizes per (table, level, prefix) over a level relation. */
-  private def sizesSql(lv: String): String = s"SELECT t, s, pre, COUNT(*) AS sz FROM $lv GROUP BY t, s, pre"
+  private def tcCte(cols: String = ""): String =
+    (0 until NumTables).map(t => s"SELECT $t AS t, vec_id, code$cols FROM codes_$t")
+      .mkString("tc AS (", " UNION ALL ", ")")
 
   /** DuckDB header: the per-table codes (table 0 also carries embedding +
     * nrm for the exact re-rank; norms are table-independent), the level
@@ -97,45 +90,92 @@ object ForestQueries {
       codesCtes(duckSgnCte, EmbedQueries.duckBitDot, t, nrm)
     }
     s"""${perTable.mkString(",\n")},
-       |${tcCte("codes_0")},
+       |${tcCte()},
        |base AS (SELECT vec_id, embedding, nrm FROM codes_0),
        |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
        |lv AS (SELECT t, vec_id, CAST(s AS INT) AS s, code >> s AS pre
        |  FROM tc, (SELECT unnest(range(0, ${MaxDepth + 1})) AS s) tl),
        |qlv AS (SELECT * FROM lv WHERE vec_id % $QueryStride = 0),
-       |sizes AS (
-       |  ${sizesSql("lv")})""".stripMargin
+       |sizes AS (SELECT t, s, pre, COUNT(*) AS sz FROM lv GROUP BY t, s, pre)""".stripMargin
   }
 
   /** Spark side of the forest index, built once per (session, dir) via
-    * [[CodesCache]]: the level table `lv(t, vec_id, s, pre)` — every
-    * table's code at every prefix length — and its bucket sizes. Table 0
-    * reuses [[EmbedQueries.codesRpView]], the same "rp" projection, which
-    * also serves the re-rank's `base`. Without the views, CTE inlining
-    * rebuilt the sign codes under every reference (40 instantiations of the
-    * md5 matrix + interpreted code dots in one forest-kNN plan, see
-    * CodesCache), and each execution re-exploded the levels and re-counted
-    * the buckets. The relation names are the ones the DuckDB header defines
-    * inline, so [[forestCtes]] stays one shared text. */
+    * [[CodesCache]]: the level table `lv(t, vec_id, s, pre, code0, sz)` —
+    * every table's code at every prefix length, each row with its vector's
+    * table-0 code and the size of its `(t, s, pre)` bucket. Table 0 reuses
+    * [[EmbedQueries.codesRpView]], the same "rp" projection, which also
+    * serves the re-rank's `base`; tables 1.. project its embeddings. Without
+    * the views, CTE inlining rebuilt the sign codes under every reference
+    * (40 instantiations of the md5 matrix + interpreted code dots in one
+    * forest-kNN plan, see CodesCache), and each execution re-exploded the
+    * levels and re-counted the buckets. */
   private def sparkWith(spark: SparkSession, dir: String): String = {
     val rp = EmbedQueries.codesRpView(spark, dir)
-    val perTable = (1 until NumTables).map(t => codesCtes(sparkSgnCte, EmbedQueries.sparkBitDot, t, ""))
+    val perTable = (1 until NumTables).map(t =>
+      codesCtes(sparkSgnCte, EmbedQueries.sparkBitDot, t, ", code AS code0", rp))
     val lv = CodesCache.materialize(spark, dir, "forest_lv",
-      s"""WITH ${perTable.mkString(",\n")},
-         |${tcCte(rp)}
-         |SELECT t, vec_id, s, shiftright(code, s) AS pre
-         |FROM tc LATERAL VIEW explode(sequence(0, $MaxDepth)) tl AS s""".stripMargin)
-    val sizes = CodesCache.materialize(spark, dir, "forest_sizes", sizesSql(lv))
-    s"""codes_0 AS (SELECT vec_id, code FROM $rp),
-       |base AS (SELECT vec_id, embedding, nrm FROM $rp),
+      s"""WITH codes_0 AS (SELECT vec_id, code, code AS code0 FROM $rp),
+         |${perTable.mkString(",\n")},
+         |${tcCte(", code0")}
+         |SELECT t, vec_id, s, pre, code0, COUNT(*) OVER (PARTITION BY t, s, pre) AS sz
+         |FROM (SELECT t, vec_id, s, shiftright(code, s) AS pre, code0
+         |  FROM tc LATERAL VIEW explode(sequence(0, $MaxDepth)) tl AS s) l""".stripMargin)
+    s"""base AS (SELECT vec_id, embedding, nrm FROM $rp),
        |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
-       |lv AS (SELECT t, vec_id, s, pre FROM $lv),
-       |qlv AS (SELECT * FROM lv WHERE vec_id % $QueryStride = 0),
-       |sizes AS (SELECT t, s, pre, sz FROM $sizes)""".stripMargin
+       |lv AS (SELECT t, vec_id, s, pre, code0 FROM $lv),
+       |qlv AS (SELECT t, vec_id, s, pre, code0, sz FROM $lv WHERE vec_id % $QueryStride = 0)""".stripMargin
   }
 
-  /** chosen level per (query, table) + union candidates + exact re-rank —
-    * identical text in both dialects up to the XOR spelling.
+  /** Spark: chosen level per (query, table) + union candidates + exact
+    * re-rank, the same result as [[duckForestCtes]] with no lookup the
+    * level rows could carry.
+    *
+    *  - `cnt` ranks each query level by `lvl`: its level when its bucket
+    *    (`sz`, carried by the level row) holds ≥ MinCand others or it is
+    *    the deepest backoff, past MaxDepth otherwise. The least `lvl` is
+    *    the oracle's chosen level, and `min_by(pre, lvl)` keeps the query's
+    *    prefix there, so the candidate join reads it instead of re-joining
+    *    `qlv`.
+    *  - Level rows carry the table-0 code, so each candidate row knows its
+    *    `hd` for the [[GatherCap]] window without a `codes_0` lookup.
+    *  - The query levels are hash-partitioned by query once: the chosen
+    *    level's aggregate, the DISTINCT union over tables and both rank
+    *    windows all run inside that partitioning, since the level join
+    *    streams `chosen` past a broadcast of `lv`.
+    *  - Only the capped candidates fetch `embedding, nrm`, one broadcast
+    *    lookup per side. */
+  private val sparkForestCtes: String =
+    s"""cnt AS (
+       |  SELECT /*+ REPARTITION(query_id) */ vec_id AS query_id, t, pre, code0,
+       |    CASE WHEN sz - 1 >= $MinCand OR s = $MaxDepth THEN s ELSE ${MaxDepth + 1} END AS lvl
+       |  FROM qlv),
+       |chosen AS (
+       |  SELECT query_id, t, code0, MIN(lvl) AS s, min_by(pre, lvl) AS pre
+       |  FROM cnt GROUP BY query_id, t, code0),
+       |hits AS (
+       |  SELECT ch.query_id, bl.vec_id AS neighbor_id,
+       |    bit_count(ch.code0 ^ bl.code0) AS hd
+       |  FROM chosen ch
+       |  JOIN lv bl ON bl.t = ch.t AND bl.s = ch.s AND bl.pre = ch.pre AND bl.vec_id <> ch.query_id),
+       |cand_ids AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT query_id, neighbor_id,
+       |      row_number() OVER (PARTITION BY query_id ORDER BY hd ASC, neighbor_id ASC) AS crank
+       |    FROM (SELECT DISTINCT query_id, neighbor_id, hd FROM hits) c0) rc
+       |  WHERE crank <= $GatherCap),
+       |cand AS (
+       |  SELECT ci.query_id, ci.neighbor_id,
+       |    ${sparkDot("qq.embedding", "b.embedding")} / (qq.nrm * b.nrm) AS score
+       |  FROM cand_ids ci
+       |  JOIN base qq ON qq.vec_id = ci.query_id
+       |  JOIN base b ON b.vec_id = ci.neighbor_id),
+       |ranked AS (
+       |  SELECT query_id, neighbor_id,
+       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
+       |  FROM cand)""".stripMargin
+
+  /** DuckDB: chosen level per (query, table) + union candidates + exact
+    * re-rank, each attribute fetched from its own relation.
     *
     * Scale shape: bucket sizes are PRE-AGGREGATED (`GROUP BY t, s, pre` —
     * O(n·levels) rows) and queries join the size table, with `c = sz - 1`
@@ -143,8 +183,7 @@ object ForestQueries {
     * row-level join instead would materialize |Q|·n/16 rows per table at
     * the coarsest 4-bit prefix just to count them — a quadratic-shape
     * blowup hidden in the count stage. */
-  private def forestCtes(dot: (String, String) => String,
-      xor: (String, String) => String): String =
+  private val duckForestCtes: String =
     s"""cnt AS (
        |  SELECT ql.vec_id AS query_id, ql.t AS t, ql.s AS s, b.sz - 1 AS c
        |  FROM qlv ql JOIN sizes b ON ql.t = b.t AND ql.s = b.s AND ql.pre = b.pre),
@@ -160,14 +199,14 @@ object ForestQueries {
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT c0.query_id, c0.neighbor_id,
        |      row_number() OVER (PARTITION BY c0.query_id
-       |        ORDER BY bit_count(${xor("qc.code", "bc.code")}) ASC, c0.neighbor_id ASC) AS crank
+       |        ORDER BY bit_count(xor(qc.code, bc.code)) ASC, c0.neighbor_id ASC) AS crank
        |    FROM cand0 c0
        |    JOIN codes_0 qc ON qc.vec_id = c0.query_id
        |    JOIN codes_0 bc ON bc.vec_id = c0.neighbor_id) rc
        |  WHERE crank <= $GatherCap),
        |cand AS (
        |  SELECT ci.query_id, ci.neighbor_id,
-       |    ${dot("qq.embedding", "b.embedding")} / (qq.nrm * b.nrm) AS score
+       |    ${duckDot("qq.embedding", "b.embedding")} / (qq.nrm * b.nrm) AS score
        |  FROM cand_ids ci
        |  JOIN qbase qq ON qq.vec_id = ci.query_id
        |  JOIN base b ON b.vec_id = ci.neighbor_id),
@@ -176,17 +215,15 @@ object ForestQueries {
        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
        |  FROM cand)""".stripMargin
 
-  private def knnSql(withC: String,
-      dot: (String, String) => String, xor: (String, String) => String): String =
+  private def knnSql(withC: String, ctes: String): String =
     s"""WITH $withC,
-       |${forestCtes(dot, xor)}
+       |$ctes
        |SELECT query_id, rank, neighbor_id FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
-  private def recallSql(withC: String,
-      dot: (String, String) => String, xor: (String, String) => String): String =
+  private def recallSql(withC: String, ctes: String, dot: (String, String) => String): String =
     s"""WITH $withC,
-       |${forestCtes(dot, xor)},
+       |$ctes,
        |ann AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= $TopK),
        |exact AS (SELECT query_id, neighbor_id FROM (
        |  SELECT qq.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -200,18 +237,15 @@ object ForestQueries {
        |  ON ann.query_id = exact.query_id AND ann.neighbor_id = exact.neighbor_id
        |GROUP BY exact.query_id ORDER BY query_id""".stripMargin
 
-  private val sparkXor = (a: String, b: String) => s"$a ^ $b"
-  private val duckXor = (a: String, b: String) => s"xor($a, $b)"
-
-  private val knnDuckSql = knnSql(duckWith, duckDot, duckXor)
-  private val recallDuckSql = recallSql(duckWith, duckDot, duckXor)
+  private val knnDuckSql = knnSql(duckWith, duckForestCtes)
+  private val recallDuckSql = recallSql(duckWith, duckForestCtes, duckDot)
 
   private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
     query(spark, dir, "embeddings")(mkSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_forest_knn" -> ((s, d) => q(s, d)(knnSql(sparkWith(s, d), sparkDot, sparkXor))),
-    "q_ann_forest_recall" -> ((s, d) => q(s, d)(recallSql(sparkWith(s, d), sparkDot, sparkXor)))
+    "q_ann_forest_knn" -> ((s, d) => q(s, d)(knnSql(sparkWith(s, d), sparkForestCtes))),
+    "q_ann_forest_recall" -> ((s, d) => q(s, d)(recallSql(sparkWith(s, d), sparkForestCtes, sparkDot)))
   )
 
   val oracleSql: Map[String, String] = Map(
