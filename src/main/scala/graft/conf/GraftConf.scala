@@ -1,5 +1,7 @@
 package graft.conf
 
+import graft.kernel.Hashing
+
 /** Engine configuration — the runtime replacement for the reference's
   * compile-time template instantiation (`HashCollection<Transformer, Hash,
   * Index, MAT>`, `/root/reference/hashIndex/HashCollection.h:21-22`, and the
@@ -51,4 +53,13 @@ final case class GraftConf(
   require(chainWidth >= 1, "chainWidth must be positive")
   require(maxCcIterations >= 1, "maxCcIterations must be >= 1: confirming a CC fixpoint takes one round")
   def simhashBandBits: Int = simhashBits / simhashBands
+  // Per-family salts of the one seed: each signature family hashes from
+  // its own stream. Derived, not settable.
+  def textSeed: Long = seed ^ 0x7e47L
+  def audioSeed: Long = seed ^ 0xa0d10L
+  def simhashSeed: Long = seed ^ 0x51e4L
+  /** Salt of SimHash band `band`'s bucket keys. */
+  def simhashBandSalt(band: Int): Long = Hashing.derive(simhashSeed, 0xb000 + band)
+  /** Start value of a substring window's rolling hash. */
+  def windowSeed: Long = seed ^ 0x50ff1eL
 }

@@ -19,8 +19,10 @@ sealed trait HashFunction extends Serializable {
 
 object HashFunction {
 
-  /** Deterministic standard Gaussian via Box–Muller on derived uniforms. */
-  private[kernel] def gaussian(seed: Long, i: Long): Double = {
+  /** Deterministic standard Gaussian via Box–Muller on derived uniforms:
+    * the one N(0,1) stream of the engine (the hash families' projection
+    * matrices, the RDHF/ARDHF bit pool). */
+  private[graft] def gaussian(seed: Long, i: Long): Double = {
     val u1 = (Hashing.derive(seed, 2 * i) >>> 11).toDouble / (1L << 53).toDouble
     val u2 = (Hashing.derive(seed, 2 * i + 1) >>> 11).toDouble / (1L << 53).toDouble
     val eps = 1e-15

@@ -8,10 +8,8 @@ package graft.kernel
   * of per-shingle pseudo-random ±1 contributions per output bit; the sign of
   * each accumulated counter is the bit, packed via H6 (BitPack).
   *
-  * `bitSource` decides where a shingle's ±1 pattern comes from:
-  *  - [[SimHash.mixBits]]: internal seeded mixer (fast path)
-  *  - [[SimHash.md5Bits]]: low-60-bits-of-MD5, recomputable bit-for-bit by
-  *    external SQL engines for the cross-engine oracle (see Hashing.md5Low60)
+  * `bitsOf` decides where a shingle's ±1 pattern comes from; the engine
+  * uses [[SimHash.mixBits]], a seeded mixer.
   */
 object SimHash {
 
@@ -42,10 +40,4 @@ object SimHash {
     }
     code
   }
-
-  /** Signature whose per-shingle bit pattern is the shingle word itself —
-    * used when shingle hashes were already produced by the shared
-    * cross-engine hash (md5Low60 of the shingle string). */
-  def signatureFromWords(words: Array[Long], nBits: Int): Long =
-    signature(words, nBits, identity)
 }

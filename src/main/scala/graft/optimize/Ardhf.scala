@@ -1,201 +1,57 @@
 package graft.optimize
 
-import graft.kernel.{Hashing, RandomProjectionHash}
+import graft.optimize.Rdhf.SparseS
 
 /** O6 — ARDHF (approximate RDHF),
   * `/root/reference/hashBitOptimizers/ARDHF.h:318-378` and helpers
   * (`getSMatrix :91-106`, `getPiVector :118-142`, `getPiVector0 :144-162`,
   * `getPMatrix :227-302`, `getWMatrix :304-315`).
   *
-  * The approximation versus RDHF ([[Rdhf]]): the sparse supervision keeps
-  * ONLY the positive (true-neighbour) entries, and the sampled negatives
-  * are replaced by one aggregated negative relevance term —
-  * `piNeg = (−(Σ_i Y[k,i])² − YSYᵀ₀[k]) / 1000` computed once from the
-  * unweighted S, scaled each round by the scalar boost weight `wneg` that
-  * getWMatrix evolves from aggregated negative distances. Y/A/Ẑ* machinery
-  * is identical to RDHF and shared.
+  * ARDHF is [[Rdhf]]'s selection loop run with a different supervision.
+  * Its deltas over RDHF:
+  *  - S holds only the positive (true-neighbour) entries: RDHF's S with 0
+  *    sampled non-neighbours;
+  *  - the sampled negatives are replaced by one aggregated negative
+  *    relevance term, `piNeg = (−(Σ_i Y[k,i])² − YSYᵀ₀[k]) / 1000`,
+  *    computed once from the unweighted S and shrunk with the pool;
+  *  - π subtracts `piNeg · wneg`;
+  *  - the reweight runs at 0.5·α, adds a `0.49·negcount/(1−negcount)`
+  *    bias and evolves the scalar boost weight `wneg` from the aggregated
+  *    negative distance.
   *
   * Faithfully-ported reference quirk, documented: `negdistances` is
   * zero-initialized on its first populated call and then min-folded
   * against new distances (`ARDHF.h:254-256, 275-280`), pinning it at zero
-  * — so thereafter negdist = −u and negcount = 0 in closed form. The port
-  * keeps the written semantics (and the spec pins them) rather than
-  * "fixing" the fold.
+  * — so thereafter negdist = −u (the centered value of a zero distance,
+  * [[Rdhf.pVector]]) and negcount = 0 in closed form. The port keeps the
+  * written semantics (and the spec pins them) rather than "fixing" the
+  * fold.
   */
 object Ardhf {
 
-  final case class Config(
-      bitPoolSize: Int = 48,
-      numFuncs: Int = 3,
-      numBits: Int = 8,
-      gamma: Double = 0.2,
-      lamda: Double = 4.0,
-      seed: Long = 42L)
+  /** `ARDHF.h:318-378`: the [[Rdhf]] loop with the deltas above. */
+  def optimize(data: Array[Array[Float]], neighbours: Array[Array[Int]],
+      cfg: Rdhf.Config): Rdhf.Result =
+    Rdhf.select(data, neighbours, cfg, nonPerQuery = 0, piNeg, wUpdate(_, _, _))
 
-  final case class Table(poolRows: Array[Int], hash: RandomProjectionHash)
-  final case class Result(tables: Seq[Table], means: Array[Double])
-
-  /** Positive-only supervision + the scalar negative boost weight
-    * (ARDHF's SparseMat carries `wneg`, init 1). */
-  private[optimize] final case class SparseS(
-      qi: Array[Int], dj: Array[Int], values: Array[Double], wneg: Double)
-
-  private[optimize] def buildS(neighbours: Array[Array[Int]]): SparseS = {
-    val qi = Array.newBuilder[Int]
-    val dj = Array.newBuilder[Int]
-    val v = Array.newBuilder[Double]
-    var i = 0
-    while (i < neighbours.length) {
-      neighbours(i).foreach { j => qi += i; dj += j; v += 1.0 }
-      i += 1
-    }
-    SparseS(qi.result(), dj.result(), v.result(), wneg = 1.0)
-  }
-
-  /** Unweighted YSYᵀ diagonal (getPiVector0). */
-  private[optimize] def piVector0(y: Array[Array[Double]], s: SparseS): Array[Double] =
+  /** The aggregated negative term from the unweighted S (getPiVector0). */
+  private[optimize] def piNeg(y: Array[Array[Double]], s: SparseS): Array[Double] = {
+    val p0 = Rdhf.ysy(y, s)
     Array.tabulate(y.length) { k =>
-      var acc = 0.0
-      var e = 0
-      while (e < s.values.length) {
-        acc += y(k)(s.qi(e)) * s.values(e) * y(k)(s.dj(e))
-        e += 1
-      }
-      acc
-    }
-
-  /** pi = exp(−γ · (YSYᵀ − piNeg·wneg) / (pool·500)) (getPiVector). */
-  private[optimize] def piVector(y: Array[Array[Double]], s: SparseS,
-      gamma: Double, piNeg: Array[Double]): Array[Double] = {
-    val raw = piVector0(y, s)
-    Array.tabulate(y.length) { k =>
-      math.exp(-gamma * ((raw(k) - piNeg(k) * s.wneg) / (y.length * 500.0)))
-    }
-  }
-
-  /** (p vector, negdist, negcount) with running min distances
-    * (getPMatrix). negdistances is zero-pinned per the reference quirk
-    * (class doc), yielding negdist = −u and negcount = 0 once populated. */
-  private[optimize] def pTriple(
-      lastY: Option[Array[Array[Double]]], s: SparseS,
-      distances: Array[Double]): (Array[Double], Double, Double) = {
-    lastY match {
-      case None =>
-        var e = 0
-        while (e < distances.length) { distances(e) += 64.0; e += 1 }
-        (Array.fill(distances.length)(1e-32), 1e-32, 0.0)
-      case Some(y) =>
-        var e = 0
-        while (e < distances.length) {
-          var l1 = 0.0
-          var k = 0
-          while (k < y.length) {
-            l1 += math.abs(y(k)(s.dj(e)) - y(k)(s.qi(e))) / 4.0
-            k += 1
-          }
-          distances(e) = math.min(distances(e), l1)
-          e += 1
-        }
-        var posSum = 0.0
-        var posCnt = 0
-        e = 0
-        while (e < distances.length) {
-          if (s.values(e) > 0.0) { posSum += distances(e); posCnt += 1 }
-          e += 1
-        }
-        val u = if (posCnt == 0) 0.0 else posSum / posCnt
-        // zero-pinned negdistances: mean 0 − u, fraction(0 > u) = 0
-        (distances.map(_ - u), -u, 0.0)
+      val rowSum = y(k).sum
+      (-(rowSum * rowSum) - p0(k)) / 1000.0
     }
   }
 
   /** exp(−α·p)·s + 0.49·negcount/(1−negcount) entry weights and the
-    * evolved wneg scalar (getWMatrix; α carries ARDHF's 0.5 factor). */
-  private[optimize] def wUpdate(s: SparseS,
-      p: (Array[Double], Double, Double)): SparseS = {
-    val (pv, negdist, negcount) = p
-    var neg = 0
-    var pos = 0
-    var e = 0
-    while (e < pv.length) {
-      val v = pv(e) * math.signum(s.values(e))
-      if (v < 0.0) neg += 1
-      if (v > 0.0) pos += 1
-      e += 1
-    }
-    val alpha = 0.5 * neg.toDouble / (pos + 0.000001)
-    val bias = 0.49 * negcount / (1.0 - negcount)
-    val vals = Array.tabulate(pv.length) { e =>
-      var v = math.exp(-alpha * pv(e) * math.signum(s.values(e))) * s.values(e) + bias
-      if (v < -50.0) v = -50.0
-      if (v > 50.0) v = 50.0
-      if (v == 0.0) v = -0.000000001
-      v
-    }
+    * evolved wneg scalar (getWMatrix; α carries ARDHF's 0.5 factor).
+    * negcount defaults to its zero-pinned value (class doc). */
+  private[optimize] def wUpdate(s: SparseS, p: Array[Double], negdist: Double,
+      negcount: Double = 0.0): SparseS = {
+    val alpha = Rdhf.alpha(s, p, scale = 0.5)
+    val vals = Rdhf.wValues(s, p, alpha, bias = 0.49 * negcount / (1.0 - negcount))
     val wneg = math.exp(-alpha * negdist) * s.wneg * negcount +
       math.exp(alpha * negdist) * s.wneg * (1.0 - negcount)
     SparseS(s.qi, s.dj, vals, wneg)
-  }
-
-  /** Driver loop (`ARDHF.h:318-378`): RDHF's structure with positive-only
-    * S, the piNeg aggregate, and per-round wneg evolution; Y/A/Z* shared
-    * with [[Rdhf]]. */
-  def optimize(data: Array[Array[Float]], neighbours: Array[Array[Int]],
-      cfg: Config): Result = {
-    require(data.nonEmpty && neighbours.nonEmpty)
-    require(cfg.numFuncs * cfg.numBits <= cfg.bitPoolSize,
-      "pool must cover numFuncs × numBits")
-    val dim = data(0).length
-    val n = data.length
-
-    val means = new Array[Double](dim)
-    data.foreach { r => var d = 0; while (d < dim) { means(d) += r(d); d += 1 } }
-    var d0 = 0
-    while (d0 < dim) { means(d0) /= n; d0 += 1 }
-
-    val pool = Array.tabulate(cfg.bitPoolSize) { k =>
-      Array.tabulate(dim)(d => gaussianAt(cfg.seed, k.toLong * dim + d))
-    }
-
-    var sCur = buildS(neighbours)
-    var y = Rdhf.yMatrix(data, pool, means)
-    var a = Rdhf.aMatrix(y, cfg.lamda)
-    var piNeg = {
-      val p0 = piVector0(y, sCur)
-      Array.tabulate(y.length) { k =>
-        val rowSum = y(k).sum
-        (-(rowSum * rowSum) - p0(k)) / 1000.0
-      }
-    }
-    var poolIds = (0 until cfg.bitPoolSize).toArray
-    var proj = pool
-    var lastY: Option[Array[Array[Double]]] = None
-    val distances = new Array[Double](sCur.values.length)
-
-    val tables = (0 until cfg.numFuncs).map { _ =>
-      sCur = wUpdate(sCur, pTriple(lastY, sCur, distances))
-      val pi = piVector(y, sCur, cfg.gamma, piNeg)
-      val aHat = Array.tabulate(y.length, y.length)((i, j) => pi(i) * a(i)(j) * pi(j))
-      val chosen = Rdhf.zStar(aHat, cfg.numBits)
-      val chosenSet = chosen.toSet
-      val rows = chosen.map(proj)
-      val table = Table(chosen.map(poolIds),
-        new RandomProjectionHash(cfg.numBits, dim, rows.flatMap(_.map(_.toFloat))))
-      lastY = Some(chosen.map(y))
-      val keep = y.indices.filterNot(chosenSet).toArray
-      poolIds = keep.map(poolIds)
-      proj = keep.map(proj)
-      y = keep.map(y)
-      a = keep.map(i => keep.map(j => a(i)(j)))
-      piNeg = keep.map(piNeg)
-      table
-    }
-    Result(tables, means)
-  }
-
-  private def gaussianAt(seed: Long, i: Long): Double = {
-    val u1 = (Hashing.derive(seed, 2 * i) >>> 11).toDouble / (1L << 53).toDouble
-    val u2 = (Hashing.derive(seed, 2 * i + 1) >>> 11).toDouble / (1L << 53).toDouble
-    math.sqrt(-2.0 * math.log(u1 + 1e-15)) * math.cos(2.0 * math.Pi * u2)
   }
 }

@@ -1,6 +1,6 @@
 package graft.optimize
 
-import graft.kernel.{Hashing, RandomProjectionHash}
+import graft.kernel.{HashFunction, Hashing, RandomProjectionHash}
 
 /** O5 — RDHF (Reciprocal-neighbour Driven Hash Function selection),
   * `/root/reference/hashBitOptimizers/RDHF.h:272-330` and helpers
@@ -13,7 +13,8 @@ import graft.kernel.{Hashing, RandomProjectionHash}
   *
   *  - Y (pool × n): ±1 bit matrix of the pool over the data sample;
   *  - S: sparse supervision — +1 entries for given true-neighbour pairs,
-  *    −1 for sampled non-neighbour pairs;
+  *    −1 for 2 × (max neighbours per query) sampled non-neighbours per
+  *    query (the reference's default count);
   *  - A (pool × pool): exp(−λ · MI) channel-affinity from the empirical
   *    joint bit distributions (high mutual information ⇒ low affinity);
   *  - per table: boost-style reweight W of S from running min-Hamming
@@ -21,6 +22,11 @@ import graft.kernel.{Hashing, RandomProjectionHash}
   *    relevance vector π = exp(−γ · YSYᵀ / (pool·500)), then a 2-step
   *    power iteration on  = diag(π)·A·diag(π) picks the top bits
   *    (getZStar); chosen bits leave the pool.
+  *
+  * γ = 0.2 and λ = 4.0 are the reference's defaults and fixed here. The
+  * per-table loop ([[select]]) is shared with [[Ardhf]], which runs it
+  * with its own supervision (positive-only S plus an aggregated negative
+  * term); RDHF's negative term is zero and its reweight unscaled.
   *
   * All matrices are pool/sample-sized — the reference runs this in-memory
   * and so do we: fit at the driver on a collected sample (the same
@@ -46,10 +52,10 @@ object Rdhf {
       bitPoolSize: Int = 48,
       numFuncs: Int = 3,
       numBits: Int = 8,
-      numNonNeighboursPerQuery: Int = 0, // 0 → reference default 2 × numNeighbours
-      gamma: Double = 0.2,
-      lamda: Double = 4.0,
       seed: Long = 42L)
+
+  private val Gamma = 0.2
+  private val Lamda = 4.0
 
   /** One selected table: original pool-row ids (selection order) + the
     * ready-to-use hash function over those projection rows. */
@@ -59,9 +65,10 @@ object Rdhf {
 
   // --- sparse supervision ------------------------------------------------
   /** Flat entries (queryIdx, dataIdx, value): +1 neighbours, −1 sampled
-    * non-neighbours (getSMatrix). */
+    * non-neighbours (getSMatrix), plus the scalar weight of the aggregated
+    * negative term (ARDHF's SparseMat `wneg`; RDHF keeps it at 1). */
   private[optimize] final case class SparseS(
-      qi: Array[Int], dj: Array[Int], values: Array[Double])
+      qi: Array[Int], dj: Array[Int], values: Array[Double], wneg: Double = 1.0)
 
   private[optimize] def buildS(
       neighbours: Array[Array[Int]], n: Int, nonPerQuery: Int, seed: Long): SparseS = {
@@ -155,34 +162,42 @@ object Rdhf {
   }
 
   // --- π vector ----------------------------------------------------------
-  /** exp(−γ · YSYᵀ diag / (pool·500)) relevance (getPiVector; the minus
-    * sign follows the reference's in-code note). */
-  private[optimize] def piVector(
-      y: Array[Array[Double]], s: SparseS, gamma: Double): Array[Double] = {
-    val p = y.length
-    Array.tabulate(p) { k =>
+  /** The YSYᵀ diagonal: Σ_e Y[k,qi]·s·Y[k,dj] per pool bit. */
+  private[optimize] def ysy(y: Array[Array[Double]], s: SparseS): Array[Double] =
+    Array.tabulate(y.length) { k =>
       var acc = 0.0
       var e = 0
       while (e < s.values.length) {
         acc += y(k)(s.qi(e)) * s.values(e) * y(k)(s.dj(e))
         e += 1
       }
-      math.exp(-gamma * (acc / (p * 500.0)))
+      acc
+    }
+
+  /** exp(−γ · (YSYᵀ − neg·wneg) / (pool·500)) relevance (getPiVector; the
+    * minus sign follows the reference's in-code note). `neg` is the
+    * per-bit aggregated negative term: zero for RDHF, ARDHF's piNeg. */
+  private[optimize] def piVector(y: Array[Array[Double]], s: SparseS, gamma: Double,
+      neg: Array[Double]): Array[Double] = {
+    val raw = ysy(y, s)
+    Array.tabulate(y.length) { k =>
+      math.exp(-gamma * ((raw(k) - neg(k) * s.wneg) / (y.length * 500.0)))
     }
   }
 
   // --- P / W: boost reweighting from running min-Hamming -----------------
   /** Updates `distances` in place (running min of L1((y_j − y_k)/4) under
-    * the last table's bits) and returns the centered p vector
-    * (getPMatrix). First call (no last table): distances start at 64 and p
-    * is the reference's ~0 placeholder. */
-  private[optimize] def pVector(
-      lastY: Option[Array[Array[Double]]], s: SparseS, distances: Array[Double]): Array[Double] = {
+    * the last table's bits) and returns the centered p vector with the
+    * centered value of a zero distance, −u (getPMatrix; ARDHF's negdist,
+    * see [[Ardhf]]). First call (no last table): distances start at 64 and
+    * both are the reference's ~0 placeholder. */
+  private[optimize] def pVector(lastY: Option[Array[Array[Double]]], s: SparseS,
+      distances: Array[Double]): (Array[Double], Double) = {
     lastY match {
       case None =>
         var e = 0
         while (e < distances.length) { distances(e) += 64.0; e += 1 }
-        Array.fill(distances.length)(1e-32)
+        (Array.fill(distances.length)(1e-32), 1e-32)
       case Some(y) =>
         var e = 0
         while (e < distances.length) {
@@ -203,12 +218,13 @@ object Rdhf {
           e += 1
         }
         val u = if (posCnt == 0) 0.0 else posSum / posCnt
-        distances.map(_ - u)
+        (distances.map(_ - u), -u)
     }
   }
 
-  /** exp(−α·p·sign(s)) boost weights, ±50-clamped (getWMatrix). */
-  private[optimize] def wValues(s: SparseS, p: Array[Double]): Array[Double] = {
+  /** Boost rate α = scale · #(p·sign(s) < 0) / #(p·sign(s) > 0)
+    * (getWMatrix; ARDHF's scale is 0.5). */
+  private[optimize] def alpha(s: SparseS, p: Array[Double], scale: Double = 1.0): Double = {
     var neg = 0
     var pos = 0
     var e = 0
@@ -218,15 +234,20 @@ object Rdhf {
       if (v > 0.0) pos += 1
       e += 1
     }
-    val alpha = neg.toDouble / (pos + 0.000001)
+    scale * neg.toDouble / (pos + 0.000001)
+  }
+
+  /** exp(−α·p·sign(s))·s + bias boost weights, ±50-clamped (getWMatrix;
+    * only ARDHF has a bias). */
+  private[optimize] def wValues(s: SparseS, p: Array[Double], alpha: Double,
+      bias: Double = 0.0): Array[Double] =
     Array.tabulate(p.length) { e =>
-      var v = math.exp(-alpha * p(e) * math.signum(s.values(e))) * s.values(e)
+      var v = math.exp(-alpha * p(e) * math.signum(s.values(e))) * s.values(e) + bias
       if (v < -50.0) v = -50.0
       if (v > 50.0) v = 50.0
       if (v == 0.0) v = -0.000000001
       v
     }
-  }
 
   // --- Z* greedy spectral selection --------------------------------------
   /** 2-step power iteration + threshold-gated top selection (getZStar).
@@ -296,14 +317,24 @@ object Rdhf {
     * query i (queries are the first neighbours.length sample rows, matching
     * the reference's query-ids-are-data-ids indexing). */
   def optimize(data: Array[Array[Float]], neighbours: Array[Array[Int]],
-      cfg: Config): Result = {
+      cfg: Config): Result =
+    select(data, neighbours, cfg, 2 * neighbours.map(_.length).maxOption.getOrElse(0),
+      (y, _) => new Array[Double](y.length),
+      (s, p, _) => s.copy(values = wValues(s, p, alpha(s, p))))
+
+  /** The per-table selection loop, run with one operator's supervision:
+    * `nonPerQuery` sampled non-neighbours per query in S, the aggregated
+    * negative term `negTerm(Y, S)` (computed once, shrunk with the pool)
+    * and the boost `reweight(S, p, negdist)` of S before each table. */
+  private[optimize] def select(data: Array[Array[Float]], neighbours: Array[Array[Int]],
+      cfg: Config, nonPerQuery: Int,
+      negTerm: (Array[Array[Double]], SparseS) => Array[Double],
+      reweight: (SparseS, Array[Double], Double) => SparseS): Result = {
     require(data.nonEmpty && neighbours.nonEmpty)
     require(cfg.numFuncs * cfg.numBits <= cfg.bitPoolSize,
       "pool must cover numFuncs × numBits")
     val dim = data(0).length
     val n = data.length
-    val nonPer = if (cfg.numNonNeighboursPerQuery > 0) cfg.numNonNeighboursPerQuery
-      else 2 * neighbours.map(_.length).max
 
     val means = new Array[Double](dim)
     data.foreach { r => var d = 0; while (d < dim) { means(d) += r(d); d += 1 } }
@@ -313,21 +344,22 @@ object Rdhf {
     // seeded Gaussian pool projections (genHashFuncs; scale-free for sign
     // hashing, so the reference's SIKH_CONST factor is dropped)
     val pool = Array.tabulate(cfg.bitPoolSize) { k =>
-      Array.tabulate(dim)(d => gaussianAt(cfg.seed, k.toLong * dim + d))
+      Array.tabulate(dim)(d => HashFunction.gaussian(cfg.seed, k.toLong * dim + d))
     }
 
-    val s = buildS(neighbours, n, nonPer, cfg.seed)
+    var s = buildS(neighbours, n, nonPerQuery, cfg.seed)
     var y = yMatrix(data, pool, means)
-    var a = aMatrix(y, cfg.lamda)
+    var a = aMatrix(y, Lamda)
+    var neg = negTerm(y, s)
     var poolIds = (0 until cfg.bitPoolSize).toArray
     var proj = pool
     var lastY: Option[Array[Array[Double]]] = None
     val distances = new Array[Double](s.values.length)
-    var sCur = s
 
     val tables = (0 until cfg.numFuncs).map { _ =>
-      sCur = SparseS(sCur.qi, sCur.dj, wValues(sCur, pVector(lastY, sCur, distances)))
-      val pi = piVector(y, sCur, cfg.gamma)
+      val (p, negdist) = pVector(lastY, s, distances)
+      s = reweight(s, p, negdist)
+      val pi = piVector(y, s, Gamma, neg)
       val aHat = Array.tabulate(y.length, y.length)((i, j) => pi(i) * a(i)(j) * pi(j))
       val chosen = zStar(aHat, cfg.numBits)
       val chosenSet = chosen.toSet
@@ -340,17 +372,9 @@ object Rdhf {
       proj = keep.map(proj)
       y = keep.map(y)
       a = keep.map(i => keep.map(j => a(i)(j)))
+      neg = keep.map(neg)
       table
     }
     Result(tables, means)
-  }
-
-  /** Deterministic N(0,1) stream (Box–Muller over derived uniforms —
-    * mirrors HashFunction.gaussian, reproduced here to keep kernel
-    * internals private). */
-  private def gaussianAt(seed: Long, i: Long): Double = {
-    val u1 = (Hashing.derive(seed, 2 * i) >>> 11).toDouble / (1L << 53).toDouble
-    val u2 = (Hashing.derive(seed, 2 * i + 1) >>> 11).toDouble / (1L << 53).toDouble
-    math.sqrt(-2.0 * math.log(u1 + 1e-15)) * math.cos(2.0 * math.Pi * u2)
   }
 }

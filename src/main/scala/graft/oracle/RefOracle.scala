@@ -28,8 +28,8 @@ object RefOracle {
 
   def run(clips: Seq[Clip], conf: GraftConf): OracleResult = {
     val c = conf
-    val textMh = new MinHash(c.textNumPerm, c.seed ^ 0x7e47L)
-    val audioMh = new MinHash(c.audioNumPerm, c.seed ^ 0xa0d10L)
+    val textMh = new MinHash(c.textNumPerm, c.textSeed)
+    val audioMh = new MinHash(c.audioNumPerm, c.audioSeed)
 
     // per-clip derived state
     val ids = clips.map(_.clip_id).toArray
@@ -48,15 +48,15 @@ object RefOracle {
       buckets.getOrElseUpdate((src, key), mutable.ArrayBuffer.empty) += i
 
     for (i <- clips.indices) {
-      val tKeys = MinHash.bandKeys(textMh.signature(textSh(i)), c.textBands, c.textRows, c.seed ^ 0x7e47L)
+      val tKeys = MinHash.bandKeys(textMh.signature(textSh(i)), c.textBands, c.textRows, c.textSeed)
       tKeys.foreach(k => add("text", k, i))
       if (audioSh(i).nonEmpty) {
-        val aKeys = MinHash.bandKeys(audioMh.signature(audioSh(i)), c.audioBands, c.audioRows, c.seed ^ 0xa0d10L)
+        val aKeys = MinHash.bandKeys(audioMh.signature(audioSh(i)), c.audioBands, c.audioRows, c.audioSeed)
         aKeys.foreach(k => add("audio", k, i))
       }
-      val sim = SimHash.signature(textSh(i), c.simhashBits, SimHash.mixBits(c.seed ^ 0x51e4L))
+      val sim = SimHash.signature(textSh(i), c.simhashBits, SimHash.mixBits(c.simhashSeed))
       BitPack.bands(sim, c.simhashBands, c.simhashBandBits).zipWithIndex.foreach {
-        case (v, bi) => add("simhash", Hashing.combine(Hashing.derive(c.seed ^ 0x51e4L, 0xb000 + bi), v), i)
+        case (v, bi) => add("simhash", Hashing.combine(c.simhashBandSalt(bi), v), i)
       }
     }
 
@@ -72,7 +72,7 @@ object RefOracle {
     val toks = texts.map(Shingles.tokens)
     val windowIndex = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
     def windowHash(ts: Array[String], start: Int): Long = {
-      var h = c.seed ^ 0x50ff1eL
+      var h = c.windowSeed
       var j = 0
       while (j < w) { h = Hashing.combine(h, Hashing.hashString(ts(start + j), c.seed)); j += 1 }
       h

@@ -59,8 +59,8 @@ object Signatures {
       .mapPartitions { it =>
         // per-partition kernel setup (broadcast-equivalent: derived from conf
         // seeds, so constructing locally is cheaper than shipping matrices)
-        val textMh = new MinHash(c.textNumPerm, c.seed ^ 0x7e47L)
-        val audioMh = new MinHash(c.audioNumPerm, c.seed ^ 0xa0d10L)
+        val textMh = new MinHash(c.textNumPerm, c.textSeed)
+        val audioMh = new MinHash(c.audioNumPerm, c.audioSeed)
         it.map { case (id, bytes, transcript) =>
           val toks = Shingles.tokens(if (transcript == null) "" else transcript)
           val toksH = new Array[Long](toks.length)
@@ -71,7 +71,7 @@ object Signatures {
           // every empty set would share them, and empty sets never verify
           val textBands =
             if (textSh.nonEmpty)
-              MinHash.bandKeys(textMh.signature(textSh), c.textBands, c.textRows, c.seed ^ 0x7e47L)
+              MinHash.bandKeys(textMh.signature(textSh), c.textBands, c.textRows, c.textSeed)
             else Array.empty[Long]
 
           var audioSh: Array[Long] = Array.empty
@@ -89,17 +89,17 @@ object Signatures {
           val audioSig = audioMh.signature(audioSh)
           val audioBands =
             if (decodeOk && audioSh.nonEmpty)
-              MinHash.bandKeys(audioSig, c.audioBands, c.audioRows, c.seed ^ 0xa0d10L)
+              MinHash.bandKeys(audioSig, c.audioBands, c.audioRows, c.audioSeed)
             else Array.empty[Long]
 
-          val sim = SimHash.signature(textSh, c.simhashBits, SimHash.mixBits(c.seed ^ 0x51e4L))
+          val sim = SimHash.signature(textSh, c.simhashBits, SimHash.mixBits(c.simhashSeed))
           val simBandVals =
             if (textSh.nonEmpty) BitPack.bands(sim, c.simhashBands, c.simhashBandBits)
             else Array.empty[Long]
           val simBands = new Array[Long](simBandVals.length)
           var si = 0
           while (si < simBandVals.length) {
-            simBands(si) = Hashing.combine(Hashing.derive(c.seed ^ 0x51e4L, 0xb000 + si), simBandVals(si))
+            simBands(si) = Hashing.combine(c.simhashBandSalt(si), simBandVals(si))
             si += 1
           }
 

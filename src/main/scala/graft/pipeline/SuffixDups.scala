@@ -53,7 +53,7 @@ object SuffixDups {
     if (toksH == null || toksH.length < w) Iterator.empty
     else {
       val hashes = Array.tabulate(toksH.length - w + 1) { i =>
-        var h = conf.seed ^ 0x50ff1eL
+        var h = conf.windowSeed
         var j = 0
         while (j < w) { h = Hashing.combine(h, toksH(i + j)); j += 1 }
         h

@@ -135,13 +135,13 @@ object ClipQueries {
       .select(col("clip_id"), col("bytes"))
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
-        val mh = new MinHash(c.audioNumPerm, c.seed ^ 0xa0d10L)
+        val mh = new MinHash(c.audioNumPerm, c.audioSeed)
         it.flatMap { case (id, bytes) =>
           try {
             val dec = WavCodec.decode(bytes)
             val sh = AudioFeatures.shingles(dec.samples, c.audioShingleK, c.seed)
             if (sh.isEmpty) Iterator.empty
-            else MinHash.bandKeys(mh.signature(sh), c.audioBands, c.audioRows, c.seed ^ 0xa0d10L)
+            else MinHash.bandKeys(mh.signature(sh), c.audioBands, c.audioRows, c.audioSeed)
               .iterator.zipWithIndex.map { case (k, i) => (id, i.toLong, k) }
           } catch { case _: IllegalArgumentException => Iterator.empty }
         }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.pipeline.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once state of the SQL query surface: every relation that depends
@@ -50,7 +51,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    benchmark sessions, NOT for long-lived production sessions.
   *  - `GRAFT_INDEX_DIR=<dir>`: the production shape — the relation is
   *    written ONCE as parquet under `<dir>/<view name>` and the view reads
-  *    the files. Executor loss costs a re-scan of storage, never a rebuild
+  *    the files. The spill is a [[Checkpoints.stage]] keyed by the view's
+  *    SQL: a spill whose manifest is missing, or whose part files no longer
+  *    match the manifest's lineage, is rebuilt rather than served.
+  *    Executor loss costs a re-scan of storage, never a rebuild
   *    or a dead view; the files also outlive the session, which is exactly
   *    the reference's persisted index the `saveTable` stubs never
   *    implemented (`StdHashIndex.h:189-192`). Inputs are never spilled:
@@ -121,21 +125,10 @@ object CodesCache {
     cache.computeIfAbsent((spark, dir, viewName), _ => {
       // env for deployments; -Dgraft.index.dir for in-JVM callers (tests)
       val df = sys.props.get("graft.index.dir").orElse(sys.env.get("GRAFT_INDEX_DIR")) match {
-        case Some(root) =>
-          // production spill path: build once to storage, query the files.
-          // Re-tighten array-element nullability from the query's OWN
-          // schema (analysis-only, cheap): the parquet reader widens
-          // elements to nullable, which downstream native kernels reject
-          // at analysis time.
-          val target = s"$root/$viewName"
-          val fs = new java.io.File(target)
-          val planned = spark.sql(sql)
-          if (!fs.isDirectory || !new java.io.File(fs, "_SUCCESS").isFile)
-            planned.write.mode("overwrite").parquet(target)
-          graft.functions.SchemaAsserts.tightenArrays(
-            spark.read.parquet(target), planned.schema)
-        case None =>
-          spark.sql(sql).localCheckpoint(true)
+        // production spill path: a checkpointed stage, so a spill is re-read
+        // only while its manifest and part files agree, else rebuilt
+        case Some(root) => Checkpoints.stage(spark, Some(root), viewName, sql)(spark.sql(sql))._1
+        case None => spark.sql(sql).localCheckpoint(true)
       }
       df.createOrReplaceTempView(viewName)
       Entry(viewName, df)

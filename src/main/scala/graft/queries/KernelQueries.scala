@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.conf.GraftConf
 import graft.kernel._
-import graft.optimize.HashBooster
+import graft.optimize.{Ardhf, HashBooster, Rdhf}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -204,14 +204,16 @@ object KernelQueries {
       .orderBy($"table_rank")
   }
 
-  /** O5 RDHF driver surface: brute-force cosine top-k ground truth over a
-    * driver-collected sample (the reference's ground-truth path), then the
-    * pool→select loop; one row per chosen pool bit. */
+  /** O5 RDHF / O6 ARDHF driver surface: brute-force cosine top-k ground
+    * truth over a driver-collected sample (the reference's ground-truth
+    * path), then the given optimizer's pool→select loop; one row per
+    * chosen pool bit. */
   val RdhfSample = 300
   val RdhfQueries = 40
   val RdhfK = 3
 
-  private def rdhfTables(spark: SparkSession, dir: String): DataFrame = {
+  private def bitTables(spark: SparkSession, dir: String,
+      optimize: (Array[Array[Float]], Array[Array[Int]], Rdhf.Config) => Rdhf.Result): DataFrame = {
     import spark.implicits._
     val data = fitSample(spark, dir).take(RdhfSample)
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -224,31 +226,7 @@ object KernelQueries {
       data.indices.filter(_ != i)
         .sortBy(j => (-cos(data(i), data(j)), j)).take(RdhfK).toArray
     }
-    val res = graft.optimize.Rdhf.optimize(data, neighbours,
-      graft.optimize.Rdhf.Config(bitPoolSize = 48, numFuncs = 3, numBits = 8, seed = seed))
-    res.tables.zipWithIndex.flatMap { case (t, r) =>
-      t.poolRows.zipWithIndex.map { case (row, b) => (r.toLong, b.toLong, row.toLong) }
-    }.toDF("table_rank", "bit_rank", "pool_row")
-      .orderBy($"table_rank", $"bit_rank")
-  }
-
-  /** O6 ARDHF driver surface — same sample/ground-truth as q_rdhf_tables,
-    * approximate (positive-only S + aggregated negative) selection. */
-  private def ardhfTables(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val data = fitSample(spark, dir).take(RdhfSample)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      dot / math.sqrt(na * nb)
-    }
-    val neighbours = Array.tabulate(RdhfQueries) { i =>
-      data.indices.filter(_ != i)
-        .sortBy(j => (-cos(data(i), data(j)), j)).take(RdhfK).toArray
-    }
-    val res = graft.optimize.Ardhf.optimize(data, neighbours,
-      graft.optimize.Ardhf.Config(bitPoolSize = 48, numFuncs = 3, numBits = 8, seed = seed))
+    val res = optimize(data, neighbours, Rdhf.Config(bitPoolSize = 48, numFuncs = 3, numBits = 8, seed = seed))
     res.tables.zipWithIndex.flatMap { case (t, r) =>
       t.poolRows.zipWithIndex.map { case (row, b) => (r.toLong, b.toLong, row.toLong) }
     }.toDF("table_rank", "bit_rank", "pool_row")
@@ -263,8 +241,8 @@ object KernelQueries {
     "q_pca_ortho" -> ((s, _) => pcaOrtho(s)),
     "q_pca_variance_order" -> ((s, _) => pcaVarianceOrder(s)),
     "q_hashboost_tables" -> ((s, d) => hashboostTables(s, d)),
-    "q_rdhf_tables" -> ((s, d) => rdhfTables(s, d)),
-    "q_ardhf_tables" -> ((s, d) => ardhfTables(s, d))
+    "q_rdhf_tables" -> ((s, d) => bitTables(s, d, Rdhf.optimize)),
+    "q_ardhf_tables" -> ((s, d) => bitTables(s, d, Ardhf.optimize))
   )
 
   /** The iterative kernels themselves (Jacobi eigen / Gram–Schmidt / FWHT /

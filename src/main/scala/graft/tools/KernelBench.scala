@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.audio.{AudioFeatures, WavCodec}
 import graft.conf.GraftConf
-import graft.kernel.{BitPack, Hashing, MinHash, Shingles, SimHash}
+import graft.kernel.{MinHash, Shingles, SimHash}
 import graft.synth.ClipTableGen
 
 /** No-Spark microbenchmark of the per-clip signature kernel: synthesis,
@@ -17,8 +17,8 @@ object KernelBench {
     val clips = (0L until (n / 4).toLong).flatMap(g => ClipTableGen.group(c.seed, g)).toArray
     println(f"synth      ${(System.nanoTime() - t0) / 1e9}%6.2f s  (${clips.length} clips)")
 
-    val textMh = new MinHash(c.textNumPerm, c.seed ^ 0x7e47L)
-    val audioMh = new MinHash(c.audioNumPerm, c.seed ^ 0xa0d10L)
+    val textMh = new MinHash(c.textNumPerm, c.textSeed)
+    val audioMh = new MinHash(c.audioNumPerm, c.audioSeed)
 
     def timed(name: String)(body: => Unit): Unit = {
       val t = System.nanoTime()
@@ -51,11 +51,11 @@ object KernelBench {
       textSh.foreach { sh => sink += textMh.signature(sh)(0) }
     }
     timed("simhash") {
-      textSh.foreach { sh => sink += SimHash.signature(sh, c.simhashBits, SimHash.mixBits(c.seed ^ 0x51e4L)) }
+      textSh.foreach { sh => sink += SimHash.signature(sh, c.simhashBits, SimHash.mixBits(c.simhashSeed)) }
     }
     timed("bandkeys") {
       audioSh.foreach { sh =>
-        sink += MinHash.bandKeys(audioMh.signature(sh), c.audioBands, c.audioRows, c.seed)(0)
+        sink += MinHash.bandKeys(audioMh.signature(sh), c.audioBands, c.audioRows, c.audioSeed)(0)
       }
     }
     println(s"sink=$sink")

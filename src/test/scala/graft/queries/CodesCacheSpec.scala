@@ -94,6 +94,26 @@ class CodesCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("GRAFT_INDEX_DIR: a spill that lost a part file is rebuilt, not served partially") {
+    val root = java.nio.file.Files.createTempDirectory("graft-indexdir-lost").toFile
+    val sql = "SELECT id FROM range(0, 100, 1, 4)"
+    System.setProperty("graft.index.dir", root.getPath)
+    try {
+      val v = CodesCache.materialize(spark.newSession(), "/fake/dir-lost", "cc_lost", sql)
+      val parts = new File(root, v).listFiles().filter(f => f.getName.startsWith("part-") && f.length > 0)
+      assert(parts.length > 1, "the spill must span several part files")
+      assert(parts.head.delete())
+      val s2 = spark.newSession()
+      val again = CodesCache.materialize(s2, "/fake/dir-lost", "cc_lost", sql)
+      assert(again === v)
+      val fresh = spark.sql(sql).collect().map(_.getLong(0)).sorted.toSeq
+      assert(s2.sql(s"SELECT id FROM $again").collect().map(_.getLong(0)).sorted.toSeq === fresh)
+    } finally {
+      System.clearProperty("graft.index.dir")
+      graft.tools.Scratch.deleteRec(root)
+    }
+  }
+
   test("forest knn and recall share one materialized code table per dir") {
     val dir = Sf0001
     def forestViews = spark.catalog.listTables().collect().count(t =>
@@ -171,7 +191,9 @@ class CodesCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         "embed_nrm_", "codes_rp_", "ann_bb_", "forest_lv_").map(p => p -> root.listFiles().filter(_.getName.startsWith(p)))
       for ((p, dirs) <- spills)
         assert(dirs.length == 1 && new File(dirs.head, "_SUCCESS").isFile, s"$p: one completed spill")
-      def stamps = root.listFiles().flatMap(_.listFiles()).map(f => f.getPath -> f.lastModified).toMap
+      // the spill dirs' files and the manifests beside them
+      def stamps = root.listFiles().flatMap(f => if (f.isDirectory) f.listFiles() else Array(f))
+        .map(f => f.getPath -> f.lastModified).toMap
       val written = stamps
       assert(all(spark.newSession()) === first)
       assert(stamps === written, "a new session must read the spilled views, not rewrite them")
