@@ -1,11 +1,11 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,8 +21,10 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * requires: every pipeline stage writes Parquet plus one metadata file,
   * `_MANIFEST_<stage>.json`, holding the stage name, input signature, row
   * count, wall ms, per-output-file row lineage (`partitions`) and the
-  * written `schema`. It is written once, after the parquet write, by tmp
-  * file plus atomic move. On rerun, a stage whose parsed manifest carries
+  * written `schema`. It is written once, after the parquet write, as a
+  * tmp file renamed into place, through the stage dir's Hadoop
+  * `FileSystem` like the parquet itself, so the root may be a path or a
+  * URI (`file://`, `hdfs://`). On rerun, a stage whose parsed manifest carries
   * the caller's input signature and the part files' current lineage is
   * read back instead of recomputed, so a killed job resumes from the last
   * completed stage with byte-identical results (everything downstream is a
@@ -69,7 +71,13 @@ object Checkpoints {
         (compute, StageInfo(name, inputSig, -1L, -1L, resumed = false, Nil))
       case Some(root) =>
         val dir = s"$root/$name"
-        val manifestPath = Paths.get(s"$root/_MANIFEST_$name.json")
+        val manifestPath = new Path(s"$root/_MANIFEST_$name.json")
+        // the raw FS of a checksummed one (the local FS): no `.crc` beside
+        // the manifest, which is read whole and parsed anyway
+        val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+          case c: ChecksumFileSystem => c.getRawFileSystem
+          case f => f
+        }
         // Spark's file sources widen every array element to nullable on
         // read, and the native kernels (graft.functions.ArraySetExprs)
         // reject nullable-element arrays: the read-back re-tightens what the
@@ -79,11 +87,11 @@ object Checkpoints {
           graft.functions.SchemaAsserts.tightenArrays(spark.read.schema(written).parquet(dir), written)
         // an absent manifest, or an unreadable footer, counts as a change
         val resumed = for {
-          (sig, lineage, written) <- readManifest(manifestPath) if sig == inputSig
+          (sig, lineage, written) <- readManifest(fs, manifestPath) if sig == inputSig
           files <- Try(partFiles(spark, dir)).toOption.flatten if files == lineage
         } yield (readBack(written), StageInfo(name, inputSig, files.map(_._2).sum, 0L, resumed = true, files))
         resumed.getOrElse {
-          Files.deleteIfExists(manifestPath) // stale: input or part files changed → recompute
+          fs.delete(manifestPath, false) // stale: input or part files changed → recompute
           val t0 = System.nanoTime()
           val out = compute
           out.write.mode("overwrite").parquet(dir)
@@ -98,10 +106,12 @@ object Checkpoints {
             "partitions" -> JArray(files.map { case (f, n) =>
               JObject("file" -> JString(f), "rows" -> JLong(n)) }.toList),
             "schema" -> parse(out.schema.json))
-          val tmp = Paths.get(s"$manifestPath.tmp")
-          Files.write(tmp, compact(render(manifest)).getBytes(StandardCharsets.UTF_8))
-          Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
+          // one create and one rename: each Hadoop create on a local dir
+          // without libhadoop forks a chmod
+          val tmp = new Path(s"$manifestPath.tmp")
+          val os = fs.create(tmp, true)
+          try os.write(compact(render(manifest)).getBytes(StandardCharsets.UTF_8)) finally os.close()
+          if (!fs.rename(tmp, manifestPath)) throw new IOException(s"could not rename $tmp to $manifestPath")
           (readBack(out.schema), info)
         }
     }
@@ -109,8 +119,9 @@ object Checkpoints {
 
   /** (input signature, lineage, written schema) of a stage manifest; None
     * when it does not parse or lacks one of them. */
-  private def readManifest(path: JPath): Option[(String, Seq[(String, Long)], StructType)] = Try {
-    val m = parse(new String(Files.readAllBytes(path), StandardCharsets.UTF_8))
+  private def readManifest(fs: FileSystem, path: Path): Option[(String, Seq[(String, Long)], StructType)] = Try {
+    val in = fs.open(path)
+    val m = try parse(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     val JArray(parts) = m \ "partitions"
     val schema = DataType.fromJson(compact(render((m \ "schema").extract[JObject])))
     ((m \ "input_sig").extract[String],

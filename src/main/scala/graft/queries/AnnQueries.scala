@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.kernel.Probes
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import CrossSql._
 
@@ -22,7 +23,8 @@ import CrossSql._
   *      (`/root/reference/hashIndex/StdHashIndex.h:129-157`) as a shuffled
   *      hash join instead of a pairwise theta-join. Candidates from all
   *      bands union as a set (Q4, `HashCollection.h:196-210`: each pair is
-  *      kept on its first hitting band, see [[sparkAnnCtes]]; the
+  *      kept on its first hitting band, see [[sparkGather]], a pair-RDD
+  *      join; the
   *      reference accumulates per-table candidates in a round-robin
   *      interleave there — LshForestSpec's "Q4 depth-major round-robin"
   *      set-equivalence argument covers this non-forest union too, since
@@ -36,7 +38,8 @@ import CrossSql._
   *      restores exactness; the gather is truncated at the per-query
   *      retrieval budget [[GatherCap]] (the reference's early exit) in
   *      expanding-distance order;
-  *   3. exact re-rank by cosine (Q7) + per-query top-k rank window (Q8).
+  *   3. exact re-rank by cosine (Q7) + per-query top-k (Q8), the bounded
+  *      heap of [[Knn]].
   *
   * The DuckDB oracle keeps the direct `bit_count(xor(a,b)) ≤ r` theta
   * formulation — an independent spelling of the same candidate set, so the
@@ -104,48 +107,53 @@ object AnnQueries {
       s"""SELECT vec_id, band_idx, shiftright(code, band_idx * $BandBits) & $bandMask AS band_key, code
          |FROM ${EmbedQueries.codesRpView(spark, dir)} LATERAL VIEW explode(sequence(0, ${Bands - 1})) tb AS band_idx""".stripMargin)
 
-  /** Spark CTE chain on top of `codes`: banded multiprobe equi-join →
-    * exact filter + re-rank (see class doc, step 2).
+  /** The first band on which two codes differ in at most [[BandRadius]]
+    * bits, given their XOR; -1 if none. */
+  private def firstMeetingBand(x: Long): Int =
+    (0 until Bands).find(j => java.lang.Long.bitCount((x >> (j * BandBits)) & bandMask) <= BandRadius)
+      .getOrElse(-1)
+
+  /** Spark: each query's candidates, capped (see class doc, step 2), on
+    * pair RDDs over the index views.
     *
     * Probe and base rows both carry the code, so each joined row knows its
     * pair's Hamming distance `hd` without a lookup. A probe hits band j iff
     * the pair's band-j codes differ in at most [[BandRadius]] bits (the
     * masks are that whole ball), so a pair joins once per such band; only
-    * the row of its first such band is kept ([[CrossSql.firstBand]]), which
-    * leaves one row per pair without a DISTINCT. The `hd ≤ r` filter runs
-    * before the [[GatherCap]] window (see there for why that is exact). Only the capped candidates fetch `embedding, nrm`:
-    * one broadcast lookup per side. */
-  private def sparkAnnCtes(spark: SparkSession, dir: String): String = {
-    val probes = BandProbeMasks.map(m => s"CAST($m AS BIGINT)").mkString(", ")
-    val first = firstBand(Bands, j =>
-      s"bit_count(shiftright(qp.code ^ bb.code, ${j * BandBits}) & $bandMask) <= $BandRadius")
+    * the row of its first such band is kept, which leaves one row per pair
+    * without a DISTINCT. The `hd ≤ r` filter runs before the [[GatherCap]]
+    * cap (see there for why that is exact). */
+  private def sparkGather(spark: SparkSession, dir: String): RDD[(Long, Seq[(Int, Long)])] = {
+    view(spark, dir, "embeddings")
+    // codes_rp rows are (vec_id, embedding, nrm, code)
+    val probes = CodesCache.rows(spark, dir, EmbedQueries.codesRpView(spark, dir))
+      .filter(r => !r.isNullAt(0) && r.getLong(0) % QueryStride == 0)
+      .flatMap { r =>
+        val (q, code) = (r.getLong(0), r.getLong(3))
+        for (j <- 0 until Bands; m <- BandProbeMasks)
+          yield ((j, ((code >> (j * BandBits)) & bandMask) ^ m), (q, code))
+      }
+    val base = CodesCache.rows(spark, dir, bbView(spark, dir)).filter(!_.isNullAt(0))
+      .map(r => ((r.getInt(1), r.getLong(2)), (r.getLong(0), r.getLong(3))))
+    val cands = probes.join(base).flatMap { case ((j, _), ((q, qc), (n, nc))) =>
+      val hd = java.lang.Long.bitCount(qc ^ nc)
+      if (q != n && hd <= ProbeRadius && firstMeetingBand(qc ^ nc) == j) Some((q, (hd, n))) else None
+    }
+    Knn.gather(cands, GatherCap)
+  }
+
+  private def sparkKnn(spark: SparkSession, dir: String): DataFrame =
+    Knn.rerank(spark, dir, sparkGather(spark, dir), TopK)
+
+  /** The recall queries' Spark CTEs: the query points `q`, and the kNN
+    * tail's gathered candidates (`cand`) and ranks (`ranked`) read from
+    * temp views of its results. */
+  private def sparkTailCtes(spark: SparkSession, dir: String): String = {
+    Knn.candidates(spark, sparkGather(spark, dir)).createOrReplaceTempView("ann_cand")
+    sparkKnn(spark, dir).createOrReplaceTempView("ann_ranked")
     s"""q AS (SELECT * FROM codes WHERE vec_id % $QueryStride = 0),
-       |qp AS (
-       |  SELECT vec_id, band_idx, code,
-       |    (shiftright(code, band_idx * $BandBits) & $bandMask) ^ pm AS band_key
-       |  FROM q LATERAL VIEW explode(sequence(0, ${Bands - 1})) tb AS band_idx
-       |       LATERAL VIEW explode(array($probes)) tm AS pm),
-       |cand0 AS (
-       |  SELECT qp.vec_id AS query_id, bb.vec_id AS neighbor_id, bit_count(qp.code ^ bb.code) AS hd
-       |  FROM qp JOIN ${bbView(spark, dir)} bb ON qp.band_idx = bb.band_idx AND qp.band_key = bb.band_key
-       |  WHERE qp.vec_id <> bb.vec_id AND bit_count(qp.code ^ bb.code) <= $ProbeRadius
-       |    AND qp.band_idx = $first),
-       |cand_ids AS (
-       |  SELECT query_id, neighbor_id, hd FROM (
-       |    SELECT query_id, neighbor_id, hd,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY hd ASC, neighbor_id ASC) AS crank
-       |    FROM cand0) rc
-       |  WHERE crank <= $GatherCap),
-       |cand AS (
-       |  SELECT ci.query_id, ci.neighbor_id, ci.hd,
-       |    ${sparkDot("qv.embedding", "b.embedding")} / (qv.nrm * b.nrm) AS score
-       |  FROM cand_ids ci
-       |  JOIN codes qv ON qv.vec_id = ci.query_id
-       |  JOIN codes b ON b.vec_id = ci.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-       |  FROM cand)""".stripMargin
+       |cand AS (SELECT query_id, neighbor_id, hd FROM ann_cand),
+       |ranked AS (SELECT query_id, neighbor_id, rank FROM ann_ranked)""".stripMargin
   }
 
   /** DuckDB oracle chain: the same candidate set spelled as the direct
@@ -248,12 +256,11 @@ object AnnQueries {
     query(spark, dir, "embeddings")(mkSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_hamming_knn" -> ((s, d) =>
-      q(s, d)(annKnnSql(sparkWith(s, d), sparkAnnCtes(s, d)))),
+    "q_ann_hamming_knn" -> ((s, d) => sparkKnn(s, d)),
     "q_ann_recall" -> ((s, d) =>
-      q(s, d)(annRecallSql(sparkWith(s, d), sparkAnnCtes(s, d), sparkDot))),
+      q(s, d)(annRecallSql(sparkWith(s, d), sparkTailCtes(s, d), sparkDot))),
     "q_ann_recall_curve" -> ((s, d) =>
-      q(s, d)(recallCurveSql(sparkWith(s, d), sparkAnnCtes(s, d), sparkDot,
+      q(s, d)(recallCurveSql(sparkWith(s, d), sparkTailCtes(s, d), sparkDot,
         s"SELECT CAST(r AS BIGINT) AS r FROM (SELECT explode(array($budgetsList)) AS r)")))
   )
 

@@ -1,7 +1,10 @@
 package graft.queries
 
 import graft.pipeline.Checkpoints
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Build-once state of the SQL query surface: every relation that depends
   * only on the input tables, built once per (session, input dir).
@@ -35,7 +38,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    pair is ranked or scored on, so a warm query scans these and runs
   *    only its query-dependent part — probe joins, verification, rank
   *    windows and the final ORDER BY — and fetches a per-id attribute only
-  *    for candidates past its rank cap, never to rank them.
+  *    for candidates past its rank cap, never to rank them. The kNN
+  *    queries read the views' rows directly ([[rows]]) and run that part
+  *    on pair RDDs ([[Knn]]).
+  *
+  * Warm-pass key budget. A warm pass of the ten LSH/ANN headline queries
+  * (the `ann_queries` mix) must fit Spark's codegen cache
+  * (`spark.sql.codegen.cache.maxEntries`: static, 100 entries in four
+  * 25-entry LRU segments; in `local` mode the driver and the executor each
+  * key a whole-stage class). A pass that overflows a segment recompiles
+  * that segment's classes on every pass. On sf0.001 a pass needs 69 keys
+  * (123 while the kNN queries ended in SQL re-rank tails), pinned in
+  * `CodesCacheSpec`; the budget is 75, where about 15 % of JVMs overflow a
+  * segment under a uniform model (5 % at 69). Count a pass's keys with the
+  * test helper `CodegenKeys.keys { … }`: it empties the cache and keeps it
+  * from evicting for the block, so the count is the pass's distinct keys in
+  * any JVM. Every Catalyst plan added to the query path adds keys: count
+  * them first.
   *
   * At production scale a materialization is the bucketed index table you
   * would write to distributed storage once per index build (operator
@@ -133,6 +152,19 @@ object CodesCache {
       df.createOrReplaceTempView(viewName)
       Entry(viewName, df)
     }).view
+  }
+
+  /** The rows of `view`, a view [[materialize]] built for `dir`, for a
+    * pair-RDD reader ([[Knn]]): the checkpointed blocks themselves, or a
+    * scan of the `GRAFT_INDEX_DIR` spill. No Catalyst plan runs over the
+    * blocks, so reading them compiles no class. Columns are in the view's
+    * SELECT order. */
+  def rows(spark: SparkSession, dir: String, view: String): RDD[InternalRow] = {
+    val df = cache.get((spark, dir, view)).df
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case _ => df.queryExecution.toRdd
+    }
   }
 
   /** Drop entries of stopped sessions (their storage blocks died with the

@@ -8,8 +8,9 @@ import CrossSql._
   *
   *  - q_knn_cosine / q_knn_l2: the reference's `batchQuery` public API
   *    (operator Q5, `/root/reference/hashIndex/HashCollection.h:232-295`):
-  *    query set × base set, exact distance (Q7), per-query top-k (Q8 as a
-  *    rank window instead of the bounded heap).
+  *    query set × base set, exact distance (Q7), per-query top-k (Q8: on
+  *    Spark, cosine keeps the reference's bounded heap, [[Knn]]; L2 and the
+  *    oracles use a rank window).
   *  - q_ann_codes: H1 RandomProjection sign codes (SimHash over the dense
   *    space, `/root/reference/hashFunction/RandomProjectionHashFunction.h:47-53`)
   *    with a cross-engine ±1 projection derived from md5 parity — the
@@ -48,8 +49,8 @@ object EmbedQueries {
 
   /** Cosine kNN over a `base` that carries each vector's norm `nrm`: one
     * sqrt of the same ordered double fold per vector, the identical value
-    * to recomputing it per pair at 1/|B| the cost. The Spark side reads the
-    * norms from [[nrmView]]. */
+    * to recomputing it per pair at 1/|B| the cost. The DuckDB oracle; the
+    * Spark side is [[knnCosine]]. */
   private def cosSql(baseSql: String, dot: (String, String) => String): String =
     knnSql(baseSql, s"${dot("q.embedding", "b.embedding")} / (q.nrm * b.nrm)", asc = false)
 
@@ -117,6 +118,19 @@ object EmbedQueries {
          |SELECT vec_id, embedding, nrm, CAST(${codeExpr(sparkBitDot)} AS BIGINT) AS code
          |FROM ${nrmView(spark, dir)} CROSS JOIN sgn""".stripMargin)
 
+  /** Exact cosine top-k on Spark, over the norms of [[nrmView]]: every
+    * query point against every other vector, each query's top-k merged
+    * per base partition ([[Knn.topK]]). A partition's query points travel
+    * as one array, so the base is read once per query partition. */
+  private def knnCosine(spark: SparkSession, dir: String, k: Int): DataFrame = {
+    view(spark, dir, "embeddings")
+    val vecs = CodesCache.rows(spark, dir, nrmView(spark, dir)).flatMap(Knn.vec)
+    val qs = vecs.filter(_.id % QueryStride == 0).glom()
+    Knn.topK(spark, qs.cartesian(vecs).flatMap { case (qa, b) =>
+      qa.iterator.filter(_.id != b.id).map(q => (q.id, (Knn.cosine(q, b), b.id)))
+    }, k)
+  }
+
   private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
     query(spark, dir, "embeddings")(mkSql)
 
@@ -124,8 +138,7 @@ object EmbedQueries {
     "q_embed_norms" -> ((s, d) => q(s, d)(
       s"""SELECT vec_id, CAST(floor(1000000 * nrm) AS BIGINT) AS norm_x1e6
          |FROM ${nrmView(s, d)} ORDER BY vec_id""".stripMargin)),
-    "q_knn_cosine" -> ((s, d) => q(s, d)(
-      cosSql(s"SELECT vec_id, embedding, nrm FROM ${nrmView(s, d)}", sparkDot))),
+    "q_knn_cosine" -> ((s, d) => knnCosine(s, d, TopK)),
     "q_knn_l2" -> ((s, d) => q(s, d)(knnL2SparkSql)),
     "q_ann_codes" -> ((s, d) => q(s, d)(
       s"SELECT vec_id, code FROM ${codesRpView(s, d)} ORDER BY vec_id")),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import CrossSql._
 
@@ -22,8 +23,8 @@ import CrossSql._
   *      reference's "expand until minRetrieved" early exit;
   *   4. candidates union across tables (Q4, DISTINCT), truncated at the
   *      per-query retrieval budget [[GatherCap]] (the reference's
-  *      result-capped collect), exact cosine re-rank (Q7) + top-k rank
-  *      window (Q8).
+  *      result-capped collect), exact cosine re-rank (Q7) + top-k (Q8).
+  *      On Spark steps 3–4 run on pair RDDs ([[sparkGather]], [[Knn]]).
   *
   * At production scale the per-level join keys are `code >> s` over 64-bit
   * codes — each (table, level) is one shuffle-partitioned equi-join, and
@@ -109,70 +110,62 @@ object ForestQueries {
     * (40 instantiations of the md5 matrix + interpreted code dots in one
     * forest-kNN plan, see CodesCache), and each execution re-exploded the
     * levels and re-counted the buckets. */
-  private def sparkWith(spark: SparkSession, dir: String): String = {
+  private def levelsView(spark: SparkSession, dir: String): String = {
     val rp = EmbedQueries.codesRpView(spark, dir)
     val perTable = (1 until NumTables).map(t =>
       codesCtes(sparkSgnCte, EmbedQueries.sparkBitDot, t, ", code AS code0", rp))
-    val lv = CodesCache.materialize(spark, dir, "forest_lv",
+    CodesCache.materialize(spark, dir, "forest_lv",
       s"""WITH codes_0 AS (SELECT vec_id, code, code AS code0 FROM $rp),
          |${perTable.mkString(",\n")},
          |${tcCte(", code0")}
          |SELECT t, vec_id, s, pre, code0, COUNT(*) OVER (PARTITION BY t, s, pre) AS sz
          |FROM (SELECT t, vec_id, s, shiftright(code, s) AS pre, code0
          |  FROM tc LATERAL VIEW explode(sequence(0, $MaxDepth)) tl AS s) l""".stripMargin)
-    s"""base AS (SELECT vec_id, embedding, nrm FROM $rp),
-       |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
-       |lv AS (SELECT t, vec_id, s, pre, code0 FROM $lv),
-       |qlv AS (SELECT t, vec_id, s, pre, code0, sz FROM $lv WHERE vec_id % $QueryStride = 0)""".stripMargin
   }
 
-  /** Spark: chosen level per (query, table) + union candidates + exact
-    * re-rank, the same result as [[duckForestCtes]] with no lookup the
-    * level rows could carry.
+  /** Spark: each query's union candidates, capped — the same candidates as
+    * [[duckForestCtes]], on pair RDDs over the level table, with no lookup
+    * the level rows could carry.
     *
-    *  - `cnt` ranks each query level by `lvl`: its level when its bucket
-    *    (`sz`, carried by the level row) holds ≥ MinCand others or it is
-    *    the deepest backoff, past MaxDepth otherwise. The least `lvl` is
-    *    the oracle's chosen level, and `min_by(pre, lvl)` keeps the query's
+    *  - A query level's `lvl` is its level when its bucket (`sz`, carried
+    *    by the level row) holds ≥ MinCand others or it is the deepest
+    *    backoff, past MaxDepth otherwise. The least `lvl` per (query,
+    *    table) is the oracle's chosen level, and the row keeps the query's
     *    prefix there, so the candidate join reads it instead of re-joining
-    *    `qlv`.
-    *  - Level rows carry the table-0 code, so each candidate row knows its
-    *    `hd` for the [[GatherCap]] window without a `codes_0` lookup.
-    *  - The query levels are hash-partitioned by query once: the chosen
-    *    level's aggregate, the DISTINCT union over tables and both rank
-    *    windows all run inside that partitioning, since the level join
-    *    streams `chosen` past a broadcast of `lv`.
-    *  - Only the capped candidates fetch `embedding, nrm`, one broadcast
-    *    lookup per side. */
-  private val sparkForestCtes: String =
-    s"""cnt AS (
-       |  SELECT /*+ REPARTITION(query_id) */ vec_id AS query_id, t, pre, code0,
-       |    CASE WHEN sz - 1 >= $MinCand OR s = $MaxDepth THEN s ELSE ${MaxDepth + 1} END AS lvl
-       |  FROM qlv),
-       |chosen AS (
-       |  SELECT query_id, t, code0, MIN(lvl) AS s, min_by(pre, lvl) AS pre
-       |  FROM cnt GROUP BY query_id, t, code0),
-       |hits AS (
-       |  SELECT ch.query_id, bl.vec_id AS neighbor_id,
-       |    bit_count(ch.code0 ^ bl.code0) AS hd
-       |  FROM chosen ch
-       |  JOIN lv bl ON bl.t = ch.t AND bl.s = ch.s AND bl.pre = ch.pre AND bl.vec_id <> ch.query_id),
-       |cand_ids AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY hd ASC, neighbor_id ASC) AS crank
-       |    FROM (SELECT DISTINCT query_id, neighbor_id, hd FROM hits) c0) rc
-       |  WHERE crank <= $GatherCap),
-       |cand AS (
-       |  SELECT ci.query_id, ci.neighbor_id,
-       |    ${sparkDot("qq.embedding", "b.embedding")} / (qq.nrm * b.nrm) AS score
-       |  FROM cand_ids ci
-       |  JOIN base qq ON qq.vec_id = ci.query_id
-       |  JOIN base b ON b.vec_id = ci.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-       |  FROM cand)""".stripMargin
+    *    the query levels.
+    *  - Level rows carry the table-0 code, so each candidate knows its
+    *    `hd` for the [[GatherCap]] cap without a `codes_0` lookup.
+    *  - The cap keeps each pair once ([[Knn.Best]]): the DISTINCT union
+    *    over tables. */
+  private def sparkGather(spark: SparkSession, dir: String): RDD[(Long, Seq[(Int, Long)])] = {
+    view(spark, dir, "embeddings")
+    // (t, vec_id, s, pre, code0, sz)
+    val lv = CodesCache.rows(spark, dir, levelsView(spark, dir)).filter(!_.isNullAt(1))
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+    val chosen = lv.filter(_._2 % QueryStride == 0)
+      .map { case (t, q, s, pre, code0, sz) =>
+        ((q, t), (if (sz - 1 >= MinCand || s == MaxDepth) s else MaxDepth + 1, pre, code0))
+      }
+      .reduceByKey((a, b) => if (a._1 <= b._1) a else b)
+      .map { case ((q, t), (s, pre, code0)) => ((t, s, pre), (q, code0)) }
+    val hits = chosen.join(lv.map { case (t, n, s, pre, code0, _) => ((t, s, pre), (n, code0)) })
+      .flatMap { case (_, ((q, qc), (n, nc))) =>
+        if (q != n) Some((q, (java.lang.Long.bitCount(qc ^ nc), n))) else None
+      }
+    Knn.gather(hits, GatherCap)
+  }
+
+  private def sparkKnn(spark: SparkSession, dir: String): DataFrame =
+    Knn.rerank(spark, dir, sparkGather(spark, dir), TopK)
+
+  /** The recall query's Spark header: the vectors and query points, and
+    * the kNN ranks (`ranked`) read from a temp view of [[sparkKnn]]. */
+  private def sparkRecallWith(spark: SparkSession, dir: String): String = {
+    sparkKnn(spark, dir).createOrReplaceTempView("forest_ranked")
+    s"""base AS (SELECT vec_id, embedding, nrm FROM ${EmbedQueries.codesRpView(spark, dir)}),
+       |qbase AS (SELECT * FROM base WHERE vec_id % $QueryStride = 0),
+       |ranked AS (SELECT query_id, neighbor_id, rank FROM forest_ranked)""".stripMargin
+  }
 
   /** DuckDB: chosen level per (query, table) + union candidates + exact
     * re-rank, each attribute fetched from its own relation.
@@ -223,7 +216,7 @@ object ForestQueries {
 
   private def recallSql(withC: String, ctes: String, dot: (String, String) => String): String =
     s"""WITH $withC,
-       |$ctes,
+       |$ctes
        |ann AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= $TopK),
        |exact AS (SELECT query_id, neighbor_id FROM (
        |  SELECT qq.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -238,14 +231,14 @@ object ForestQueries {
        |GROUP BY exact.query_id ORDER BY query_id""".stripMargin
 
   private val knnDuckSql = knnSql(duckWith, duckForestCtes)
-  private val recallDuckSql = recallSql(duckWith, duckForestCtes, duckDot)
+  private val recallDuckSql = recallSql(duckWith, s"$duckForestCtes,", duckDot)
 
   private def q(spark: SparkSession, dir: String)(mkSql: => String): DataFrame =
     query(spark, dir, "embeddings")(mkSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_forest_knn" -> ((s, d) => q(s, d)(knnSql(sparkWith(s, d), sparkForestCtes))),
-    "q_ann_forest_recall" -> ((s, d) => q(s, d)(recallSql(sparkWith(s, d), sparkForestCtes, sparkDot)))
+    "q_ann_forest_knn" -> ((s, d) => sparkKnn(s, d)),
+    "q_ann_forest_recall" -> ((s, d) => q(s, d)(recallSql(sparkRecallWith(s, d), "", sparkDot)))
   )
 
   val oracleSql: Map[String, String] = Map(

@@ -1,5 +1,8 @@
 package graft.tools
 
+import java.io.File
+import java.nio.file.Files
+
 import graft.conf.GraftConf
 import graft.pipeline.DedupPipeline
 import graft.synth.ClipTableGen
@@ -8,8 +11,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end driver through the public API: synthesize the input_hint
-  * table, run the dedup pipeline with checkpoints, print cluster stats and
-  * the whole-stage classes the run compiled.
+  * table and write it as parquet (`<checkpointDir>-input`, or a temp dir
+  * without one), run the dedup pipeline with checkpoints over the files,
+  * print cluster stats and the whole-stage classes the run compiled.
   * Usage: runMain graft.tools.Demo [nClips] [checkpointDir] */
 object Demo {
   def main(args: Array[String]): Unit = {
@@ -32,7 +36,12 @@ object Demo {
       ("empty-text", graft.audio.WavCodec.encode(Array.fill[Short](2048)(100), 8000), 8000, 256, "pcm_s16le", ""),
       ("null-ish", Array.empty[Byte], 8000, 0, "pcm_s16le", "x")
     ).toDF("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
-    val input = clips.unionByName(hostile)
+    // The input as a parquet table beside the checkpoint dir, written
+    // before the timed run and read back, as graft.Bench and perfbench read
+    // theirs: the stage split then times the pipeline, not the generator.
+    val inputDir = ckpt.fold(Files.createTempDirectory("graft-demo-input").toString)(d => s"${d.stripSuffix("/")}-input")
+    clips.unionByName(hostile).write.mode("overwrite").parquet(inputDir)
+    val input = spark.read.parquet(inputDir)
 
     val compiled0 = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
     val t0 = System.nanoTime()
@@ -51,5 +60,6 @@ object Demo {
     println(s"edges accepted=$accepted rejectedByVerify=$rejected")
     clusters.filter($"clip_id".isin("bad-wav-1", "empty-text", "null-ish")).show(false)
     spark.stop()
+    if (ckpt.isEmpty) Scratch.deleteRec(new File(inputDir))
   }
 }

@@ -17,10 +17,10 @@ import java.nio.file.Files
   */
 object Scratch {
 
-  /** Scratch-dir name prefixes owned by this mechanism. Deliberately NOT a
-    * bare "graft-" — manually materialized inputs (e.g. a reusable
+  /** The scratch-dir name prefix owned by this mechanism. Deliberately NOT
+    * a bare "graft-" — manually materialized inputs (e.g. a reusable
     * /dev/shm/graft-in800k) must survive sweeps. */
-  private val prefixes = Seq("graft-bench-", "graft-stagebench")
+  private val prefix = "graft-bench-"
 
   /** Stamp `dir` as owned by this JVM. */
   def claim(dir: File): Unit =
@@ -39,7 +39,7 @@ object Scratch {
     * process is dead. Returns the number of directories removed. */
   def sweepStale(root: File): Int = {
     val stale = Option(root.listFiles()).getOrElse(Array.empty[File])
-      .filter(d => d.isDirectory && prefixes.exists(d.getName.startsWith) && !ownerAlive(d))
+      .filter(d => d.isDirectory && d.getName.startsWith(prefix) && !ownerAlive(d))
     stale.foreach { d =>
       System.err.println(s"[scratch] sweeping stale $d (owner dead)")
       deleteRec(d)

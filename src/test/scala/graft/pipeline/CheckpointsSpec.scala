@@ -199,6 +199,19 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
+  test("a checkpoint dir given as a file:// URI writes, resumes and recomputes its stage") {
+    withRoot { root =>
+      val uri = s"file://$root"
+      val (_, fresh) = Checkpoints.stage(spark, Some(uri), "s1", "sig")(spark.range(5).toDF())
+      assert(!fresh.resumed && fresh.rows === 5)
+      assert(new File(root, "_MANIFEST_s1.json").isFile && !new File(root, "_MANIFEST_s1.json.tmp").exists)
+      val (again, resumed) = Checkpoints.stage(spark, Some(uri), "s1", "sig")(fail("the stage must resume"))
+      assert(resumed.resumed && again.count() === 5)
+      val (other, changed) = Checkpoints.stage(spark, Some(uri), "s1", "sig2")(spark.range(3).toDF())
+      assert(!changed.resumed && other.count() === 3)
+    }
+  }
+
   test("a pipeline run resumes all its stages under the same config and none under a changed one") {
     withRoot { root =>
       val df = ClipTableGen.table(spark, 120, 42L).toDF()

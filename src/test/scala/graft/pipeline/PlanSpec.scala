@@ -6,7 +6,10 @@ import graft.synth.ClipTableGen
 import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.rdd.{CoGroupedRDD, RDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, RDDScanExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -45,38 +48,34 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"expected broadcast join in plan:\n${plan.take(2000)}")
   }
 
+  /** Every RDD under a query's result: the kNN queries end in a scan of a
+    * pair-RDD result ([[graft.queries.Knn]]), so their joins and scans are
+    * RDDs, not plan nodes. */
+  private def lineage(df: DataFrame): Seq[RDD[_]] = {
+    val root = collectFirst(df.queryExecution.executedPlan) { case r: RDDScanExec => r.inputRDDs().head }
+      .getOrElse(fail(s"not a scan of an RDD:\n${df.queryExecution.executedPlan}"))
+    def walk(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => walk(d.rdd))
+    walk(root).distinctBy(_.id)
+  }
+
+  /** The hash equi-joins of a lineage (`join` and `cogroup` both cogroup)
+    * and whether any RDD pairs every row with every row. */
+  private def joins(rdds: Seq[RDD[_]]): (Int, Boolean) =
+    (rdds.count(_.isInstanceOf[CoGroupedRDD[_]]), rdds.exists(_.getClass.getSimpleName == "CartesianRDD"))
+
   test("q_ann_hamming_knn executes banded multiprobe as equi-joins (no theta-join candidate gather)") {
     val df = graft.queries.AnnQueries.queries("q_ann_hamming_knn")(spark, "/root/testdata/sf0.001")
-    df.collect() // AQE finalizes the physical plan only on execution
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), s"cartesian product in ANN plan:\n${plan.take(3000)}")
-    // The only nested-loop joins allowed are the conditionless 1-row
-    // sign-matrix cross joins; a conditioned BNLJ is the round-1
-    // bit_count theta-join scale-killer coming back.
-    val badBnlj = plan.split("\n").filter(l =>
-      l.contains("BroadcastNestedLoopJoin") && !l.trim.endsWith("Cross"))
-    assert(badBnlj.isEmpty,
-      s"ANN candidate gather fell back to a conditioned nested-loop join:\n${badBnlj.mkString("\n")}")
-    // candidate gather must be a hash/merge equi-join on the probed band key
-    val probeJoin = plan.split("\n").filter(l =>
-      (l.contains("BroadcastHashJoin") || l.contains("ShuffledHashJoin") || l.contains("SortMergeJoin"))
-        && l.contains("band_key"))
-    assert(probeJoin.nonEmpty, s"expected (band_idx, band_key) equi-join in ANN plan:\n${plan.take(3000)}")
+    // the probe join on (band_idx, probed band_key) and the vector lookup:
+    // hash equi-joins, and no pairing of every query with every vector
+    val (equi, cartesian) = joins(lineage(df))
+    assert(equi === 2 && !cartesian, lineage(df).mkString("\n"))
   }
 
   test("q_ann_forest_knn executes the prefix schedule as equi-joins only") {
     val df = graft.queries.ForestQueries.queries("q_ann_forest_knn")(spark, "/root/testdata/sf0.001")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), s"cartesian product in forest plan:\n${plan.take(3000)}")
-    val badBnlj = plan.split("\n").filter(l =>
-      l.contains("BroadcastNestedLoopJoin") && !l.trim.endsWith("Cross"))
-    assert(badBnlj.isEmpty,
-      s"forest candidate gather fell back to a conditioned nested-loop join:\n${badBnlj.mkString("\n")}")
-    val prefixJoin = plan.split("\n").filter(l =>
-      (l.contains("BroadcastHashJoin") || l.contains("ShuffledHashJoin") || l.contains("SortMergeJoin"))
-        && l.contains("pre"))
-    assert(prefixJoin.nonEmpty, s"expected (t, s, pre) equi-join in forest plan:\n${plan.take(3000)}")
+    // the (t, s, pre) level join and the vector lookup
+    val (equi, cartesian) = joins(lineage(df))
+    assert(equi === 2 && !cartesian, lineage(df).mkString("\n"))
   }
 
   test("forest query scans the materialized code views, never rebuilds codes from parquet") {
@@ -85,13 +84,9 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // one forest plan); CodesCache materializes the index once and the
     // query must read only the checkpointed views.
     val df = graft.queries.ForestQueries.queries("q_ann_forest_knn")(spark, "/root/testdata/sf0.001")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    val fileScans = plan.split("\n").count(_.contains("FileScan parquet"))
-    assert(fileScans == 0,
-      s"forest read path should not rescan parquet ($fileScans FileScans — codes rebuilt per reference?):\n${plan.take(3000)}")
-    assert(plan.contains("ExistingRDD"),
-      s"expected scans of the materialized (checkpointed) code views:\n${plan.take(3000)}")
+    val rdds = lineage(df)
+    assert(!rdds.exists(_.isInstanceOf[FileScanRDD]), rdds.mkString("\n"))
+    assert(rdds.count(_.isCheckpointed) === 2, s"expected the level and code views' blocks:\n${rdds.mkString("\n")}")
   }
 
   /** The executed plan of a query's second execution in the session:

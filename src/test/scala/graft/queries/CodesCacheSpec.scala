@@ -141,11 +141,13 @@ class CodesCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a warm headline pass infers no schema and runs only its probe jobs") {
     val s = spark.newSession()
-    Headline.foreach(q => SparkEntry.queries(q)(s, Sf0001).collect())
-    // per query: its jobs' call sites, the classes it compiles from an
-    // empty codegen cache, and the broadcast exchanges it ran
+    def pass(): Unit = Headline.foreach(q => SparkEntry.queries(q)(s, Sf0001).collect())
+    pass()
+    // per query: its jobs' call sites, its codegen-cache keys (the classes
+    // it compiles from an empty, non-evicting cache) and the broadcast
+    // exchanges it ran
     val warm = Headline.map { q =>
-      val ((df, compiled), sites) = JobCounter.callSites(s.sparkContext)(CodegenKeys.count {
+      val ((df, compiled), sites) = JobCounter.callSites(s.sparkContext)(CodegenKeys.keys {
         val df = SparkEntry.queries(q)(s, Sf0001)
         df.collect()
         df
@@ -160,22 +162,35 @@ class CodesCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // another. 78 in all when every execution re-read its inputs and
     // re-derived the windows, seeds, forest levels and sizes, bucket codes
     // and norms; 65 while candidate rows were joined back to per-id
-    // tables for their codes, shingles and levels (lsh 5, near-dup 9,
-    // simhash 6, hamming 10, forest 13).
+    // tables for their codes, shingles and levels; 49 while the kNN
+    // queries ended in SQL re-rank tails (cosine 5, hamming 7, forest 7).
+    // A kNN query is now one job: its shuffles are stages of it.
     val jobs = Map("q_exact_dedup" -> 4, "q_minhash_bands" -> 3, "q_lsh_pairs" -> 4,
-      "q_near_dup_pairs" -> 5, "q_simhash_pairs" -> 4, "q_substring_pairs" -> 6, "q_knn_cosine" -> 5,
-      "q_ann_buckets" -> 4, "q_ann_hamming_knn" -> 7, "q_ann_forest_knn" -> 7)
+      "q_near_dup_pairs" -> 5, "q_simhash_pairs" -> 4, "q_substring_pairs" -> 6, "q_knn_cosine" -> 1,
+      "q_ann_buckets" -> 4, "q_ann_hamming_knn" -> 1, "q_ann_forest_knn" -> 1)
     assert(warm.map { case (q, sites, _, _) => q -> sites.size }.toMap === jobs, seen)
-    assert(warm.map(_._2.size).sum === 49, seen)
-    // 22 broadcast exchanges before, 25 broadcast joins counting the
-    // reused ones: every candidate lookup of a code, a shingle set, a
-    // query level or a bucket size was a broadcast
-    assert(warm.map(_._4).sum === 13, seen)
-    // Classes compiled per query from an empty cache; one query's classes
-    // fit the 100-entry cache, so this is its key count. 248 in all while
-    // candidates were joined back for their attributes (hamming 45,
-    // forest 56, near-dup 30, simhash 19).
-    assert(warm.map(_._3).sum === 196, seen)
+    assert(warm.map(_._2.size).sum === 33, seen)
+    // 22 broadcast exchanges before candidates carried their attributes,
+    // 13 while the kNN tails looked up both sides' vectors by broadcast
+    // (cosine 1, hamming 3, forest 3)
+    val bcasts = Map("q_exact_dedup" -> 0, "q_minhash_bands" -> 0, "q_lsh_pairs" -> 1,
+      "q_near_dup_pairs" -> 2, "q_simhash_pairs" -> 1, "q_substring_pairs" -> 2, "q_knn_cosine" -> 0,
+      "q_ann_buckets" -> 0, "q_ann_hamming_knn" -> 0, "q_ann_forest_knn" -> 0)
+    assert(warm.map { case (q, _, _, b) => q -> b }.toMap === bcasts, seen)
+    // Classes per query: 248 in all while candidates were joined back for
+    // their attributes, 196 with the SQL kNN tails (cosine 25, hamming 35,
+    // forest 40). A kNN query compiles only the scan of its result.
+    val classes = Map("q_exact_dedup" -> 14, "q_minhash_bands" -> 9, "q_lsh_pairs" -> 12,
+      "q_near_dup_pairs" -> 15, "q_simhash_pairs" -> 12, "q_substring_pairs" -> 19, "q_knn_cosine" -> 3,
+      "q_ann_buckets" -> 15, "q_ann_hamming_knn" -> 3, "q_ann_forest_knn" -> 3)
+    assert(warm.map { case (q, _, c, _) => q -> c }.toMap === classes, seen)
+    assert(warm.map(_._3).sum === 105, seen)
+    // The pass's union of keys is what competes for the cache's 100
+    // entries (four LRU segments of 25): 123 with the SQL kNN tails, which
+    // overflowed it on every pass; the three kNN queries share their
+    // result scan's classes.
+    val (_, union) = CodegenKeys.keys(pass())
+    assert(union === 69, seen)
   }
 
   test("GRAFT_INDEX_DIR: the query surface's views spill once and are re-read by a new session") {

@@ -26,16 +26,14 @@ class ScratchSpec extends AnyFunSuite {
       // a pid that cannot be a live process (beyond pid_max)
       Files.writeString(new File(dead, "owner.pid").toPath, "999999999")
       val unstamped = mkScratch(root, "graft-bench-local-unstamped")
-      val stage = mkScratch(root, "graft-stagebench123") // covered prefix
       val foreign = mkScratch(root, "someone-elses-dir") // wrong prefix
       val manual = mkScratch(root, "graft-in800k") // deliberate keeper prefix
 
       val n = Scratch.sweepStale(root)
-      assert(n === 3) // dead + unstamped + stagebench (crash-before-stamp counts stale)
+      assert(n === 2) // dead + unstamped (crash-before-stamp counts stale)
       assert(live.isDirectory)
       assert(!dead.exists())
       assert(!unstamped.exists())
-      assert(!stage.exists())
       assert(foreign.isDirectory)
       assert(manual.isDirectory)
     } finally Scratch.deleteRec(root)

@@ -1,32 +1,46 @@
 package org.apache.spark.graft
 
+import java.lang.reflect.Field
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.util.NonFateSharingCache
 
-/** Counts the classes Spark compiles while a block runs, starting from an
-  * empty codegen cache. The cache (`CodeGenerator`'s private `cache`, sized
-  * by the static `spark.sql.codegen.cache.maxEntries`) is emptied by
-  * reflection, so every whole-stage class the block needs is compiled once
-  * and counted. Under a non-evicting cache the count is the block's cache
-  * keys; under the default 100-entry cache it also counts the classes the
-  * block evicts and compiles again. In `local` mode the driver and the
-  * executor each key a whole-stage class, so a stage counts twice. */
+/** Counts the codegen-cache keys a block needs: the classes Spark compiles
+  * while it runs, from an empty cache that evicts nothing. The cache
+  * (`CodeGenerator`'s private `cache`, sized by the static
+  * `spark.sql.codegen.cache.maxEntries`: four Guava LRU segments of
+  * `maxEntries / 4`) is emptied, and its segments made non-evicting for the
+  * block, by reflection. So no class is compiled twice, and the count does
+  * not depend on how this JVM's class-loader hashes spread the keys over
+  * the segments. In `local` mode the driver and the executor each key a
+  * whole-stage class, so a stage counts twice. */
 object CodegenKeys {
 
-  /** Empties the codegen cache. */
-  def clear(): Unit = {
-    val f = CodeGenerator.getClass.getDeclaredField("cache")
+  private def field(c: Class[_], name: String): Field = {
+    val f = c.getDeclaredField(name)
     f.setAccessible(true)
-    f.get(CodeGenerator).asInstanceOf[NonFateSharingCache[_, _]].invalidateAll()
+    f
   }
 
-  /** The block's result and the classes compiled while it ran, from an
-    * empty cache. */
-  def count[T](body: => T): (T, Long) = {
-    clear()
-    val before = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
-    val out = body
-    (out, CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount - before)
+  /** The block's result and its codegen-cache keys. The segment bounds are
+    * restored, and the cache emptied, afterwards. */
+  def keys[T](body: => T): (T, Long) = {
+    val cache = field(CodeGenerator.getClass, "cache").get(CodeGenerator).asInstanceOf[NonFateSharingCache[_, _]]
+    val guava = field(classOf[NonFateSharingCache[_, _]], "cache").get(cache)
+    val local = field(guava.getClass.getSuperclass, "localCache").get(guava)
+    val segments = field(local.getClass, "segments").get(local).asInstanceOf[Array[AnyRef]]
+    val bound = field(segments.head.getClass, "maxSegmentWeight")
+    val bounds = segments.map(bound.getLong)
+    cache.invalidateAll()
+    segments.foreach(bound.setLong(_, Long.MaxValue))
+    try {
+      val before = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount - before)
+    } finally {
+      segments.zip(bounds).foreach { case (s, b) => bound.setLong(s, b) }
+      cache.invalidateAll()
+    }
   }
 }
